@@ -68,7 +68,6 @@ def _cmd_pipeline(args) -> int:
         processed_dir=args.processed_dir or f"{args.output_dir}/_processed",
         output_dir=args.output_dir,
         state_dir=args.state_dir or f"{args.output_dir}/_state",
-        mart_format=args.format,
     )
     if args.jdbc_url:
         # the reference's deployment shape: dims from the database,
@@ -341,7 +340,6 @@ def main(argv: list[str] | None = None) -> int:
     sp.add_argument("--processed-dir")
     sp.add_argument("--state-dir")
     sp.add_argument("--dims-dir")
-    sp.add_argument("--format", default="parquet", choices=["parquet", "orc"])
     sp.add_argument(
         "--jdbc-url",
         help="database topology: read dims from and publish marts to this JDBC url",

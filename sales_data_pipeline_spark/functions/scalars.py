@@ -66,10 +66,3 @@ def fold_extras_json(extra_cols: list[str], alias: str = "additional_column") ->
     if not extra_cols:
         return F.lit(None).cast("string").alias(alias)
     return F.to_json(F.struct(*[F.col(c) for c in sorted(extra_cols)])).alias(alias)
-
-
-def fold_extras_concat(extra_cols: list[str], alias: str = "additional_column") -> Column:
-    """Bit-compat mode: the reference's literal concat_ws(',', *extras)."""
-    if not extra_cols:
-        return F.lit(None).cast("string").alias(alias)
-    return F.concat_ws(",", *[F.col(c) for c in extra_cols]).alias(alias)

@@ -6,9 +6,10 @@ with two deliberate changes (SURVEY §2j.3):
 - dimensions are renamed/prefixed BEFORE the join, so no ambiguous
   columns ever exist — the reference drops qualified string names
   ("s3_data.customer_id") which can silently no-op;
-- small dims carry explicit broadcast hints (the reference relies on
-  the auto threshold; the hint documents intent and survives stale
-  statistics — AQE can still demote if a dim outgrows the budget).
+- every dim join is an inner join with an explicit broadcast hint (the
+  reference relies on the auto threshold; the hint documents intent and
+  survives stale statistics — AQE can still demote if a dim outgrows
+  the budget).
 """
 
 from __future__ import annotations
@@ -29,22 +30,18 @@ class DimSpec:
     dim_key: str
     columns: tuple[str, ...]
     prefix: str = ""
-    broadcast: bool = True
-    how: str = "inner"
 
 
 def enrich(fact: DataFrame, specs: list[DimSpec]) -> DataFrame:
-    """Left-deep join chain fact ⋈ dim₁ ⋈ dim₂ ⋈ … (fact stays on the
-    left / streamed side; dims hash-broadcast when hinted)."""
+    """Left-deep inner join chain fact ⋈ dim₁ ⋈ dim₂ ⋈ … (fact stays on
+    the left / streamed side; every dim is hash-broadcast)."""
     out = fact
     for spec in specs:
         proj: list[Column] = [F.col(spec.dim_key).alias(f"__k_{spec.dim_key}")]
         proj += [F.col(c).alias(f"{spec.prefix}{c}") for c in spec.columns]
-        dim = spec.dim.select(*proj)
-        if spec.broadcast:
-            dim = F.broadcast(dim)
+        dim = F.broadcast(spec.dim.select(*proj))
         out = out.join(
-            dim, out[spec.fact_key] == dim[f"__k_{spec.dim_key}"], spec.how
+            dim, out[spec.fact_key] == dim[f"__k_{spec.dim_key}"], "inner"
         ).drop(f"__k_{spec.dim_key}")
     return out
 

@@ -2,10 +2,11 @@
 
 The reference computes both marts as window-sum + distinct
 (reference: customer_mart_sql_tranform_write.py:10-27,
-sales_mart_sql_transformation_file.py:11-39). The engine's default is
-the one-shuffle groupBy rewrite (identical results because every kept
-column is functionally dependent on the grouping keys — asserted by
-tests); ``strict_compat=True`` replays the window+distinct literally.
+sales_mart_sql_transformation_file.py:11-39). The engine uses the
+one-shuffle groupBy rewrite instead: identical results because every
+kept column is functionally dependent on the grouping keys (asserted
+against a window+distinct oracle in tests/test_sales_pipeline.py; the
+catalog keeps that idiom as q08_window_sum_distinct).
 """
 
 from __future__ import annotations
@@ -18,7 +19,7 @@ from sales_data_pipeline_spark.functions.scalars import full_name, money, month_
 _MONEY_OUT = "decimal(10,2)"  # mart DDL type (table_scripts.sql:154,165-166)
 
 
-def customer_monthly_mart(enriched: DataFrame, strict_compat: bool = False) -> DataFrame:
+def customer_monthly_mart(enriched: DataFrame) -> DataFrame:
     """One row per (customer_id, sales_month): full_name, address,
     phone_number, total_sales (reference: customer_mart...py:10-27)."""
     base = enriched.select(
@@ -29,20 +30,13 @@ def customer_monthly_mart(enriched: DataFrame, strict_compat: bool = False) -> D
         month_bucket("sales_date", "sales_date_month"),
         money("total_cost").alias("_cost"),
     )
-    if strict_compat:
-        w = Window.partitionBy("customer_id", "sales_date_month")
-        return (
-            base.withColumn("total_sales", F.sum("_cost").over(w).cast(_MONEY_OUT))
-            .drop("_cost")
-            .distinct()
-        )
     return (
         base.groupBy("customer_id", "full_name", "address", "phone_number", "sales_date_month")
         .agg(F.sum("_cost").cast(_MONEY_OUT).alias("total_sales"))
     )
 
 
-def sales_team_mart(enriched: DataFrame, strict_compat: bool = False) -> DataFrame:
+def sales_team_mart(enriched: DataFrame) -> DataFrame:
     """One row per (store_id, sales_person_id, sales_month) with rank and
     1%-of-total incentive for rank 1 within (store_id, sales_month) —
     ties all paid (rank(), not row_number: SURVEY §2j.4). Reference:
@@ -54,17 +48,9 @@ def sales_team_mart(enriched: DataFrame, strict_compat: bool = False) -> DataFra
         month_bucket("sales_date", "sales_month"),
         money("total_cost").alias("_cost"),
     )
-    if strict_compat:
-        w = Window.partitionBy("store_id", "sales_person_id", "sales_month")
-        totals = (
-            base.withColumn("total_sales", F.sum("_cost").over(w).cast(_MONEY_OUT))
-            .drop("_cost")
-            .distinct()
-        )
-    else:
-        totals = base.groupBy(
-            "store_id", "sales_person_id", "full_name", "sales_month"
-        ).agg(F.sum("_cost").cast(_MONEY_OUT).alias("total_sales"))
+    totals = base.groupBy(
+        "store_id", "sales_person_id", "full_name", "sales_month"
+    ).agg(F.sum("_cost").cast(_MONEY_OUT).alias("total_sales"))
     rank_w = Window.partitionBy("store_id", "sales_month").orderBy(
         F.col("total_sales").desc()
     )

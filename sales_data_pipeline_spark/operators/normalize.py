@@ -5,8 +5,7 @@ Semantics preserved from the reference (SURVEY §2j.1-2):
   is quarantined whole, never partially read (main.py:152-158);
 - superset schemas accepted, extra columns folded into one
   ``additional_column`` (main.py:254-265) — upgraded from a lossy
-  comma-join to a JSON object (queryable with get_json_object), with a
-  ``concat`` compat mode for bit-parity;
+  comma-join to a JSON object (queryable with get_json_object);
 - union across ALL validated inputs (the reference's union sits outside
   its loop and keeps only the last file, main.py:267 — the engine
   implements the stated intent, by name not position).
@@ -21,10 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from sales_data_pipeline_spark.functions.scalars import (
-    fold_extras_concat,
-    fold_extras_json,
-)
+from sales_data_pipeline_spark.functions.scalars import fold_extras_json
 from sales_data_pipeline_spark.schemas import CORRUPT_RECORD_COLUMN
 from sales_data_pipeline_spark.sources.csv import (
     group_files_by_header,
@@ -67,11 +63,7 @@ def validate_headers(
     return report
 
 
-def normalize(
-    df: DataFrame,
-    mandatory: tuple[str, ...],
-    extras_mode: str = "json",
-) -> DataFrame:
+def normalize(df: DataFrame, mandatory: tuple[str, ...]) -> DataFrame:
     """Project to contract columns + fold extras into additional_column.
 
     Output schema is always: mandatory columns (contract types) +
@@ -79,15 +71,13 @@ def normalize(
     extras = [
         c for c in df.columns if c not in mandatory and c != CORRUPT_RECORD_COLUMN
     ]
-    fold = fold_extras_json if extras_mode == "json" else fold_extras_concat
-    return df.select(*[F.col(c) for c in mandatory], fold(extras, ADDITIONAL_COLUMN))
+    return df.select(
+        *[F.col(c) for c in mandatory], fold_extras_json(extras, ADDITIONAL_COLUMN)
+    )
 
 
 def read_validated_union(
-    spark: SparkSession,
-    report: ValidationReport,
-    contract: StructType,
-    extras_mode: str = "json",
+    spark: SparkSession, report: ValidationReport, contract: StructType
 ) -> DataFrame:
     """One normalized DataFrame over every contract-passing file.
 
@@ -96,19 +86,9 @@ def read_validated_union(
     (reference seeds an empty frame, main.py:246)."""
     mandatory = tuple(f.name for f in contract.fields)
     parts = [
-        normalize(
-            read_csv_with_contract(spark, files, header, contract), mandatory, extras_mode
-        )
+        normalize(read_csv_with_contract(spark, files, header, contract), mandatory)
         for header, files in sorted(report.valid.items())
     ]
     if not parts:
         raise ValueError("no valid input files to read")
     return reduce(lambda a, b: a.unionByName(b), parts)
-
-
-def corrupt_rows(df: DataFrame) -> DataFrame:
-    """Row-level rejects captured by the PERMISSIVE read (an addition over
-    the reference's header-only validation, SURVEY §2j.1)."""
-    if CORRUPT_RECORD_COLUMN not in df.columns:
-        return df.limit(0)
-    return df.filter(F.col(CORRUPT_RECORD_COLUMN).isNotNull())

@@ -11,6 +11,11 @@ Deliberate physical upgrades over the reference (SURVEY §4 anti-patterns):
   contract schema (no inferSchema double pass, main.py:145-147+249-252);
 - no local-disk staging hop: inputs are read where they land
   (local/s3a/hdfs alike via the Hadoop FS API).
+
+There is one code path: extra CSV columns fold into a JSON
+``additional_column``, both marts are built with groupBy, their plans
+are linted before any write (an error-severity finding refuses the
+publish), and both marts land as parquet.
 """
 
 from __future__ import annotations
@@ -46,19 +51,6 @@ class PipelineConfig:
     processed_dir: str
     output_dir: str
     state_dir: str
-    extras_mode: str = "json"  # "concat" = reference bit-compat
-    strict_compat: bool = False  # window+distinct mart replication
-    # mart sink format: any Spark columnar batch format ("parquet",
-    # "orc"). Both support partitionBy + dynamic partition overwrite +
-    # predicate pushdown; parquet is the default lake choice, orc the
-    # Hive-ecosystem one.
-    mart_format: str = "parquet"
-    # physical-plan lint of the mart plans BEFORE anything is written
-    # (plans/lint.py — the scale checklist as a runtime guard, not just
-    # a CI invariant): "off" = skip, "warn" = log findings and proceed,
-    # "strict" = raise on any error-severity finding (cartesian product,
-    # row-at-a-time Python UDF) so a scale-killer plan never publishes.
-    lint: str = "warn"
 
 
 @dataclass
@@ -75,14 +67,11 @@ class PipelineResult:
     ingest_metrics: dict = field(default_factory=dict)
 
 
-def _lint_mart_plans(mode: str, **marts: DataFrame) -> None:
+def _lint_mart_plans(**marts: DataFrame) -> None:
     """Runtime face of the plan linter (plans/lint.py): warn-log every
-    finding; in strict mode raise on error-severity ones (cartesian
-    product, row-at-a-time Python UDF) BEFORE any sink action runs."""
-    if mode == "off":
-        return
-    if mode not in ("warn", "strict"):
-        raise ValueError(f"PipelineConfig.lint must be off|warn|strict, got {mode!r}")
+    finding and raise on error-severity ones (cartesian product,
+    row-at-a-time Python UDF) BEFORE any sink action runs, so a
+    scale-killer plan never publishes."""
     from sales_data_pipeline_spark.plans.lint import lint_plan
 
     errors: list[str] = []
@@ -91,9 +80,9 @@ def _lint_mart_plans(mode: str, **marts: DataFrame) -> None:
             log.warning("plan lint [%s] %s/%s: %s", f.severity, name, f.code, f.message)
             if f.severity == "error":
                 errors.append(f"{name}: {f.code} — {f.message}")
-    if errors and mode == "strict":
+    if errors:
         raise RuntimeError(
-            "strict plan lint failed; refusing to publish marts:\n  "
+            "plan lint failed; refusing to publish marts:\n  "
             + "\n  ".join(errors)
         )
 
@@ -151,7 +140,7 @@ def run_pipeline(
 
     obs = Observation("fact_ingest")
     fact = (
-        read_validated_union(spark, report, SALES_CONTRACT, cfg.extras_mode)
+        read_validated_union(spark, report, SALES_CONTRACT)
         .observe(
             obs,
             F.count(F.lit(1)).alias("n_rows"),
@@ -174,21 +163,17 @@ def run_pipeline(
     #    (main.py:363-368); dynamic partition overwrite keeps re-runs
     #    idempotent per partition instead of append-duplicating
     #    (SURVEY §2j.7).
-    cust_mart = customer_monthly_mart(enriched, cfg.strict_compat)
-    team_mart = sales_team_mart(enriched, cfg.strict_compat)
-    # lint BOTH plans before EITHER write: a strict failure must leave
+    cust_mart = customer_monthly_mart(enriched)
+    team_mart = sales_team_mart(enriched)
+    # lint BOTH plans before EITHER write: a lint failure must leave
     # zero marts published, not one (half-published is the worst state)
-    _lint_mart_plans(
-        cfg.lint, customers_data_mart=cust_mart, sales_team_data_mart=team_mart
-    )
+    _lint_mart_plans(customers_data_mart=cust_mart, sales_team_data_mart=team_mart)
     result.customer_mart_path = f"{cfg.output_dir}/customers_data_mart"
-    cust_mart.write.mode("overwrite").format(
-        cfg.mart_format
-    ).save(result.customer_mart_path)
+    cust_mart.write.mode("overwrite").format("parquet").save(result.customer_mart_path)
     result.sales_team_mart_path = f"{cfg.output_dir}/sales_team_data_mart"
     team_mart.write.mode("overwrite").partitionBy(
         "sales_month", "store_id"
-    ).format(cfg.mart_format).save(result.sales_team_mart_path)
+    ).format("parquet").save(result.sales_team_mart_path)
     fact.unpersist()
     log.info(
         "marts committed: %s, %s",
@@ -254,7 +239,7 @@ def run_pipeline_jdbc(
             # write_jdbc_atomic docstring has the crash analysis)
             write_jdbc_atomic(
                 spark,
-                spark.read.format(cfg.mart_format).load(path),
+                spark.read.parquet(path),
                 topo.url,
                 table,
                 properties=topo.properties,
@@ -277,8 +262,6 @@ def replay_quarantine(spark: SparkSession, cfg: PipelineConfig) -> dict[str, lis
     cheap (one-line read per file); no state is written here — the
     requeued file earns its audit 'A' row from the pipeline run that
     ingests it, keeping a single writer for the state log."""
-    from sales_data_pipeline_spark.operators.normalize import validate_headers
-
     out: dict[str, list[str]] = {"requeued": [], "still_bad": []}
     quarantined = fs.list_files(spark, cfg.quarantine_dir, suffix=".csv")
     if not quarantined:

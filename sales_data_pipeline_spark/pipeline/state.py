@@ -53,8 +53,14 @@ class AuditState:
             return
         self._seq += 1
         rows = [(f.rsplit("/", 1)[-1], f, status) for f in files]
+        # one partition, so one file per append: every probe re-reads the
+        # whole log. (coalesce(1) would also give one file, but runs the
+        # Python-side partitions of a local list one after another.)
         df = (
-            self.spark.createDataFrame(rows, "file_name string, file_location string, status string")
+            self.spark.createDataFrame(
+                self.spark.sparkContext.parallelize(rows, 1),
+                "file_name string, file_location string, status string",
+            )
             .withColumn("updated_date", F.current_timestamp())
             .withColumn("seq", F.lit(self._seq).cast("long"))
         )

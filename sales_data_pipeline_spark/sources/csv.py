@@ -35,17 +35,21 @@ def csv_header(spark: SparkSession, path: str) -> list[str]:
     fs = p.getFileSystem(conf)
     stream = fs.open(p)
     try:
-        # read a bounded prefix; headers are tiny
-        buf = bytearray()
-        while len(buf) < 64 * 1024:
-            b = stream.read()
-            if b < 0 or b == 10:  # EOF or \n
+        # read a bounded prefix (64 KiB) in 256-byte Py4J round trips:
+        # one covers a typical header, where reading the whole bound at
+        # once would ship a small file's every byte back to Python
+        prefix = b""
+        while b"\n" not in prefix and len(prefix) < 64 * 1024:
+            chunk = bytes(stream.readNBytes(256))
+            prefix += chunk
+            if len(chunk) < 256:  # EOF
                 break
-            buf.append(b if b >= 0 else 0)
-        line = buf.decode("utf-8", errors="replace").rstrip("\r")
     finally:
         stream.close()
-    return next(_csv.reader(io.StringIO(line)))
+    line = prefix.split(b"\n", 1)[0].decode("utf-8", errors="replace").rstrip("\r")
+    # an empty file has no header: [] routes it to quarantine with every
+    # mandatory column missing instead of aborting the run
+    return next(_csv.reader(io.StringIO(line)), [])
 
 
 def group_files_by_header(

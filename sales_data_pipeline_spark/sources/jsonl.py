@@ -49,7 +49,7 @@ def read_jsonl(
 
 
 def split_corrupt(df: DataFrame, persist: bool = True) -> tuple[DataFrame, DataFrame]:
-    """(clean_rows_without_corrupt_col, corrupt_rows_raw_line_only).
+    """(clean rows without the corrupt column, corrupt raw lines only).
 
     Spark's PERMISSIVE JSON reader leaves every contract column null on
     a corrupt line, so the corrupt column is the discriminator.

@@ -103,11 +103,6 @@ def test_extra_column_folding(spark, cfg):
     }
     assert modes == {"cash", "UPI"}
 
-    # concat compat mode reproduces the reference's comma-join
-    df2 = read_validated_union(spark, report, SALES_CONTRACT, extras_mode="concat")
-    vals = {r[0] for r in df2.select("additional_column").distinct().collect()}
-    assert vals == {"cash", "UPI"}
-
 
 def test_rerun_is_idempotent(spark, cfg):
     write_sales_csv(_in(cfg) / "day1.csv", n=200, seed=5)
@@ -131,6 +126,10 @@ def test_failed_run_probe(spark, cfg):
 
     state.mark_inactive([f"{cfg.input_dir}/ghost.csv"])
     assert state.stale_active_files() == []
+    # one parquet file per append, however many cores built the rows
+    from pathlib import Path
+
+    assert len(list(Path(cfg.state_dir).glob("*.parquet"))) == 2
 
 
 def test_state_missing_dir_is_empty_but_corrupt_dir_raises(spark, tmp_path):
@@ -166,6 +165,70 @@ def test_datewise_multifile_union(spark, cfg):
     assert months == {"2023-03", "2023-04"}
 
 
+def _window_distinct_marts(enriched):
+    """The reference's literal window-sum + distinct formulation of both
+    marts (customer_mart_sql_tranform_write.py:10-27,
+    sales_mart_sql_transformation_file.py:11-39): the local oracle for
+    the engine's groupBy rewrite."""
+    import decimal
+
+    from pyspark.sql import Window
+
+    from sales_data_pipeline_spark.functions.scalars import (
+        full_name,
+        money,
+        month_bucket,
+    )
+
+    out = "decimal(10,2)"
+    cust = (
+        enriched.select(
+            "customer_id",
+            full_name("first_name", "last_name"),
+            "address",
+            "phone_number",
+            month_bucket("sales_date", "sales_date_month"),
+            money("total_cost").alias("_cost"),
+        )
+        .withColumn(
+            "total_sales",
+            F.sum("_cost")
+            .over(Window.partitionBy("customer_id", "sales_date_month"))
+            .cast(out),
+        )
+        .drop("_cost")
+        .distinct()
+    )
+    totals = (
+        enriched.select(
+            "store_id",
+            "sales_person_id",
+            full_name("sales_person_first_name", "sales_person_last_name"),
+            month_bucket("sales_date", "sales_month"),
+            money("total_cost").alias("_cost"),
+        )
+        .withColumn(
+            "total_sales",
+            F.sum("_cost")
+            .over(Window.partitionBy("store_id", "sales_person_id", "sales_month"))
+            .cast(out),
+        )
+        .drop("_cost")
+        .distinct()
+    )
+    rank_w = Window.partitionBy("store_id", "sales_month").orderBy(
+        F.col("total_sales").desc()
+    )
+    team = totals.withColumn(
+        "incentive",
+        F.when(
+            F.rank().over(rank_w) == 1,
+            (F.col("total_sales") * F.lit(decimal.Decimal("0.01"))).cast(out),
+        ).otherwise(F.lit(0).cast(out)),
+    )
+    return cust, team
+
+
 def test_strict_compat_marts_match_default(spark, cfg):
     """window+distinct (reference literal) == groupBy rewrite on data
     where non-key columns are functionally dependent on keys (SURVEY §7)."""
@@ -187,13 +250,15 @@ def test_strict_compat_marts_match_default(spark, cfg):
     enriched = sales_enrichment(
         read_validated_union(spark, report, SALES_CONTRACT), customer, store, team
     )
-    for fn in (customer_monthly_mart, sales_team_mart):
-        a = fn(enriched, strict_compat=False).toPandas()
-        b = fn(enriched, strict_compat=True).toPandas()
+    oracles = _window_distinct_marts(enriched)
+    for fn, oracle in zip((customer_monthly_mart, sales_team_mart), oracles):
+        a = fn(enriched).toPandas()
+        b = oracle.toPandas()
+        assert sorted(a.columns) == sorted(b.columns), fn.__name__
         cols = sorted(a.columns)
         a = a[cols].sort_values(cols).reset_index(drop=True)
         b = b[cols].sort_values(cols).reset_index(drop=True)
-        assert a.equals(b), fn.__name__
+        assert len(a) > 0 and a.equals(b), fn.__name__
 
 
 def test_delete_path_idempotent(spark, tmp_path):
@@ -206,48 +271,6 @@ def test_delete_path_idempotent(spark, tmp_path):
     assert list_files(spark, str(tmp_path / "landing")) == []
     assert delete_path(spark, str(f)) is False  # second delete: no error
     assert delete_path(spark, str(tmp_path / "landing"), recursive=True) is True
-
-
-def test_orc_mart_format_parity_and_pruning(spark, tmp_path):
-    """mart_format='orc' must produce marts identical to the parquet
-    run, and ORC partitioned reads must prune like parquet (the format
-    knob changes encoding, never semantics or the pruning story)."""
-    import re
-
-    from tests.fixtures import dim_frames as _dims
-
-    customer, store, team = _dims(spark)
-    results = {}
-    for fmt in ("parquet", "orc"):
-        base = tmp_path / fmt
-        (base / "in").mkdir(parents=True)
-        c = PipelineConfig(
-            input_dir=str(base / "in"),
-            quarantine_dir=str(base / "err"),
-            processed_dir=str(base / "done"),
-            output_dir=str(base / "out"),
-            state_dir=str(base / "state"),
-            mart_format=fmt,
-        )
-        write_sales_csv(_in(c) / "sales1.csv", n=300, seed=11)
-        res = run_pipeline(spark, c, customer, store, team)
-        mart = spark.read.format(fmt).option("basePath", res.sales_team_mart_path).load(
-            res.sales_team_mart_path
-        )
-        results[fmt] = sorted(map(tuple, mart.collect()))
-    assert results["parquet"] == results["orc"]
-
-    # partition pruning reaches the ORC scan
-    orc_path = str(tmp_path / "orc" / "out" / "sales_team_data_mart")
-    df = (
-        spark.read.format("orc").option("basePath", orc_path).load(orc_path)
-        .filter(F.col("store_id") == 121)
-    )
-    plan = spark.sparkContext._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
-    m = re.search(r"PartitionFilters: \[(.*?)\]", plan)
-    assert m and "store_id" in m.group(1), plan
 
 
 def test_pipeline_observe_metrics_match_fact(spark, tmp_path):
@@ -519,12 +542,12 @@ def test_replay_quarantine_requeues_fixed_files(spark, cfg):
 def test_strict_lint_blocks_cartesian_mart_before_any_publish(
     spark, cfg, monkeypatch
 ):
-    """lint='strict' turns the CI plan checklist into a runtime guard:
-    a mart whose plan contains a CartesianProduct (error severity) must
-    raise BEFORE either mart is written — zero marts published, inputs
-    NOT archived, state still 'A' (the failed-run probe will resume
-    them). The stock marts pass strict lint (second run)."""
-    import dataclasses
+    """The publish-path lint turns the CI plan checklist into a runtime
+    guard: a mart whose plan contains a CartesianProduct (error
+    severity) must raise BEFORE either mart is written — zero marts
+    published, inputs NOT archived, state still 'A' (the failed-run
+    probe will resume them). The stock marts pass the lint (second
+    run)."""
     from pathlib import Path
 
     from sales_data_pipeline_spark.pipeline import sales_pipeline as sp
@@ -534,38 +557,44 @@ def test_strict_lint_blocks_cartesian_mart_before_any_publish(
 
     real_mart = sp.customer_monthly_mart
 
-    def cartesian_mart(enriched, strict_compat=False):
-        good = real_mart(enriched, strict_compat)
+    def cartesian_mart(enriched):
+        good = real_mart(enriched)
         # a deliberate scale-killer: all-pairs self cross join
         return good.crossJoin(good.select(F.col("sales_date_month").alias("m2")))
 
     monkeypatch.setattr(sp, "customer_monthly_mart", cartesian_mart)
-    strict_cfg = dataclasses.replace(cfg, lint="strict")
     with pytest.raises(RuntimeError, match="cartesian"):
-        run_pipeline(spark, strict_cfg, customer, store, team)
-    out = Path(strict_cfg.output_dir)
+        run_pipeline(spark, cfg, customer, store, team)
+    out = Path(cfg.output_dir)
     assert not (out / "customers_data_mart").exists()
     assert not (out / "sales_team_data_mart").exists()
     # pre-commit failure: file not archived, audit row still active
     assert (_in(cfg) / "sales1.csv").exists()
     assert AuditState(spark, cfg.state_dir).stale_active_files()
 
-    # the real marts pass strict lint end-to-end (and the resumed file
-    # is picked up by the probe)
+    # the real marts pass the lint end-to-end (and the resumed file is
+    # picked up by the probe)
     monkeypatch.setattr(sp, "customer_monthly_mart", real_mart)
-    res = run_pipeline(spark, strict_cfg, customer, store, team)
+    res = run_pipeline(spark, cfg, customer, store, team)
     assert res.n_fact_rows == 60
     assert (out / "customers_data_mart").exists()
 
 
-def test_lint_mode_validation_and_off(spark, cfg, monkeypatch):
-    """Unknown lint modes are rejected loudly; lint='off' skips the
-    guard entirely (a cartesian mart would publish — the operator asked
-    for it)."""
-    import dataclasses
 
-    from sales_data_pipeline_spark.pipeline.sales_pipeline import _lint_mart_plans
+def test_empty_csv_is_quarantined_not_fatal(spark, cfg):
+    """A 0-byte CSV has no header: it is quarantined with every
+    mandatory column missing while the good file still publishes."""
+    from pathlib import Path
 
-    with pytest.raises(ValueError, match="off\\|warn\\|strict"):
-        _lint_mart_plans("loud")
-    _lint_mart_plans("off")  # no-op, no spark needed
+    from sales_data_pipeline_spark.schemas import MANDATORY_COLUMNS
+
+    write_sales_csv(_in(cfg) / "good.csv", n=40, seed=71)
+    (_in(cfg) / "empty.csv").write_bytes(b"")
+    customer, store, team = dim_frames(spark)
+    res = run_pipeline(spark, cfg, customer, store, team)
+    assert [p.rsplit("/", 1)[-1] for p in res.accepted_files] == ["good.csv"]
+    assert res.n_fact_rows == 40
+    (missing,) = res.quarantined_files.values()
+    assert missing == list(MANDATORY_COLUMNS)
+    assert sorted(p.name for p in Path(cfg.quarantine_dir).iterdir()) == ["empty.csv"]
+    assert Path(res.customer_mart_path).exists()
