@@ -291,29 +291,6 @@ def zorder_key(col_a: str, col_b: str, bits: int = 16) -> Column:
     return z
 
 
-def write_zordered(
-    df: DataFrame,
-    path: str,
-    col_a: str,
-    col_b: str,
-    bits: int = 16,
-    n_files: int = 32,
-) -> None:
-    """Write parquet laid out along the Z-curve of (col_a, col_b):
-    range-partition by the interleaved key (one skew-free shuffle —
-    range boundaries come from sampling), sort within partitions, drop
-    the key. Readers filtering on either column then skip most
-    row groups via footer min/max — data-skipping without an index."""
-    keyed = df.withColumn("__z", zorder_key(col_a, col_b, bits))
-    (
-        keyed.repartitionByRange(n_files, "__z")
-        .sortWithinPartitions("__z")
-        .drop("__z")
-        .write.mode("overwrite")
-        .parquet(path)
-    )
-
-
 def distributed_prefix_sum(
     df: DataFrame,
     order_col: str,

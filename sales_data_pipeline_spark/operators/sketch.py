@@ -213,8 +213,7 @@ def hll_build(
     approx_count_distinct is the production default (q36); this
     exists because a table-of-registers is MERGEABLE ACROSS RUNS —
     union+max yesterday's registers with today's for a rolling
-    distinct without re-scanning history (the same reason the
-    count-min sketch is a table, streaming/heavy_hitters.py)."""
+    distinct without re-scanning history."""
     if not 4 <= p <= 18:
         raise ValueError(f"hll_build: p={p} outside [4, 18]")
     h = F.xxhash64(F.col(key_col).cast("string"), F.lit(25))

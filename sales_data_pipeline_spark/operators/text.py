@@ -306,24 +306,6 @@ def ngrams_from_tokens(tokens_col: Column | str, n: int = 5) -> Column:
     )
 
 
-def ngrams(col: Column | str, n: int = 5) -> Column:
-    """Convenience wrapper: ngrams_from_tokens over tokens(col)."""
-    return ngrams_from_tokens(tokens(col), n)
-
-
-def add_text_features(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Convenience: append the full feature set in one projection."""
-    return df.select(
-        "*",
-        token_count(text_col).alias("n_tokens"),
-        unique_token_count(text_col).alias("n_unique_tokens"),
-        stopword_count(text_col).alias("n_stopwords"),
-        lang_id(text_col).alias("lang_pred"),
-        quality_score(text_col).alias("quality"),
-        fingerprint(text_col).alias("fingerprint"),
-    )
-
-
 def phrase_hits_scan(
     docs: DataFrame,
     phrase: str,

@@ -21,8 +21,8 @@ publishes it as N deterministic shards plus a verifiable manifest:
 - **Atomic publish**: everything is written to ``<dir>.staging`` and
   moved into place with ONE filesystem rename after the manifest is
   sealed — readers never observe a half-written export (the
-  staging-swap pattern shared with streaming/mart.py and
-  sources/jdbc.py write_jdbc_atomic). A crashed export leaves only
+  staging-swap pattern shared with sources/jdbc.py
+  write_jdbc_atomic). A crashed export leaves only
   debris in ``.staging``, which the next run clears.
 
 At 100 TB: assignment and fingerprinting are map-side expressions; the
@@ -40,34 +40,14 @@ import json
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from sales_data_pipeline_spark.pipeline.fs import delete_path, path_exists
+from sales_data_pipeline_spark.pipeline.fs import (
+    _fs,
+    delete_path,
+    path_exists,
+    rename_path,
+)
 
 MANIFEST = "_MANIFEST.json"
-
-
-def _hadoop_rename(spark: SparkSession, src: str, dst: str) -> bool:
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    src_p = jvm.org.apache.hadoop.fs.Path(src)
-    fs = src_p.getFileSystem(conf)
-    return bool(fs.rename(src_p, jvm.org.apache.hadoop.fs.Path(dst)))
-
-
-def shard_fingerprints(
-    df: DataFrame, id_col: str, n_shards: int, cols: list[str]
-) -> DataFrame:
-    """Per-shard row counts + order-independent content fingerprint:
-    bit_xor of xxhash64 over the exported columns (NULL-safe: xxhash64
-    folds null as a typed token). One aggregation, map-side combined."""
-    shard = F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_shards)).alias("shard")
-    return (
-        df.select(shard, F.xxhash64(*[F.col(c) for c in cols]).alias("__h"))
-        .groupBy("shard")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_rows"),
-            F.expr("bit_xor(__h)").cast("bigint").alias("fingerprint"),
-        )
-    )
 
 
 def write_training_shards(
@@ -145,27 +125,18 @@ def write_training_shards(
         ],
     }
     # seal the manifest inside staging, then one rename publishes all
-    sc = spark.sparkContext
-    jvm = sc._jvm
-    conf = sc._jsc.hadoopConfiguration()
-    man_p = jvm.org.apache.hadoop.fs.Path(staging + "/" + MANIFEST)
-    fs = man_p.getFileSystem(conf)
+    _, fs, man_p = _fs(spark, staging + "/" + MANIFEST)
     out = fs.create(man_p, True)
     out.write(bytearray(json.dumps(manifest, indent=1).encode("utf-8")))
     out.close()
     if path_exists(spark, out_dir):
         delete_path(spark, out_dir, recursive=True)
-    if not _hadoop_rename(spark, staging, out_dir):
-        raise RuntimeError(f"atomic publish rename failed: {staging} -> {out_dir}")
+    rename_path(spark, staging, out_dir)
     return manifest
 
 
 def read_manifest(spark: SparkSession, out_dir: str) -> dict:
-    sc = spark.sparkContext
-    jvm = sc._jvm
-    conf = sc._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(out_dir.rstrip("/") + "/" + MANIFEST)
-    fs = p.getFileSystem(conf)
+    jvm, fs, p = _fs(spark, out_dir.rstrip("/") + "/" + MANIFEST)
     stream = fs.open(p)
     try:
         # read JVM-side: py4j copies a Python bytearray INTO the JVM, so

@@ -40,9 +40,23 @@ def list_files(spark: SparkSession, directory: str, suffix: str = ".csv") -> lis
     return sorted(out)
 
 
+def _rename(fs, src_p, dst_p) -> None:
+    # Hadoop reports a failed rename as False, not as an exception
+    if not fs.rename(src_p, dst_p):
+        raise RuntimeError(f"rename failed: {src_p.toString()} -> {dst_p.toString()}")
+
+
+def rename_path(spark: SparkSession, src: str, dst: str) -> None:
+    """Rename src to dst; raises RuntimeError if the filesystem refuses."""
+    jvm, fs, src_p = _fs(spark, src)
+    _rename(fs, src_p, jvm.org.apache.hadoop.fs.Path(dst))
+
+
 def move_file(spark: SparkSession, src: str, dst_dir: str) -> str:
     """Move src into dst_dir (quarantine/archive routing — the
-    reference's move_s3_to_s3, move_files.py:26-62)."""
+    reference's move_s3_to_s3, move_files.py:26-62). Raises
+    RuntimeError if the rename fails, so the caller never records a
+    move that did not happen."""
     jvm, fs, src_p = _fs(spark, src)
     dst_dir_p = jvm.org.apache.hadoop.fs.Path(dst_dir)
     if not fs.exists(dst_dir_p):
@@ -50,7 +64,7 @@ def move_file(spark: SparkSession, src: str, dst_dir: str) -> str:
     dst_p = jvm.org.apache.hadoop.fs.Path(dst_dir + "/" + src_p.getName())
     if fs.exists(dst_p):
         fs.delete(dst_p, False)
-    fs.rename(src_p, dst_p)
+    _rename(fs, src_p, dst_p)
     return dst_p.toString()
 
 

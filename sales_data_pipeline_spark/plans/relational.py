@@ -2858,9 +2858,8 @@ def q113_hopping_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     in BATCH: every event lands in exactly two overlapping windows —
     Spark's F.window(slide=...) produces the per-window replication as
     an Expand, the oracle replicates it with an explicit 2-bucket
-    unnest. The batch counterpart of streaming/events.py's tumbling
-    rollup generalized to overlapping frames (trend smoothing, rate
-    alarms). Map-side expansion ×(length/slide), ONE keyed shuffle —
+    unnest. Overlapping frames serve trend smoothing and rate
+    alarms. Map-side expansion ×(length/slide), ONE keyed shuffle —
     the expansion factor, not the window length, is what costs at
     100 TB, so keep length/slide small."""
     ev = table(spark, sf_dir, "events")
@@ -3126,10 +3125,8 @@ def q118_multitouch_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Linear multi-touch attribution: each purchase's value splits
     evenly across the user's views in the preceding hour, then credit
     re-aggregates per view — the band join composed with a
-    per-purchase window normalizer BEFORE the final keyed agg. The
-    batch twin of the streaming attribution join (streaming/events.py
-    purchase_attribution_stream), extended with the credit split every
-    marketing mart actually wants. Purchases with zero in-window views
+    per-purchase window normalizer BEFORE the final keyed agg.
+    Purchases with zero in-window views
     drop out (inner join) — their value is unattributable by
     definition.
 
@@ -9303,9 +9300,7 @@ def q243_burst_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     epoch_us — double seconds would drift cross-engine) with
     (ts, event_id) as the total tie-break; the first-burst timestamp
     leaves as a formatted STRING (the q84/q149 date-column parity
-    rule). Streaming face: streaming/events.burst_monitor_stateful
-    evaluates the identical rule incrementally with bounded
-    k−1-timestamp state per user."""
+    rule)."""
     ev = table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     span = F.unix_micros(F.col("ts")) - F.unix_micros(F.lag("ts", 2).over(w))
@@ -10191,7 +10186,7 @@ def q273_rollup_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
     uses (store hours once, derive days/weeks from 24× fewer rows).
     Non-decomposable measures (count-distinct) are deliberately
     excluded — their cascade is the HLL register fold
-    (streaming/cardinality.py), not row arithmetic. Decimal sums
+    (operators/sketch.py hll_build), not row arithmetic. Decimal sums
     end-to-end; doubles only at the output boundary."""
     ev = table(spark, sf_dir, "events")
     hourly = ev.groupBy(

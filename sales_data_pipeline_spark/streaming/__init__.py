@@ -5,23 +5,6 @@ The reference has no streaming operators (SURVEY §2i) — its
 machine (reference: main.py:51-75, 196-225, 429-448) and an S3 folder
 lifecycle. This package is the idiomatic-Spark replacement (SURVEY §7
 M7): a checkpointed file-source stream gives exactly-once file pickup
-(subsuming the staging table), watermarked windowed aggregation gives
-late-data semantics, and applyInPandasWithState hosts custom stateful
-operators.
+(subsuming the staging table), and applyInPandasWithState hosts the
+per-key debounce.
 """
-
-from sales_data_pipeline_spark.streaming.events import (  # noqa: F401
-    hourly_event_rollup,
-    read_event_stream,
-    sessionize_stateful,
-)
-from sales_data_pipeline_spark.streaming.incremental import (  # noqa: F401
-    IncrementalConfig,
-    read_sales_stream,
-    run_incremental,
-)
-from sales_data_pipeline_spark.streaming.ratelimit import (  # noqa: F401
-    debounce_batch,
-    debounce_codegen,
-    debounce_stateful,
-)

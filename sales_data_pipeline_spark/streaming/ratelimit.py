@@ -12,13 +12,12 @@ change-notification coalescing).
 State per key is EXACTLY two bigints (last emitted ts as epoch micros
 + arrivals suppressed since it) — bounded by the key space, independent
 of stream length or rate; grouped by key → applyInPandasWithState
-scales horizontally, the same custom-stateful surface as
-funnel_stateful / burst_monitor_stateful. (Spark 4's
+scales horizontally. (Spark 4's
 ``transformWithStateInPandas`` expresses the identical fold with a
 named ValueState; it is not used here because its driver worker
 requires the ``protobuf`` package, absent from this environment — the
 shared ``_fold`` drops into either API unchanged.) Late events follow
-the same at-arrival contract as funnel_stateful: an event arriving
+an at-arrival contract: an event arriving
 after a later one was already emitted is judged against the state as
 it stands (retro-suppression would need unbounded replay). For
 in-order delivery the fold is EXACTLY equal to the batch reference

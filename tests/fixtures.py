@@ -92,3 +92,31 @@ def dim_frames(spark):
     store = spark.createDataFrame(STORE_ROWS, STORE_DIM)
     team = spark.createDataFrame(SALES_TEAM_ROWS, SALES_TEAM_DIM)
     return customer, store, team
+
+
+class _RenameIntercept:
+    """Wraps the JVM FileSystem: rename runs a hook, everything else
+    delegates (delete/exists/listStatus keep working mid-test)."""
+
+    def __init__(self, fs, hook):
+        self._fs = fs
+        self._hook = hook
+
+    def rename(self, src, dst):
+        return self._hook(self._fs, src, dst)
+
+    def __getattr__(self, name):
+        return getattr(self._fs, name)
+
+
+def patch_fs_rename(monkeypatch, hook):
+    """Route every pipeline.fs rename through ``hook(fs, src, dst)``."""
+    from sales_data_pipeline_spark.pipeline import fs as fsmod
+
+    real = fsmod._fs
+
+    def fake(spark_, path):
+        jvm, fs, p = real(spark_, path)
+        return jvm, _RenameIntercept(fs, hook), p
+
+    monkeypatch.setattr(fsmod, "_fs", fake)

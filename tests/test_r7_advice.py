@@ -1,16 +1,13 @@
 """Round-7 ADVICE fixes, each pinned by a covering test:
 
-1. streaming/mart.py apply_mart_batch checks the Hadoop rename result —
-   a failed publish raises (or defers to a concurrent winner) instead of
-   silently counting the batch and running retention.
-2. pipeline/export.py fingerprints the STAGED parquet, so the sealed
+1. pipeline/export.py fingerprints the STAGED parquet, so the sealed
    manifest describes the published bytes even for a nondeterministic
    input DataFrame.
-3. q283's noise boolean is an independent theorem (noise has no core
+2. q283's noise boolean is an independent theorem (noise has no core
    ε-neighbor, via eps_pairs anti-probe), not a contrapositive replica.
-4. q270 treats empty / whitespace-only documents as trivially lossless
+3. q270 treats empty / whitespace-only documents as trivially lossless
    and its oracle counts words from the trimmed split.
-5. q276 exports to a per-process path — concurrent same-SF runs cannot
+4. q276 exports to a per-process path — concurrent same-SF runs cannot
    race on one directory.
 """
 
@@ -18,101 +15,11 @@ from __future__ import annotations
 
 import os
 
-import pytest
 from pyspark.sql import functions as F
 
 
-def _mart_measures():
-    return {
-        "n_events": F.count(F.lit(1)).cast("bigint"),
-        "total": F.sum(F.col("value").cast("decimal(12,2)")),
-    }
-
-
 # ---------------------------------------------------------------------------
-# 1. mart publish rename failure
-# ---------------------------------------------------------------------------
-
-
-class _RenameIntercept:
-    """Wraps the JVM FileSystem: rename runs a hook, everything else
-    delegates (delete/exists/listStatus keep working mid-test)."""
-
-    def __init__(self, fs, hook):
-        self._fs = fs
-        self._hook = hook
-
-    def rename(self, src, dst):
-        return self._hook(self._fs, src, dst)
-
-    def __getattr__(self, name):
-        return getattr(self._fs, name)
-
-
-def _patch_fs(monkeypatch, hook):
-    from sales_data_pipeline_spark.pipeline import fs as fsmod
-
-    real = fsmod._fs
-
-    def fake(spark_, path):
-        jvm, fs, p = real(spark_, path)
-        return jvm, _RenameIntercept(fs, hook), p
-
-    monkeypatch.setattr(fsmod, "_fs", fake)
-
-
-def test_mart_publish_rename_failure_raises_and_keeps_state(
-    spark, tmp_path, monkeypatch
-):
-    from sales_data_pipeline_spark.pipeline.fs import path_exists
-    from sales_data_pipeline_spark.streaming.mart import _versions, apply_mart_batch
-
-    mart_path = str(tmp_path / "mart")
-    batch = spark.createDataFrame(
-        [("click", 1.0), ("view", 2.0)], "event_type string, value double"
-    )
-    assert apply_mart_batch(spark, batch, 0, mart_path, ["event_type"], _mart_measures())
-
-    _patch_fs(monkeypatch, lambda fs, s, d: False)
-    with pytest.raises(RuntimeError, match="rename failed"):
-        apply_mart_batch(
-            spark, batch, 1, mart_path, ["event_type"], _mart_measures(), keep_versions=1
-        )
-    monkeypatch.undo()
-    # the failed batch was NOT counted: b0 survives (retention never ran),
-    # no b1 exists, and the staging debris was cleared
-    assert _versions(spark, mart_path) == [0]
-    assert not path_exists(spark, f"{mart_path}/_staging_b1")
-    # a healthy retry then publishes normally
-    assert apply_mart_batch(spark, batch, 1, mart_path, ["event_type"], _mart_measures())
-    assert _versions(spark, mart_path) == [0, 1]
-
-
-def test_mart_publish_lost_race_defers_to_winner(spark, tmp_path, monkeypatch):
-    """rename=false because a concurrent replay created `final` between
-    the path_exists probe and the rename: the loser returns False (batch
-    already published) instead of raising or double-counting."""
-    from sales_data_pipeline_spark.streaming.mart import _versions, apply_mart_batch
-
-    mart_path = str(tmp_path / "mart")
-    batch = spark.createDataFrame([("click", 1.0)], "event_type string, value double")
-    assert apply_mart_batch(spark, batch, 0, mart_path, ["event_type"], _mart_measures())
-
-    def lose_race(fs, src, dst):
-        fs.mkdirs(dst)  # the concurrent winner publishes first
-        return False
-
-    _patch_fs(monkeypatch, lose_race)
-    assert (
-        apply_mart_batch(spark, batch, 1, mart_path, ["event_type"], _mart_measures())
-        is False
-    )
-    monkeypatch.undo()
-    assert _versions(spark, mart_path) == [0, 1]
-
-
-# ---------------------------------------------------------------------------
-# 2. export manifest fingerprints describe the published bytes
+# 1. export manifest fingerprints describe the published bytes
 # ---------------------------------------------------------------------------
 
 
@@ -139,7 +46,7 @@ def test_export_manifest_matches_published_for_nondeterministic_input(
 
 
 # ---------------------------------------------------------------------------
-# 3. q283's independent noise theorem (eps_pairs probe)
+# 2. q283's independent noise theorem (eps_pairs probe)
 # ---------------------------------------------------------------------------
 
 
@@ -208,7 +115,7 @@ def test_q283_noise_probe_catches_missed_border_attachment(spark):
 
 
 # ---------------------------------------------------------------------------
-# 4. q270 empty-document losslessness (engine + oracle parity)
+# 3. q270 empty-document losslessness (engine + oracle parity)
 # ---------------------------------------------------------------------------
 
 
@@ -245,7 +152,7 @@ def test_q270_empty_and_whitespace_docs_are_lossless(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# 5. q276 export path is per-process
+# 4. q276 export path is per-process
 # ---------------------------------------------------------------------------
 
 

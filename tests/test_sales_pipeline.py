@@ -369,6 +369,32 @@ def test_chaos_crash_between_mart_commit_and_state_flip(spark, cfg, monkeypatch)
         "day1.csv",
         "day2.csv",
     ]
+
+
+def test_failed_archive_rename_raises_and_keeps_file_active(spark, cfg, monkeypatch):
+    """Hadoop reports a refused rename as False. The archive move must
+    raise instead of flipping the file to 'I' while it still sits in
+    input_dir, so the next run resumes it."""
+    from tests.fixtures import patch_fs_rename
+
+    write_sales_csv(_in(cfg) / "day1.csv", n=50, seed=23)
+    customer, store, team = dim_frames(spark)
+
+    def refuse_archive(fs, src, dst):
+        if dst.getParent().getName() == "done":
+            return False
+        return fs.rename(src, dst)
+
+    patch_fs_rename(monkeypatch, refuse_archive)
+    with pytest.raises(RuntimeError, match="rename failed: .*day1.csv -> .*done"):
+        run_pipeline(spark, cfg, customer, store, team)
+    monkeypatch.undo()
+
+    assert [p.name for p in _in(cfg).iterdir()] == ["day1.csv"]
+    stale = AuditState(spark, cfg.state_dir).stale_active_files()
+    assert [p.rsplit("/", 1)[-1] for p in stale] == ["day1.csv"]
+
+
 # ---------------------------------------------------------------------------
 # logging wiring (pipeline/logutil.py): library silence by default,
 # opt-in run configuration, idempotent reconfiguration, stage logs

@@ -1,5 +1,5 @@
-"""Structured Streaming: exactly-once incremental ETL, watermarked
-windows, and cross-batch stateful sessionization."""
+"""Structured Streaming: exactly-once incremental ETL, stream-safe
+corpus operators, and the per-key debounce."""
 
 from __future__ import annotations
 
@@ -9,12 +9,6 @@ import time
 import pytest
 from pyspark.sql import functions as F
 
-from sales_data_pipeline_spark.streaming.events import (
-    dedup_stream,
-    hourly_event_rollup,
-    read_event_stream,
-    sessionize_stateful,
-)
 from sales_data_pipeline_spark.streaming.incremental import (
     IncrementalConfig,
     run_incremental,
@@ -99,108 +93,16 @@ def test_incremental_extra_column_file_does_not_corrupt(spark, tmp_path):
         assert r.sales_date == dt.date(2023, 5, 4)
 
 
-def _write_events(spark, path: str, rows: list[tuple]) -> None:
-    df = spark.createDataFrame(
-        [(i, dt.datetime(2024, 1, 1) + dt.timedelta(seconds=s), u, et, v)
-         for i, (s, u, et, v) in enumerate(rows)],
-        "event_id long, ts timestamp, user_id long, event_type string, value double",
-    )
-    df.coalesce(1).write.mode("overwrite").parquet(path)
-
-
-def test_hourly_rollup_append_watermark(spark, tmp_path):
-    """Two micro-batches: batch 2's later events advance the watermark
-    past batch 1's windows → exactly those windows are appended."""
-    src = tmp_path / "events"
-    _write_events(spark, str(src / "f1"), [
-        (0, 1, "click", 1.0), (60, 1, "click", 2.0), (3700, 2, "view", 5.0),
-    ])
-    time.sleep(1.1)  # distinct mod-times → deterministic batch order
-    _write_events(spark, str(src / "f2"), [
-        (5 * 3600, 1, "click", 7.0),  # hour 5 → watermark 3h passes hours 0 and 1
-    ])
-    stream = read_event_stream(spark, str(src), max_files_per_trigger=1)
-    q = (
-        hourly_event_rollup(stream, watermark="3 hours")
-        .writeStream.format("memory")
-        .queryName("rollup")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = {
-        (r.hour_start.hour, r.event_type): (r.n_events, r.total_value)
-        for r in spark.sql("SELECT * FROM rollup").collect()
-    }
-    # hour-0 click and hour-1 view finalized; hour-5 not yet past watermark
-    assert got == {(0, "click"): (2, 3.0), (1, "view"): (1, 5.0)}
-
-
-def test_sessionize_state_spans_batches(spark, tmp_path):
-    src = tmp_path / "events"
-    # batch 1: user 1 two events 10s apart (one open session)
-    _write_events(spark, str(src / "f1"), [(0, 1, "a", 1.0), (10, 1, "a", 2.0)])
-    time.sleep(1.1)  # distinct mod-times → deterministic batch order
-    # batch 2: user 1 continues at t=20 (same session: gap 10s < 60s),
-    # then jumps to t=1000 (gap > 60s → first session closes)
-    _write_events(spark, str(src / "f2"), [(20, 1, "a", 3.0), (1000, 1, "a", 4.0)])
-    stream = read_event_stream(spark, str(src), max_files_per_trigger=1)
-    q = (
-        sessionize_stateful(stream, gap_seconds=60)
-        .writeStream.format("memory")
-        .queryName("sessions")
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    rows = spark.sql("SELECT * FROM sessions ORDER BY session_start, closed").collect()
-    closed = [r for r in rows if r.closed == "Y"]
-    assert len(closed) == 1
-    # the closed session spans BOTH batches: 3 events, t=0..20, Σvalue=6
-    assert closed[0].n_events == 3
-    assert closed[0].total_value == pytest.approx(6.0)
-    assert (closed[0].session_end - closed[0].session_start).total_seconds() == 20
-    open_rows = [r for r in rows if r.closed == "N"]
-    assert open_rows[-1].n_events == 1 and open_rows[-1].total_value == pytest.approx(4.0)
-
-
-def test_dedup_stream_drops_cross_batch_redeliveries(spark, tmp_path):
-    """The same event_id re-delivered in a later micro-batch (within the
-    watermark) must appear exactly once downstream."""
-    src = tmp_path / "events"
-    _write_events_with_ids(spark, str(src / "f1"), [
-        (1, 0, 1, "click", 1.0), (2, 60, 1, "click", 2.0),
-    ])
-    time.sleep(1.1)  # distinct mod-times → deterministic batch order
-    # batch 2: event 2 re-delivered (duplicate), event 3 new
-    _write_events_with_ids(spark, str(src / "f2"), [
-        (2, 60, 1, "click", 2.0), (3, 120, 2, "view", 5.0),
-    ])
-    stream = read_event_stream(spark, str(src), max_files_per_trigger=1)
-    q = (
-        dedup_stream(stream, watermark="1 hour")
-        .writeStream.format("memory")
-        .queryName("deduped")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    rows = spark.sql("SELECT event_id FROM deduped").collect()
-    ids = sorted(r.event_id for r in rows)
-    assert ids == [1, 2, 3], ids
+_EVENT_SCHEMA = (
+    "event_id long, ts timestamp, user_id long, event_type string, value double"
+)
 
 
 def _write_events_with_ids(spark, path: str, rows: list[tuple]) -> None:
     df = spark.createDataFrame(
         [(i, dt.datetime(2024, 1, 1) + dt.timedelta(seconds=s), u, et, v)
          for i, s, u, et, v in rows],
-        "event_id long, ts timestamp, user_id long, event_type string, value double",
+        _EVENT_SCHEMA,
     )
     df.coalesce(1).write.mode("overwrite").parquet(path)
 
@@ -250,1030 +152,6 @@ def test_corpus_map_operators_run_on_streams(spark, tmp_path):
         for r in curate(spark.read.parquet(str(src / "*"))).collect()
     }
     assert got == want and len(got) > 0
-
-
-def test_corpus_stream_incremental_dedup_across_batches(spark, tmp_path):
-    """Cross-shard duplicates are curated exactly once: a doc arriving
-    again in a LATER shard (after the first was processed) is dropped by
-    the fingerprint index; re-running the stream with no new shards
-    changes nothing; within-shard dups keep min id."""
-    import json as _json
-
-    from sales_data_pipeline_spark.streaming.corpus import (
-        CorpusStreamConfig,
-        read_curated,
-        run_corpus_stream,
-    )
-
-    src = tmp_path / "in"
-    src.mkdir()
-    cfg = CorpusStreamConfig(
-        input_dir=str(src),
-        curated_dir=str(tmp_path / "curated"),
-        index_dir=str(tmp_path / "index"),
-        checkpoint_dir=str(tmp_path / "ckpt"),
-    )
-
-    def shard(name, rows):
-        with open(src / name, "w") as f:
-            for doc_id, text in rows:
-                f.write(_json.dumps({"doc_id": doc_id, "text": text}) + "\n")
-
-    shard("a.jsonl", [(1, "doc one"), (2, "doc two"), (3, "doc two")])  # 3 dups 2
-    run_corpus_stream(spark, cfg)
-    got = sorted(r.doc_id for r in read_curated(spark, cfg).collect())
-    assert got == [1, 2]
-
-    shard("b.jsonl", [(4, "doc one"), (5, "doc three")])  # 4 dups history
-    run_corpus_stream(spark, cfg)
-    got = sorted(r.doc_id for r in read_curated(spark, cfg).collect())
-    assert got == [1, 2, 5]
-
-    run_corpus_stream(spark, cfg)  # no new shards -> no change
-    got = sorted(r.doc_id for r in read_curated(spark, cfg).collect())
-    assert got == [1, 2, 5]
-
-
-def test_enrich_stream_static_broadcast_join(spark, tmp_path):
-    """Stream-static enrichment: every event picks up its dim row; keys
-    missing from the dim pass through with nulls (left join)."""
-    from sales_data_pipeline_spark.streaming.events import enrich_stream
-
-    src = tmp_path / "ev_enrich"
-    _write_events_with_ids(spark, str(src / "f1"), [
-        (1, 0, 1, "click", 1.0), (2, 60, 2, "view", 2.0), (3, 90, 99, "click", 3.0),
-    ])
-    dim = spark.createDataFrame(
-        [(1, "gold"), (2, "silver")], "user_id long, segment string"
-    )
-    stream = read_event_stream(spark, str(src))
-    q = (
-        enrich_stream(stream, dim)
-        .writeStream.format("memory")
-        .queryName("enriched")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt_enrich"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = {r.event_id: r.segment for r in spark.sql("SELECT * FROM enriched").collect()}
-    assert got == {1: "gold", 2: "silver", 3: None}
-
-
-def test_purchase_attribution_stream_stream_join(spark, tmp_path):
-    """Watermarked stream-stream join: purchases attribute to same-user
-    views within the preceding hour — views outside the window or from
-    other users must not match."""
-    from sales_data_pipeline_spark.streaming.events import (
-        purchase_attribution_stream,
-    )
-
-    src = tmp_path / "ev_attr"
-    _write_events_with_ids(spark, str(src / "f1"), [
-        # user 1: views at t=0s and t=300s; purchase at t=600s → 2 matches
-        (10, 0, 1, "view", 1.0),
-        (11, 300, 1, "view", 2.0),
-        (12, 600, 1, "purchase", 50.0),
-        # user 2: view 2h BEFORE purchase → outside window, no match
-        (20, 0, 2, "view", 3.0),
-        (21, 7800, 2, "purchase", 70.0),
-        # user 3: purchase with no views at all
-        (30, 100, 3, "purchase", 90.0),
-    ])
-    ev = read_event_stream(spark, str(src))
-    out = purchase_attribution_stream(
-        ev.filter(F.col("event_type") == "view"),
-        ev.filter(F.col("event_type") == "purchase"),
-        attribution_window="1 hour",
-    )
-    q = (
-        out.writeStream.format("memory")
-        .queryName("attributed")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt_attr"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    rows = spark.sql("SELECT * FROM attributed").collect()
-    pairs = sorted((r.purchase_id, r.view_ts.second + r.view_ts.minute * 60) for r in rows)
-    assert pairs == [(12, 0), (12, 300)], rows
-    assert all(r.user_id == 1 for r in rows)
-
-
-def test_streaming_countmin_converges_to_batch_sketch(spark, tmp_path):
-    """The sketch folded over micro-batches must equal the one-shot
-    batch sketch over the same corpus (mergeability under streaming),
-    and estimates from it must never undercount."""
-    import json as _json
-
-    from sales_data_pipeline_spark.operators.sketch import (
-        countmin_estimate,
-        countmin_sketch,
-    )
-    from sales_data_pipeline_spark.streaming.heavy_hitters import (
-        HeavyHitterConfig,
-        read_sketch,
-        run_heavy_hitters,
-    )
-
-    src = tmp_path / "shards"
-    src.mkdir()
-    docs = [
-        (1, "alpha beta alpha gamma"),
-        (2, "beta beta delta"),
-        (3, "alpha gamma gamma gamma"),
-        (4, "epsilon alpha beta"),
-    ]
-    for shard, rows in ((1, docs[:2]), (2, docs[2:])):
-        with open(src / f"s{shard}.jsonl", "w") as f:
-            for i, t in rows:
-                f.write(_json.dumps({"doc_id": i, "text": t}) + "\n")
-    cfg = HeavyHitterConfig(
-        input_dir=str(src),
-        sketch_dir=str(tmp_path / "sketch"),
-        checkpoint_dir=str(tmp_path / "ckpt_hh"),
-        max_files_per_trigger=1,  # force 2 micro-batches
-    )
-    run_heavy_hitters(spark, cfg)
-
-    streamed = read_sketch(spark, cfg)
-    whole = spark.createDataFrame(docs, "doc_id long, text string")
-    batch = countmin_sketch(
-        whole.select(F.explode(F.split("text", " ")).alias("tok")), "tok"
-    )
-    diff = streamed.join(batch, ["row", "bucket"], "full").filter(
-        F.coalesce(streamed["cnt"], F.lit(0)) != F.coalesce(batch["cnt"], F.lit(0))
-    )
-    assert diff.count() == 0
-
-    truth = {"alpha": 4, "beta": 4, "gamma": 4, "delta": 1, "epsilon": 1}
-    qdf = spark.createDataFrame([(t,) for t in truth], "tok string")
-    est = {r.tok: r.est for r in countmin_estimate(streamed, qdf, "tok").collect()}
-    for tok, n in truth.items():
-        assert est[tok] >= n
-
-    # retry idempotency: simulate the crash-after-sketch-commit /
-    # before-checkpoint-commit window by wiping the streaming checkpoint
-    # and re-running — every batch is re-delivered with an id ≤ the
-    # committed sketch version, so _process must SKIP them all and the
-    # sketch must come out cell-for-cell identical (no double counting).
-    import shutil
-
-    before = sorted((r.row, r.bucket, r.cnt) for r in streamed.collect())
-    shutil.rmtree(tmp_path / "ckpt_hh")
-    run_heavy_hitters(spark, cfg)
-    after = sorted(
-        (r.row, r.bucket, r.cnt) for r in read_sketch(spark, cfg).collect()
-    )
-    assert after == before
-
-
-def test_streaming_anomalies_converge_to_batch_zscores(spark, tmp_path):
-    """The incrementally-folded anomaly report must equal the one-shot
-    batch computation over the union of all shards (decimal day-sum
-    monoid + closed-form moments), including when one day's orders are
-    SPLIT across micro-batches; and re-running after wiping only the
-    stream checkpoint must not double-count (versioned-commit skip)."""
-    import json as _json
-
-    from sales_data_pipeline_spark.streaming.anomaly import (
-        AnomalyConfig,
-        read_report,
-        run_revenue_anomalies,
-    )
-
-    rows = [
-        (1, "2024-01-01", 100.10), (2, "2024-01-01", 250.25),
-        (3, "2024-01-02", 80.00), (4, "2024-01-03", 900.00),
-        (5, "2024-01-04", 120.50), (6, "2024-01-05", 110.00),
-        (7, "2024-01-02", 40.40),  # day 2 split across shards
-    ]
-    src = tmp_path / "orders"
-    src.mkdir()
-    for shard, chunk in ((1, rows[:4]), (2, rows[4:])):
-        with open(src / f"s{shard}.jsonl", "w") as f:
-            for oid, d, v in chunk:
-                f.write(_json.dumps(
-                    {"order_id": oid, "order_date": d, "total_price": v}) + "\n")
-    cfg = AnomalyConfig(
-        input_dir=str(src),
-        state_dir=str(tmp_path / "days"),
-        report_dir=str(tmp_path / "report"),
-        checkpoint_dir=str(tmp_path / "ckpt_anom"),
-        max_files_per_trigger=1,  # force 2 micro-batches
-    )
-    run_revenue_anomalies(spark, cfg)
-    got = {
-        r.day: (r.rev, r.zscore, r.is_anomaly)
-        for r in read_report(spark, cfg).collect()
-    }
-
-    # one-shot batch reference with the same closed form
-    whole = spark.createDataFrame(
-        [(o, d, v) for o, d, v in rows],
-        "order_id long, order_date string, total_price double",
-    )
-    days = whole.groupBy(F.substring("order_date", 1, 10).alias("day")).agg(
-        F.sum(F.col("total_price").cast("decimal(18,2)")).alias("rev")
-    )
-    s = days.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("rev").cast("double").alias("tot"),
-        F.sum(F.col("rev") * F.col("rev")).cast("double").alias("ss"),
-    )
-    j = days.crossJoin(s)
-    mu = F.col("tot") / F.col("n")
-    sigma = F.sqrt(
-        (F.col("ss") - F.col("tot") * F.col("tot") / F.col("n")) / (F.col("n") - 1)
-    )
-    z = (F.col("rev").cast("double") - mu) / sigma
-    want = {
-        r.day: (float(r.rev), r.z, r.a)
-        for r in j.select(
-            "day",
-            F.col("rev").cast("double").alias("rev"),
-            F.round(z, 6).alias("z"),
-            F.when(F.abs(z) >= 2, 1).otherwise(0).cast("bigint").alias("a"),
-        ).collect()
-    }
-    assert set(got) == set(want)
-    for day in want:
-        assert got[day] == want[day], (day, got[day], want[day])
-    # day 2 must be the two-shard sum
-    assert got["2024-01-02"][0] == 120.40
-
-    # retry idempotency: same protocol as the count-min sketch
-    import shutil
-
-    shutil.rmtree(tmp_path / "ckpt_anom")
-    run_revenue_anomalies(spark, cfg)
-    again = {
-        r.day: (r.rev, r.zscore, r.is_anomaly)
-        for r in read_report(spark, cfg).collect()
-    }
-    assert again == got
-
-
-def test_trending_tokens_finalized_windows_match_batch(spark, tmp_path):
-    """Windowed token counts: the watermark finalizes early windows
-    exactly once (append mode), later windows stay pending; counts and
-    the per-window top-k equal a batch recompute over the same rows."""
-    import json as _json
-
-    from sales_data_pipeline_spark.streaming.trending import (
-        run_trending,
-        trending_topk,
-    )
-
-    base = dt.datetime(2024, 3, 1, 12, 0, 0)
-
-    def iso(mins):
-        return (base + dt.timedelta(minutes=mins)).strftime("%Y-%m-%dT%H:%M:%S")
-
-    # window = 10 min, watermark = 20 min.
-    shard1 = [  # window [12:00,12:10): alpha x3, beta x2, gamma x1
-        (1, iso(1), "alpha beta alpha"),
-        (2, iso(5), "beta gamma alpha"),
-    ]
-    shard2 = [  # t=12:55 advances watermark to 12:35 → 12:00 and 12:10 final
-        (3, iso(12), "delta delta beta"),   # window [12:10,12:20)
-        (4, iso(55), "omega"),              # window [12:50,13:00) — pending
-    ]
-    src = tmp_path / "tok_stream"
-    src.mkdir()
-    for name, rows in (("s1", shard1), ("s2", shard2)):
-        with open(src / f"{name}.jsonl", "w") as f:
-            for i, ts, text in rows:
-                f.write(_json.dumps({"doc_id": i, "ts": ts, "text": text}) + "\n")
-    sink = str(tmp_path / "trend_sink")
-    run_trending(
-        spark, str(src), sink, str(tmp_path / "ckpt_trend"),
-        max_files_per_trigger=1,
-    )
-    got = {
-        (r.window_start.minute, r.tok): r.n
-        for r in spark.read.parquet(sink).collect()
-    }
-    # finalized: [12:00,12:10) and [12:10,12:20); pending: [12:50,13:00)
-    assert got == {
-        (0, "alpha"): 3, (0, "beta"): 2, (0, "gamma"): 1,
-        (10, "delta"): 2, (10, "beta"): 1,
-    }, got
-    top = [
-        (r.window_start.minute, r.tok, r.n, r.rank)
-        for r in trending_topk(spark, sink, k=2)
-        .orderBy("window_start", "rank").collect()
-    ]
-    assert top == [
-        (0, "alpha", 3, 1), (0, "beta", 2, 2),
-        (10, "delta", 2, 1), (10, "beta", 1, 2),
-    ], top
-
-
-def test_unattributed_purchases_left_outer_stream_join(spark, tmp_path):
-    """Stream-stream LEFT OUTER join: matched purchases emit
-    immediately; a purchase with no in-window view emits its NULL row
-    only after the watermark passes its eviction point (a later batch
-    must advance event time first — the semantics the docstring
-    promises)."""
-    from sales_data_pipeline_spark.streaming.events import (
-        unattributed_purchase_stream,
-    )
-
-    src = tmp_path / "ev_outer"
-    _write_events_with_ids(spark, str(src / "f1"), [
-        (10, 0, 1, "view", 1.0),
-        (12, 600, 1, "purchase", 50.0),   # matched → emits in batch 1
-        (30, 100, 3, "purchase", 90.0),   # no view → NULL row later
-    ])
-
-    sink = str(tmp_path / "outer_sink")
-
-    def run():
-        out = unattributed_purchase_stream(
-            ev_stream.filter(F.col("event_type") == "view"),
-            ev_stream.filter(F.col("event_type") == "purchase"),
-            attribution_window="1 hour",
-            watermark="2 hours",
-        )
-        q = (
-            out.writeStream.format("parquet")
-            .option("path", sink)
-            .outputMode("append")
-            .option("checkpointLocation", str(tmp_path / "ckpt_outer"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        return spark.read.parquet(sink).collect()
-
-    ev_stream = read_event_stream(spark, str(src))
-    rows1 = run()
-    # batch 1: the matched purchase is out; the unmatched one is NOT
-    # (watermark has not passed its window yet — no premature null)
-    assert {r.purchase_id for r in rows1} == {12}
-    assert all(r.view_ts is not None for r in rows1)
-
-    time.sleep(1.1)
-    # advance event time far past purchase 30's eviction point. Two
-    # subtleties this test exists to pin: (a) the GLOBAL watermark is
-    # the MIN over both sides' watermarks (multipleWatermarkPolicy=min
-    # default), so the advancing batch must carry BOTH a late view and
-    # a late purchase — advancing only one side leaves the join's
-    # watermark stuck; (b) the watermark computed from a batch applies
-    # to the NEXT batch, so eviction (the null-row emit) needs one
-    # more micro-batch after the advancing one.
-    _write_events_with_ids(spark, str(src / "f2"), [
-        (98, 4 * 86400, 9, "view", 0.0),
-        (99, 4 * 86400, 9, "purchase", 0.0),
-    ])
-    run()
-    time.sleep(1.1)
-    _write_events_with_ids(spark, str(src / "f3"), [
-        (100, 4 * 86400 + 60, 9, "view", 0.0),
-        (101, 4 * 86400 + 60, 9, "purchase", 0.0),
-    ])
-    rows2 = run()  # cumulative parquet contents
-    nulls = [r for r in rows2 if r.purchase_id == 30]
-    assert len(nulls) == 1
-    assert nulls[0].view_ts is None and nulls[0].view_value is None
-    assert nulls[0].purchase_value == 90.0
-    # the matched row did not re-emit on eviction (one copy total)
-    assert sum(1 for r in rows2 if r.purchase_id == 12) == 1
-
-
-def test_streaming_cdc_snapshot_converges_to_batch_apply(spark, tmp_path):
-    """Two change micro-batches folded through the streaming consumer
-    must equal ONE batch apply_cdc_log of the concatenated log — and a
-    re-run (foreachBatch redelivery) must not change the result."""
-    from sales_data_pipeline_spark.operators.merge import apply_cdc_log
-    from sales_data_pipeline_spark.streaming.cdc import (
-        CdcConfig,
-        read_snapshot,
-        run_cdc_consumer,
-    )
-
-    cfg = CdcConfig(
-        input_dir=str(tmp_path / "in"),
-        snapshot_dir=str(tmp_path / "snap"),
-        checkpoint_dir=str(tmp_path / "ckpt"),
-        max_files_per_trigger=1,
-    )
-    base = spark.createDataFrame(
-        [(1, 10.0), (2, 20.0), (3, 30.0)], "k long, v double"
-    )
-    b1 = [(1, "U", 11.0, 1, 0), (2, "D", None, 1, 0), (5, "I", 55.0, 1, 0)]
-    b2 = [(1, "U", 12.0, 2, 0), (2, "I", 22.0, 2, 0), (5, "D", None, 2, 0)]
-    schema = "k long, op string, v double, ver bigint, seq bigint"
-    spark.createDataFrame(b1, schema).coalesce(1).write.parquet(
-        f"{cfg.input_dir}/b1"
-    )
-    time.sleep(1.1)
-    spark.createDataFrame(b2, schema).coalesce(1).write.parquet(
-        f"{cfg.input_dir}/b2"
-    )
-    run_cdc_consumer(spark, cfg, base)
-    got = {r.k: r.v for r in read_snapshot(spark, cfg).collect()}
-
-    want_df = apply_cdc_log(
-        base,
-        spark.createDataFrame(b1 + b2, schema),
-        keys=["k"],
-        version_cols=("ver", "seq"),
-    )
-    want = {r.k: r.v for r in want_df.collect()}
-    assert got == want == {1: 12.0, 2: 22.0, 3: 30.0}
-
-    # idempotent re-run: same checkpoint, no new input
-    run_cdc_consumer(spark, cfg, base)
-    again = {r.k: r.v for r in read_snapshot(spark, cfg).collect()}
-    assert again == got
-
-
-def test_session_window_stream_merges_fragments_across_batches(spark, tmp_path):
-    """Built-in session_window: fragments of one session arriving in
-    different micro-batches must merge into ONE appended row once the
-    watermark closes the session; a later session stays unemitted
-    until its own close passes."""
-    from sales_data_pipeline_spark.streaming.events import (
-        session_rollup_stream,
-    )
-
-    src = tmp_path / "ev_sess"
-    # batch 1: user 1, two events 10 min apart (one session)
-    _write_events_with_ids(spark, str(src / "f1"), [
-        (1, 0, 1, "a", 1.0),
-        (2, 600, 1, "a", 2.0),
-    ])
-    time.sleep(1.1)
-    # batch 2: same session continues (+20 min), then a far-future
-    # event advances the watermark past the session's close
-    _write_events_with_ids(spark, str(src / "f2"), [
-        (3, 1200, 1, "a", 3.0),
-        (9, 4 * 86400, 9, "a", 0.0),
-    ])
-    time.sleep(1.1)
-    # batch 3: one more far event so the advanced watermark APPLIES
-    # (watermark from batch N takes effect in batch N+1)
-    _write_events_with_ids(spark, str(src / "f3"), [
-        (10, 4 * 86400 + 60, 9, "a", 0.0),
-    ])
-    stream = read_event_stream(spark, str(src), max_files_per_trigger=1)
-    q = (
-        session_rollup_stream(stream, gap="30 minutes", watermark="1 hour")
-        .writeStream.format("memory")
-        .queryName("sessions_builtin")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt_sess"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    rows = spark.sql(
-        "SELECT * FROM sessions_builtin WHERE user_id = 1"
-    ).collect()
-    assert len(rows) == 1  # fragments merged, emitted exactly once
-    r = rows[0]
-    assert r.n_events == 3 and r.total_value == 6.0
-    # session = [first event, last event + gap)
-    assert (r.session_end - r.session_start).total_seconds() == 1200 + 1800
-    # user 9's session is still open (watermark never passed it)
-    assert spark.sql(
-        "SELECT count(*) c FROM sessions_builtin WHERE user_id = 9"
-    ).collect()[0].c == 0
-
-
-def test_burst_monitor_state_spans_batches_and_matches_batch_rule(spark, tmp_path):
-    """Streaming burst monitor (k=3 in 1800s): a burst whose three
-    events STRADDLE a micro-batch boundary must still be counted (state
-    carries the last k-1 times), totals accumulate across batches, and
-    a user with spread-out events never flags — the same rule as
-    q243_burst_users evaluated incrementally."""
-    from sales_data_pipeline_spark.streaming.events import (
-        burst_monitor_stateful,
-        read_event_stream,
-    )
-
-    src = tmp_path / "events"
-    # batch 1: user 1 -> two events 100s apart (no burst yet: k=3);
-    #          user 2 -> two events 3000s apart (never bursts)
-    _write_events(spark, str(src / "f1"), [
-        (0, 1, "a", 1.0), (100, 1, "a", 1.0),
-        (0, 2, "a", 1.0), (3000, 2, "a", 1.0),
-    ])
-    time.sleep(1.1)
-    # batch 2: user 1's third event at t=200 -> 200-0 <= 1800 => burst
-    # point counted ACROSS the batch boundary; then t=5000 (no burst),
-    # then 5100, 5200 -> one more burst point (5200-5000 <= 1800)
-    _write_events(spark, str(src / "f2"), [
-        (200, 1, "a", 1.0), (5000, 1, "a", 1.0),
-        (5100, 1, "a", 1.0), (5200, 1, "a", 1.0),
-        (6000, 2, "a", 1.0),
-    ])
-    stream = read_event_stream(spark, str(src), max_files_per_trigger=1)
-    q = (
-        burst_monitor_stateful(stream, k=3, window_seconds=1800)
-        .writeStream.format("memory")
-        .queryName("bursts")
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    rows = spark.sql(
-        "SELECT * FROM bursts ORDER BY n_burst_points_total"
-    ).collect()
-    by_user_final = {}
-    for r in rows:  # update mode: last row per user wins
-        by_user_final[r.user_id] = r
-    u1, u2 = by_user_final[1], by_user_final[2]
-    # u1: burst at t=200 (cross-batch) + bursts at 5200 AND... check:
-    # 5100: 5100-100? times kept are last 2: at 5100 the 2-back is 200
-    # -> 4900 > 1800 no; 5200: 2-back 5000 -> 200 <= 1800 yes.
-    assert u1.n_burst_points_total == 2
-    assert u1.last_burst_at == dt.datetime(2024, 1, 1) + dt.timedelta(seconds=5200)
-    assert u2.n_burst_points_total == 0 and u2.last_burst_at is None
-
-
-def test_streaming_hll_registers_converge_to_batch_sketch(spark, tmp_path):
-    """Rolling-distinct registers folded over micro-batches must equal
-    the one-shot batch registers over the same keys (the HLL max-fold
-    monoid under streaming), the estimate must sit within the p=12
-    error envelope of the true distinct count, and re-running over the
-    same checkpoint must change nothing (idempotent fold)."""
-    import json as _json
-
-    from sales_data_pipeline_spark.operators.sketch import hll_build
-    from sales_data_pipeline_spark.streaming.cardinality import (
-        RollingDistinctConfig,
-        read_registers,
-        rolling_distinct_estimate,
-        run_rolling_distinct,
-    )
-
-    src = tmp_path / "shards"
-    src.mkdir()
-    # 300 distinct doc_ids split over two shards with overlap
-    rows1 = [(i, "x") for i in range(0, 200)]
-    rows2 = [(i, "x") for i in range(150, 300)]
-    for shard, rows in ((1, rows1), (2, rows2)):
-        with open(src / f"s{shard}.jsonl", "w") as f:
-            for i, t in rows:
-                f.write(_json.dumps({"doc_id": i, "text": t}) + "\n")
-    cfg = RollingDistinctConfig(
-        input_dir=str(src),
-        sketch_dir=str(tmp_path / "hll"),
-        checkpoint_dir=str(tmp_path / "ckpt_hll"),
-        max_files_per_trigger=1,  # force 2 micro-batches
-    )
-    run_rolling_distinct(spark, cfg)
-
-    streamed = {
-        (r.idx, r.rho) for r in read_registers(spark, cfg).collect()
-    }
-    whole = spark.createDataFrame(
-        rows1 + rows2, "doc_id long, text string"
-    )
-    batch = {(r.idx, r.rho) for r in hll_build(whole, "doc_id").collect()}
-    assert streamed == batch
-    est = rolling_distinct_estimate(spark, cfg)
-    assert abs(est - 300) <= 5 * 0.0163 * 300  # 5x RSE at p=12
-    # idempotence: draining again with the same checkpoint is a no-op
-    run_rolling_distinct(spark, cfg)
-    assert {
-        (r.idx, r.rho) for r in read_registers(spark, cfg).collect()
-    } == batch
-
-
-def test_burst_monitor_at_arrival_contract_for_late_events(spark, tmp_path):
-    """Documents the monitor's at-arrival semantics: an event delivered
-    a batch LATE is evaluated against the state as of its arrival (the
-    unwatermarked-custom-state contract) — here a late event that
-    WOULD have completed a burst in event-time order does not flag,
-    because by arrival its window predecessors are long past."""
-    from sales_data_pipeline_spark.streaming.events import (
-        burst_monitor_stateful,
-        read_event_stream,
-    )
-
-    src = tmp_path / "events"
-    # batch 1: t=0 and t=600 for user 1
-    _write_events(spark, str(src / "f1"), [(0, 1, "a", 1.0), (600, 1, "a", 1.0)])
-    time.sleep(1.1)
-    # batch 2: a LATE event t=300 (event-time order 0,300,600 would
-    # burst at 600: 600-0 <= 1800) plus a far-future event t=100000
-    _write_events(spark, str(src / "f2"), [(300, 1, "a", 1.0), (100000, 1, "a", 1.0)])
-    stream = read_event_stream(spark, str(src), max_files_per_trigger=1)
-    q = (
-        burst_monitor_stateful(stream, k=3, window_seconds=1800)
-        .writeStream.format("memory")
-        .queryName("bursts_late")
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    rows = spark.sql("SELECT * FROM bursts_late").collect()
-    final = max(rows, key=lambda r: r.n_burst_points_total)
-    # at ARRIVAL order (0, 600 | 300, 100000): the late 300 IS within
-    # 1800 of its 2-back arrival predecessor (0) -> one burst point;
-    # the batch query over the same data in EVENT-time order would
-    # flag 600 instead — same count, different flagged event, which is
-    # exactly the documented at-arrival divergence for late data
-    assert final.n_burst_points_total == 1
-    assert final.last_burst_at == dt.datetime(2024, 1, 1) + dt.timedelta(seconds=300)
-
-
-def test_burst_monitor_rejects_k_below_2(spark, tmp_path):
-    """k=1 has no (k-1)-back predecessor to compare against — the
-    constructor must reject it loudly instead of raising IndexError on
-    the first event deep inside the state function."""
-    from sales_data_pipeline_spark.streaming.events import burst_monitor_stateful
-
-    src = tmp_path / "events"
-    _write_events(spark, str(src / "f1"), [(0, 1, "a", 1.0)])
-    stream = read_event_stream(spark, str(src))
-    with pytest.raises(ValueError, match="k >= 2"):
-        burst_monitor_stateful(stream, k=1)
-
-
-def test_burst_fn_equal_timestamp_ties_use_event_id_order():
-    """Determinism for simultaneous events: the micro-batch sort is
-    (ts, event_id) — the SAME total order the batch detector q243 uses —
-    so equal-timestamp events always process in event_id order no matter
-    how Arrow happened to batch them. Verified by feeding the same rows
-    in two different arrival orders through the raw state function and
-    asserting identical outputs (a ts-only sort would leave ties in
-    arrival order and let last_burst/state drift between runs)."""
-    import pandas as pd
-
-    from sales_data_pipeline_spark.streaming.events import _burst_fn
-
-    class _StubState:
-        exists = False
-
-        def update(self, v):
-            self.stored = v
-
-    base = dt.datetime(2024, 1, 1)
-
-    def run(order):
-        pdf = pd.DataFrame(
-            {
-                "event_id": [order[i] for i in range(3)],
-                "ts": [base, base, base],  # all simultaneous
-                "user_id": [1, 1, 1],
-            }
-        )
-        st = _StubState()
-        out = list(_burst_fn(k=3, window_seconds=1800)((1,), [pdf], st))[0]
-        return st.stored, out.to_dict("records")[0]
-
-    state_a, out_a = run([10, 20, 30])
-    state_b, out_b = run([30, 10, 20])  # same rows, different arrival order
-    assert state_a == state_b
-    assert out_a == out_b
-    assert out_a["n_burst_points_batch"] == 1  # third simultaneous event bursts
-
-
-def test_burst_and_session_state_survive_rocksdb_store_swap(spark, tmp_path):
-    """Production clusters run stateful queries on the RocksDB state
-    store (spillable, incremental-checkpoint), not the default
-    HDFS-backed in-memory map the rest of this suite exercises. The
-    bounded-state contracts (k-1 timestamps per user for the burst
-    monitor) must be store-agnostic: same inputs, same outputs, state
-    still spanning micro-batches, under
-    RocksDBStateStoreProvider. Guarded: skips if the provider class is
-    absent from this Spark build (it ships in Spark 3.4+)."""
-    provider = (
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider"
-    )
-    try:
-        spark.sparkContext._jvm.java.lang.Class.forName(provider)
-    except Exception:
-        pytest.skip("RocksDB state store provider not in this build")
-
-    from sales_data_pipeline_spark.streaming.events import (
-        burst_monitor_stateful,
-        read_event_stream,
-    )
-
-    src = tmp_path / "events"
-    # the same scenario as the cross-batch burst test: burst spans the
-    # micro-batch boundary, so a store that loses state between batches
-    # would report 0
-    _write_events(spark, str(src / "f1"), [(0, 1, "a", 1.0), (100, 1, "a", 1.0)])
-    time.sleep(1.1)
-    _write_events(spark, str(src / "f2"), [
-        (200, 1, "a", 1.0), (5000, 1, "a", 1.0),
-        (5100, 1, "a", 1.0), (5200, 1, "a", 1.0),
-    ])
-    old = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass", provider)
-    try:
-        stream = read_event_stream(spark, str(src), max_files_per_trigger=1)
-        q = (
-            burst_monitor_stateful(stream, k=3, window_seconds=1800)
-            .writeStream.format("memory")
-            .queryName("bursts_rocksdb")
-            .outputMode("update")
-            .option("checkpointLocation", str(tmp_path / "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        if old is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", old)
-    rows = spark.sql("SELECT * FROM bursts_rocksdb").collect()
-    final = max(rows, key=lambda r: r.n_burst_points_total)
-    # 200 bursts across the batch boundary (200-0 <= 1800); 5200 bursts
-    # within batch 2 (5200-5000 <= 1800) — identical to the HDFS-store
-    # cross-batch test's expectation
-    assert final.n_burst_points_total == 2
-    assert final.last_burst_at == dt.datetime(2024, 1, 1) + dt.timedelta(seconds=5200)
-
-
-# ---------------------------------------------------------------------------
-# streaming mart maintenance (streaming/mart.py — foreachBatch fold)
-# ---------------------------------------------------------------------------
-
-
-def _mart_measures():
-    return {
-        "n_events": F.count(F.lit(1)).cast("bigint"),
-        "total": F.sum(F.col("value").cast("decimal(12,2)")),
-    }
-
-
-def test_mart_stream_matches_batch_recompute(spark, tmp_path):
-    """After the stream drains, the externally-stored mart must equal a
-    one-shot batch aggregation of every event ever ingested — the
-    exactly-once-at-the-mart contract."""
-    from sales_data_pipeline_spark.streaming.mart import mart_maintainer, read_mart
-
-    src = tmp_path / "events"
-    _write_events_with_ids(spark, str(src / "f1"), [
-        (1, 0, 1, "click", 1.25), (2, 60, 1, "view", 2.50), (3, 120, 2, "click", 3.75),
-    ])
-    time.sleep(1.1)
-    _write_events_with_ids(spark, str(src / "f2"), [
-        (4, 180, 2, "click", 4.00), (5, 240, 3, "buy", 10.00),
-    ])
-    mart_path = str(tmp_path / "mart")
-    stream = read_event_stream(spark, str(src), max_files_per_trigger=1)
-    q = (
-        stream.writeStream.foreachBatch(
-            mart_maintainer(mart_path, ["event_type"], _mart_measures())
-        )
-        .option("checkpointLocation", str(tmp_path / "ckpt_mart"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = {
-        r.event_type: (r.n_events, str(r.total))
-        for r in read_mart(spark, mart_path).collect()
-    }
-    assert got == {
-        "click": (3, "9.00"),
-        "view": (1, "2.50"),
-        "buy": (1, "10.00"),
-    }
-
-
-def test_mart_batch_replay_is_skipped(spark, tmp_path):
-    """foreachBatch is at-least-once: re-applying an already-published
-    batch_id must be a no-op (the published version IS the ledger)."""
-    from sales_data_pipeline_spark.streaming.mart import apply_mart_batch, read_mart
-
-    mart_path = str(tmp_path / "mart")
-    batch = spark.createDataFrame([("click", 1.0), ("click", 2.0)], "event_type string, value double")
-    assert apply_mart_batch(spark, batch, 0, mart_path, ["event_type"], _mart_measures())
-    # crash replay of batch 0 — same id, same (or partially different) data
-    assert not apply_mart_batch(spark, batch, 0, mart_path, ["event_type"], _mart_measures())
-    rows = read_mart(spark, mart_path).collect()
-    assert len(rows) == 1 and rows[0].n_events == 2 and str(rows[0].total) == "3.00"
-
-
-def test_mart_version_retention(spark, tmp_path):
-    """Only the trailing keep_versions committed marts survive; the
-    reader always resolves the newest."""
-    from sales_data_pipeline_spark.streaming.mart import (
-        _versions,
-        apply_mart_batch,
-        read_mart,
-    )
-
-    mart_path = str(tmp_path / "mart")
-    for b in range(5):
-        batch = spark.createDataFrame([("click", 1.0)], "event_type string, value double")
-        apply_mart_batch(
-            spark, batch, b, mart_path, ["event_type"], _mart_measures(), keep_versions=2
-        )
-    assert _versions(spark, mart_path) == [3, 4]
-    rows = read_mart(spark, mart_path).collect()
-    assert rows[0].n_events == 5
-
-
-def test_funnel_stateful_matches_batch_q60_across_batch_boundary(spark, tmp_path):
-    """Streaming funnel vs the batch q60 chain over the SAME events,
-    with user 1's funnel straddling the micro-batch boundary, user 2
-    stalling at stage 2, user 3 whose purchase PRECEDES the click
-    (must not advance), and user 4 with no first-stage event at all."""
-    from sales_data_pipeline_spark.streaming.events import (
-        funnel_stateful,
-        read_event_stream,
-    )
-
-    batch1 = [
-        (0, 0, 1, "view", 1.0),
-        (1, 100, 1, "click", 1.0),
-        (2, 0, 2, "view", 1.0),
-        (3, 0, 3, "purchase", 1.0),   # before any view/click: ignored
-        (4, 10, 3, "view", 1.0),
-        (5, 0, 4, "click", 1.0),      # click with no view: stage 0
-    ]
-    batch2 = [
-        (6, 200, 1, "purchase", 1.0),  # completes across the boundary
-        (7, 50, 2, "click", 1.0),      # stage 2
-        (8, 20, 3, "click", 1.0),
-        (9, 5, 3, "purchase", 1.0),    # ts 5 < click ts 20 at arrival: no
-    ]
-    src = tmp_path / "ev_funnel"
-    _write_events_with_ids(spark, str(src / "f1"), batch1)
-    time.sleep(1.1)
-    _write_events_with_ids(spark, str(src / "f2"), batch2)
-
-    stream = read_event_stream(spark, str(src), max_files_per_trigger=1)
-    q = (
-        funnel_stateful(stream)
-        .writeStream.format("memory")
-        .queryName("funnel")
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "ckpt_funnel"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    final = {}
-    for r in spark.sql("SELECT * FROM funnel").collect():
-        final[r.user_id] = r  # update mode: last write per user wins
-
-    assert final[1].stage == 3
-    assert final[1].t_purchase == dt.datetime(2024, 1, 1) + dt.timedelta(seconds=200)
-    assert final[2].stage == 2 and final[2].t_purchase is None
-    assert final[3].stage == 2  # purchase-before-click never counted
-    assert final[4].stage == 0 and final[4].t_view is None
-
-    # parity with the batch q60 over the identical in-order rows
-    # (q60 emits only users with >= 1 first-stage event)
-    import __spark_entry__ as entry
-
-    all_rows = [
-        (i, dt.datetime(2024, 1, 1) + dt.timedelta(seconds=s), u, et, v)
-        for (i, s, u, et, v) in batch1 + batch2
-    ]
-    ev = spark.createDataFrame(
-        all_rows,
-        "event_id long, ts timestamp, user_id long, event_type string, value double",
-    )
-    # q60 reads from parquet via table(); replicate its logic inline by
-    # calling the registered fn against a temp sf_dir
-    out = str(tmp_path / "sfdir")
-    ev.write.mode("overwrite").parquet(out + "/events.parquet")
-    batch = {
-        r.user_id: r
-        for r in entry.queries()["q60_funnel"](spark, out).collect()
-    }
-    for uid in (1, 2, 3):
-        assert final[uid].stage == batch[uid].stage_reached, uid
-    assert 4 not in batch  # no view -> not in the batch funnel either
-
-
-def test_funnel_stateful_rejects_duplicate_stages(spark):
-    from sales_data_pipeline_spark.streaming.events import funnel_stateful
-
-    df = spark.readStream.format("rate").load()
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="distinct"):
-        funnel_stateful(df, stages=("a", "a", "b"))
-
-
-def test_watermark_drops_late_rows_and_accounts_for_them(spark, tmp_path):
-    """A row arriving behind the watermark must be EXCLUDED from its
-    (already-finalized) window and show up in the engine's
-    dropped-by-watermark accounting — the observability a production
-    stream needs to distinguish 'no late data' from 'late data
-    silently discarded'."""
-    from sales_data_pipeline_spark.streaming.events import (
-        hourly_event_rollup,
-        read_event_stream,
-    )
-
-    src = tmp_path / "events"
-    # batch 1: two clicks in hour 0
-    _write_events(spark, str(src / "f1"), [
-        (0, 1, "click", 1.0), (60, 1, "click", 2.0),
-    ])
-    time.sleep(1.1)
-    # batch 2: hour 10 event -> watermark (3h) will become 7h
-    _write_events(spark, str(src / "f2"), [(10 * 3600, 2, "view", 5.0)])
-    time.sleep(1.1)
-    # batch 3: watermark from batch 2 takes effect -> hour-0 window is
-    # EVICTED and emitted here (a late row arriving while its window
-    # state is still live would legitimately merge, not drop)
-    _write_events(spark, str(src / "f3"), [(10 * 3600 + 60, 2, "view", 1.0)])
-    time.sleep(1.1)
-    # batch 4: a LATE click for the already-finalized hour 0
-    _write_events(spark, str(src / "f4"), [
-        (120, 1, "click", 100.0),            # behind watermark: dropped
-        (10 * 3600 + 120, 2, "view", 1.0),
-    ])
-    stream = read_event_stream(spark, str(src), max_files_per_trigger=1)
-    q = (
-        hourly_event_rollup(stream, watermark="3 hours")
-        .writeStream.format("memory")
-        .queryName("wm_rollup")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt_wm"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    rows = spark.sql(
-        "SELECT * FROM wm_rollup WHERE event_type = 'click'"
-    ).collect()
-    # hour-0 click window was finalized at value 3.0; the late 100.0
-    # never re-opens it
-    assert len(rows) == 1
-    assert rows[0].n_events == 2 and rows[0].total_value == 3.0
-    # and the drop is ACCOUNTED, not silent
-    dropped = sum(
-        op.get("numRowsDroppedByWatermark", 0)
-        for prog in q.recentProgress
-        for op in (prog["stateOperators"] or [])
-    )
-    assert dropped == 1
-
-
-def test_funnel_state_survives_rocksdb_store_swap(spark, tmp_path):
-    """The funnel's 3-long state must be store-agnostic too: the same
-    cross-batch completion scenario as the HDFS-store funnel test,
-    under RocksDBStateStoreProvider. Skips if the provider is absent."""
-    provider = (
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider"
-    )
-    try:
-        spark.sparkContext._jvm.java.lang.Class.forName(provider)
-    except Exception:
-        pytest.skip("RocksDB state store provider not in this build")
-
-    from sales_data_pipeline_spark.streaming.events import (
-        funnel_stateful,
-        read_event_stream,
-    )
-
-    src = tmp_path / "events"
-    _write_events_with_ids(spark, str(src / "f1"), [
-        (0, 0, 1, "view", 1.0), (1, 100, 1, "click", 1.0),
-    ])
-    time.sleep(1.1)
-    _write_events_with_ids(spark, str(src / "f2"), [
-        (2, 200, 1, "purchase", 1.0),
-    ])
-    old = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass", provider)
-    try:
-        stream = read_event_stream(spark, str(src), max_files_per_trigger=1)
-        q = (
-            funnel_stateful(stream)
-            .writeStream.format("memory")
-            .queryName("funnel_rocksdb")
-            .outputMode("update")
-            .option("checkpointLocation", str(tmp_path / "ckpt_fr"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        if old is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", old)
-    rows = spark.sql("SELECT * FROM funnel_rocksdb").collect()
-    final = max(rows, key=lambda r: r.stage)
-    assert final.stage == 3  # completed ACROSS the store-backed boundary
-    assert final.t_view is not None and final.t_purchase is not None
 
 
 # ---------------------------------------------------------------------------
@@ -1421,7 +299,11 @@ def test_debounce_stateful_matches_batch_across_boundary(spark, tmp_path):
     old = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
     spark.conf.set("spark.sql.streaming.stateStore.providerClass", provider)
     try:
-        stream = read_event_stream(spark, str(src), max_files_per_trigger=1)
+        stream = (
+            spark.readStream.schema(_EVENT_SCHEMA)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(str(src / "*"))
+        )
         q = (
             debounce_stateful(stream, cooldown_seconds=300)
             .writeStream.format("memory")
