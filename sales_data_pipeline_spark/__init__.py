@@ -8,17 +8,16 @@ PySpark DataFrame/SQL API so Catalyst + Tungsten own the physical plan:
 - ``session``   — SparkSession factory with scale-aware defaults (AQE,
   Arrow, adaptive shuffle sizing).
 - ``catalog``   — typed table registry over parquet star-schema data.
-- ``sources``   — contract-validated CSV, parquet, partitioned-JDBC readers.
+- ``sources``   — contract-validated CSV and JDBC readers.
 - ``operators`` — normalize (schema contract + extras folding), enrich
   (broadcast star joins), marts (group-sum + rank/incentive), dedup
   (exact / MinHash-LSH / SimHash / n-gram Jaccard), similarity (cosine
-  top-k, LSH ANN), text (lang-id, quality, tokens, fingerprint),
+  top-k, IVF, SRP-LSH near-dup), text (lang-id, quality, tokens, fingerprint),
   multimodal (binary columns + Arrow-batched UDF plumbing), windows
   (top-k per group, sessionize).
 - ``plans``     — the query catalog exposed to the driver via
   ``__spark_entry__`` (each query paired with an ANSI-SQL oracle).
-- ``streaming`` — incremental Structured Streaming variant of the batch
-  pipeline (file source, availableNow, foreachBatch reuse).
+- ``streaming`` — per-key debounce (q286).
 - ``pipeline``  — the end-to-end sales ETL (validate → normalize →
   enrich → marts → sinks) with an idempotent audit state machine.
 

@@ -6,7 +6,6 @@ explicit CLI over the library API, safe to invoke from cron/Airflow or
 spark-submit:
 
   python -m sales_data_pipeline_spark pipeline --input-dir ... --output-dir ...
-  python -m sales_data_pipeline_spark incremental --input-dir ... --output-dir ...
   python -m sales_data_pipeline_spark query q01_pricing_summary --sf-dir ...
   python -m sales_data_pipeline_spark list
   python -m sales_data_pipeline_spark lint q01_pricing_summary   # or --all
@@ -94,25 +93,6 @@ def _cmd_pipeline(args) -> int:
             }
         )
     )
-    return 0
-
-
-def _cmd_incremental(args) -> int:
-    from sales_data_pipeline_spark.streaming.incremental import (
-        IncrementalConfig,
-        run_incremental,
-    )
-
-    spark = _spark("sales-incremental")
-    cfg = IncrementalConfig(
-        input_dir=args.input_dir,
-        fact_dir=args.fact_dir or f"{args.output_dir}/_fact",
-        output_dir=args.output_dir,
-        checkpoint_dir=args.checkpoint_dir or f"{args.output_dir}/_checkpoint",
-    )
-    customer, store, team = _load_dims(spark, args.dims_dir)
-    run_incremental(spark, cfg, customer, store, team)
-    print(json.dumps({"output_dir": cfg.output_dir, "fact_dir": cfg.fact_dir}))
     return 0
 
 
@@ -346,14 +326,6 @@ def main(argv: list[str] | None = None) -> int:
     )
     sp.add_argument("--jdbc-driver", help="JDBC driver class for --jdbc-url")
     sp.set_defaults(fn=_cmd_pipeline)
-
-    si = sub.add_parser("incremental", help="run the streaming incremental ETL")
-    si.add_argument("--input-dir", required=True)
-    si.add_argument("--output-dir", required=True)
-    si.add_argument("--fact-dir")
-    si.add_argument("--checkpoint-dir")
-    si.add_argument("--dims-dir")
-    si.set_defaults(fn=_cmd_incremental)
 
     sq = sub.add_parser("query", help="run one catalog query and show rows")
     sq.add_argument("name")

@@ -61,8 +61,12 @@ def fold_extras_json(extra_cols: list[str], alias: str = "additional_column") ->
     Upgrade over the reference's lossy comma-join
     (reference: main.py:258 concat_ws(",", *extras)): a JSON object keeps
     key→value structure so extras remain queryable with get_json_object /
-    from_json instead of positional string surgery.
+    from_json instead of positional string surgery. Each extra is
+    referenced by its backtick-quoted name, so a header such as
+    ``promo.code`` is one column, not struct access, and stays the
+    JSON key.
     """
     if not extra_cols:
         return F.lit(None).cast("string").alias(alias)
-    return F.to_json(F.struct(*[F.col(c) for c in sorted(extra_cols)])).alias(alias)
+    quoted = [F.col("`" + c.replace("`", "``") + "`") for c in sorted(extra_cols)]
+    return F.to_json(F.struct(*quoted)).alias(alias)

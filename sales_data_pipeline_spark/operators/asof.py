@@ -16,34 +16,15 @@ Plan shape — ONE shuffle, no UDF, no per-key iteration:
   → keep left rows.
 The window sort co-sorts both sides once; cost is O(n log n) per key
 group, the same as the sort-merge join Spark would run for an equality
-join on (key).
-
-Skew: one hot key serializes its whole timeline through one task. Pass
-``coarse_bucket`` to salt the window key to (key, time_bucket): the
-timeline splits into bounded chunks that sort in parallel, and boundary
-correctness is restored by a carry-over pass — per (key, bucket) the
-latest right payload is aggregated (map-side combined, tiny), a
-running last-over-earlier-buckets window (one row per bucket, skew
-gone) computes each bucket's carry-in, and left rows with no in-bucket
-match coalesce to the carry-in. Rows from a strictly earlier bucket
-always satisfy right_ts < left_ts, so strict/non-strict semantics are
-decided purely within-bucket — the two paths return identical results
-(property-tested with one hot key).
+join on (key). One hot key serializes its whole timeline through one
+task.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import TimestampType
-
-
-def _time_bucket(ts: Column, dtype, coarse_bucket: int) -> Column:
-    """Bucket index: coarse_bucket is in SECONDS for timestamp columns,
-    in the column's own units otherwise."""
-    if isinstance(dtype, TimestampType):
-        return F.floor(F.unix_micros(ts) / F.lit(coarse_bucket * 1_000_000))
-    return F.floor(ts / F.lit(coarse_bucket))
 
 
 def asof_join(
@@ -55,7 +36,6 @@ def asof_join(
     right_payload: list[str],
     strict: bool = False,
     suffix: str = "_asof",
-    coarse_bucket: int | None = None,
 ) -> DataFrame:
     """LEFT ASOF join: latest right row with right_ts ≤ left_ts per key.
 
@@ -65,8 +45,7 @@ def asof_join(
     uses right_ts < left_ts (excludes simultaneous rows). Right payload
     columns come back as ``{col}{suffix}`` plus ``{right_ts}{suffix}``.
     Ties on right_ts resolve to the row that sorts last on the payload
-    struct (deterministic). ``coarse_bucket`` (seconds for timestamp
-    keys) salts hot keys — see module docstring."""
+    struct (deterministic)."""
     keys = [key] if isinstance(key, str) else list(key)
     pack = F.struct(*[F.col(k) for k in keys]) if len(keys) > 1 else F.col(keys[0])
     # side flag orders right rows before left rows at equal timestamps
@@ -97,56 +76,12 @@ def asof_join(
         *[F.lit(None).cast(left.schema[c].dataType).alias(c) for c in left.columns],
     ).unionByName(lf)
 
-    if coarse_bucket is None:
-        w = (
-            Window.partitionBy("__k")
-            .orderBy(F.col("__t"), F.col("__side"), F.col("__p"))
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-        matched = merged.withColumn("__last", F.last("__p", ignorenulls=True).over(w))
-    else:
-        ts_type = merged.schema["__t"].dataType
-        bucketed = merged.withColumn(
-            "__b", _time_bucket(F.col("__t"), ts_type, coarse_bucket)
-        )
-        # 1. in-bucket as-of: same window, salted partition key
-        w_in = (
-            Window.partitionBy("__k", "__b")
-            .orderBy(F.col("__t"), F.col("__side"), F.col("__p"))
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-        in_bucket = bucketed.withColumn(
-            "__last_in", F.last("__p", ignorenulls=True).over(w_in)
-        )
-        # 2. carry-over: latest right payload per (key, bucket) — tiny
-        # aggregate (map-side combined) — then a running last over
-        # STRICTLY EARLIER buckets on the one-row-per-bucket summary.
-        # Buckets present only on the left side must still receive a
-        # carry-in, so the summary spans every (key, bucket) seen.
-        right_bucket_max = (
-            bucketed.filter(F.col("__rowid").isNull())
-            .groupBy("__k", "__b")
-            .agg(F.max(F.struct(F.col("__t"), F.col("__p"))).alias("__m"))
-        )
-        all_buckets = bucketed.select("__k", "__b").distinct()
-        w_carry = (
-            Window.partitionBy("__k")
-            .orderBy("__b")
-            .rowsBetween(Window.unboundedPreceding, -1)
-        )
-        carry = (
-            all_buckets.join(right_bucket_max, ["__k", "__b"], "left")
-            .withColumn(
-                "__carry_p",
-                F.last("__m", ignorenulls=True).over(w_carry).getField("__p"),
-            )
-            .select("__k", "__b", "__carry_p")
-        )
-        # 3. in-bucket match wins, else carry-in; join keys match the
-        # window partitioning so the exchange is reused, not repeated
-        matched = in_bucket.join(carry, ["__k", "__b"], "left").withColumn(
-            "__last", F.coalesce(F.col("__last_in"), F.col("__carry_p"))
-        )
+    w = (
+        Window.partitionBy("__k")
+        .orderBy(F.col("__t"), F.col("__side"), F.col("__p"))
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    matched = merged.withColumn("__last", F.last("__p", ignorenulls=True).over(w))
 
     out = matched.filter(F.col("__rowid").isNotNull()).select(
         *left.columns,
@@ -175,7 +110,6 @@ def asof_join_nearest(
     right_ts: str,
     right_payload: list[str],
     suffix: str = "_asof",
-    coarse_bucket: int | None = None,
 ) -> DataFrame:
     """NEAREST as-of join (pandas merge_asof direction='nearest'
     semantics): each left row attaches the right row with the smallest
@@ -188,18 +122,18 @@ def asof_join_nearest(
 
     ``left_id`` must be a unique left key — it re-aligns the two
     passes' outputs (3 keyed shuffles total: backward, forward, the
-    id join; each individually skew-guardable via ``coarse_bucket``).
+    id join).
     """
     back = asof_join(
         left, right, key, left_ts, right_ts, right_payload,
-        strict=False, suffix="__b", coarse_bucket=coarse_bucket,
+        strict=False, suffix="__b",
     )
     lneg = _negated(left, left_ts, "__lnt")
     rneg = _negated(right, right_ts, "__rnt")
     fwd = asof_join(
         lneg, rneg, key, "__lnt", "__rnt",
         [*right_payload, right_ts],
-        strict=False, suffix="__f", coarse_bucket=coarse_bucket,
+        strict=False, suffix="__f",
     ).drop("__lnt")
 
     dtype = left.schema[left_ts].dataType

@@ -249,59 +249,6 @@ def domain_cap(
     )
 
 
-def temperature_mixture(
-    df: DataFrame,
-    domain_col: str = "source",
-    size_col: str | None = None,
-    alpha: float = 0.5,
-) -> DataFrame:
-    """Temperature-based domain sampling shares — the α-smoothing rule
-    multilingual/multi-domain LLM training uses (mBERT/XLM-R style:
-    p_i ∝ n_i^α): α=1 keeps natural proportions, α=0 forces uniform,
-    between the two it UP-samples small domains without letting any
-    domain dominate — the knob q76's explicit target_shares table
-    hard-codes, derived instead of dictated.
-
-    Returns (domain, n_units, unit_share, temp_share, mix_weight)
-    with mix_weight = temp_share / unit_share (the factor a
-    uniform-over-units sampler applies). Numerics: n_units are exact
-    BIGINTs; pow(n, α) is one libm double per DOMAIN (dozens of rows —
-    the only inexact step, confined to the aggregate, same contract as
-    q143's regression outputs: consumers see rounded shares). Plan:
-    one map-side-combined groupBy to |domains| rows, then a window
-    over that aggregate — never over the data."""
-    from pyspark.sql import Window as W
-
-    unit = F.col(size_col) if size_col else F.lit(1)
-    agg = df.groupBy(F.col(domain_col).alias("domain")).agg(
-        F.sum(unit).cast("bigint").alias("n_units")
-    )
-    w = W.partitionBy()
-    powed = agg.withColumn("p", F.pow(F.col("n_units").cast("double"), F.lit(alpha)))
-    # mix_weight comes from the UNROUNDED ratios: deriving it from the
-    # rounded display shares both loses precision and divides by zero
-    # for any domain whose share rounds to 0 at 6 decimals (exactly the
-    # tiny domains α-sampling exists to up-weight; ANSI mode makes that
-    # a query-killing error, not a null)
-    # Zero-size domains (every doc's size_col is 0) make u_raw 0 and,
-    # if ALL domains are empty, the TOTALS are 0 too: under Spark 4's
-    # default ANSI mode a bare ratio then kills the query with
-    # DIVIDE_BY_ZERO (SQLSTATE 22012) instead of producing a null. The
-    # raw shares themselves must therefore be try_divide — a try_divide
-    # wrapped around a bare child division still evaluates (and raises
-    # in) the child first. NULL shares mean an empty domain has no
-    # defined shares; non-empty domains are untouched, and mix_weight
-    # reuses the same raw columns (NULL-propagating through try_divide).
-    u_raw = F.try_divide(F.col("n_units"), F.sum("n_units").over(w))
-    t_raw = F.try_divide(F.col("p"), F.sum("p").over(w))
-    return (
-        powed.withColumn("unit_share", F.round(u_raw, 6))
-        .withColumn("temp_share", F.round(t_raw, 6))
-        .withColumn("mix_weight", F.round(F.try_divide(t_raw, u_raw), 6))
-        .select("domain", "n_units", "unit_share", "temp_share", "mix_weight")
-    )
-
-
 def _isqrt(x: Column) -> Column:
     """Exact integer square root of a non-negative BIGINT column.
 
@@ -334,10 +281,12 @@ def temperature_mixture_sqrt(
     size_col: str | None = None,
     scale: int = 100_000_000,
 ) -> DataFrame:
-    """α=0.5 temperature mixture with EXACT cross-engine numerics —
-    the oracle-tier sibling of :func:`temperature_mixture` (which
-    takes any α through libm pow, whose last bits are not pinned
-    across engines).
+    """Temperature-based domain sampling shares at α=1/2, with EXACT
+    cross-engine numerics — the α-smoothing rule multilingual/multi-
+    domain LLM training uses (mBERT/XLM-R style: p_i ∝ n_i^α), which
+    UP-samples small domains without letting any domain dominate. A
+    general α would need libm pow, whose last bits are not pinned
+    across engines.
 
     For α=1/2, n^α = √n, and √ IS exactly computable in integers:
     p_i = isqrt(n_i · scale) is a BIGINT (a fixed-point √n with
@@ -352,7 +301,8 @@ def temperature_mixture_sqrt(
     (100 TB domains) drop scale; precision degrades gracefully.
     Plan: one map-side-combined groupBy to |domains| rows, windows
     only over that aggregate. Empty domains (n_units = 0) get NULL
-    shares via try_divide, same contract as the pow variant."""
+    shares via try_divide: under ANSI mode a bare ratio would raise
+    DIVIDE_BY_ZERO when every domain is empty."""
     from pyspark.sql import Window as W
 
     unit = F.col(size_col) if size_col else F.lit(1)

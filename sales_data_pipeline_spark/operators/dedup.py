@@ -101,7 +101,7 @@ def incremental_dedup(
 
     Both shuffles are keyed by the 128-bit fingerprint and linear. At
     scale, write the history index bucketed by ``fp_col``
-    (operators/scale.write_bucketed): the anti join then reads history
+    (``DataFrameWriter.bucketBy``): the anti join then reads history
     exchange-free, so ingesting a batch shuffles ONLY the batch.
     Returns the surviving new rows (all original columns)."""
     batch = new_docs.withColumn("__fp", fingerprint(text_col))
@@ -617,12 +617,11 @@ def cdc_chunks(
     id_col: str = "doc_id",
     text_col: str = "text",
     window: int = 8,
-    hash_fn: str = "md5",
 ) -> DataFrame:
     """Split each document into content-defined chunks (rsync/FastCDC
     family, public technique): a chunk boundary falls AFTER every
     position i whose ``window``-byte context hashes into the cut class
-    (here: first hex digit of the hash == '0', expected chunk length
+    (here: first hex digit of its md5 == '0', expected chunk length
     16·window... i.e. 1/16 cut probability). Because boundaries depend
     only on LOCAL content, an insertion early in a document shifts every
     byte offset but re-synchronizes the chunk stream a window later —
@@ -634,23 +633,18 @@ def cdc_chunks(
     document order. Pure codegen: positions via sequence+filter,
     slicing via transform+substring; no UDFs, no shuffle (map-only).
 
-    ``hash_fn``: 'md5' (default) keeps the boundary rule byte-portable
-    to the DuckDB oracle; 'xxhash64' is the production fast path (same
-    plan, ~an order cheaper per window — use at 100 TB where the
-    boundary hash dominates scan cost). Window hashing is O(len·window)
-    per doc either way; a true gear/rolling hash is O(len) and worth a
-    native fn if this op ever dominates a profile."""
+    md5 keeps the boundary rule byte-portable to the DuckDB oracle
+    (q90). Window hashing is O(len·window) per doc; a true gear/rolling
+    hash is O(len) and worth a native fn if this op ever dominates a
+    profile."""
     t = F.col(text_col)
     length = F.length(t)
-    if hash_fn == "md5":
-        cut = lambda i: F.substring(F.md5(F.substring(t, i, window)), 1, 1) == "0"  # noqa: E731
-    elif hash_fn == "xxhash64":
-        cut = lambda i: (F.xxhash64(F.substring(t, i, window)) % 16) == 0  # noqa: E731
-    else:
-        raise ValueError(f"unknown hash_fn {hash_fn!r}")
     positions = F.when(
         length >= window,
-        F.filter(F.sequence(F.lit(1), length - window + 1), cut),
+        F.filter(
+            F.sequence(F.lit(1), length - window + 1),
+            lambda i: F.substring(F.md5(F.substring(t, i, window)), 1, 1) == "0",
+        ),
     ).otherwise(F.array().cast("array<int>"))
     cuts = F.array_sort(
         F.array_distinct(
@@ -699,7 +693,6 @@ def duplicated_chunks(
     text_col: str = "text",
     window: int = 8,
     min_docs: int = 2,
-    hash_fn: str = "md5",
 ) -> DataFrame:
     """Cross-document duplicated chunk census over cdc_chunks: every
     chunk whose content occurs in >= min_docs distinct documents, with
@@ -707,7 +700,7 @@ def duplicated_chunks(
     exact_dedup (whole doc) and remove_boilerplate (fixed paragraphs).
     ONE keyed shuffle on chunk_hash; chunk text itself never shuffles
     (only the 16-byte hash + counts)."""
-    ch = cdc_chunks(df, id_col, text_col, window=window, hash_fn=hash_fn)
+    ch = cdc_chunks(df, id_col, text_col, window=window)
     return (
         ch.groupBy("chunk_hash")
         .agg(
@@ -788,26 +781,6 @@ def fuzzy_contamination_pairs(
         )
         .filter(F.col("jaccard") >= threshold)
     )
-
-
-def fuzzy_decontaminate(
-    corpus: DataFrame,
-    benchmark: DataFrame,
-    corpus_id: str = "doc_id",
-    bench_id: str = "bench_id",
-    text_col: str = "text",
-    threshold: float = 0.6,
-    **lsh_kwargs,
-) -> DataFrame:
-    """Corpus minus fuzzy benchmark hits: anti-join on the flagged id
-    set from fuzzy_contamination_pairs. LSH recall < 1 only ever KEEPS
-    a contaminated doc (never drops a clean one — precision 1.0), the
-    conservative failure direction for a removal filter."""
-    flagged = fuzzy_contamination_pairs(
-        corpus, benchmark, corpus_id, bench_id, text_col,
-        threshold=threshold, **lsh_kwargs,
-    ).select(corpus_id).distinct()
-    return corpus.join(flagged, corpus_id, "left_anti")
 
 
 def minhash_index(

@@ -4,10 +4,9 @@ reference lacks (its JDBC sink is full-table idempotent overwrite:
 At 100 TB you cannot rewrite the world per batch; you apply a small
 change-batch against a big base.
 
-Both operators are built around ONE broadcast join: a CDC/change batch
-is small by definition, so the base table — the 100 TB side — is never
-shuffled. ``broadcast_changes=False`` opts out for the rare huge-batch
-case (AQE then picks the strategy from runtime sizes).
+``scd2_merge`` and ``apply_cdc_log`` are each built around ONE
+broadcast join: a CDC/change batch is small by definition, so the base
+table — the 100 TB side — is never shuffled.
 """
 
 from __future__ import annotations
@@ -18,33 +17,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def _marker(changes: DataFrame, keys: Sequence[str], broadcast: bool) -> DataFrame:
-    m = changes.select(*keys).distinct().withColumn("__matched", F.lit(1))
-    return F.broadcast(m) if broadcast else m
-
-
-def merge_upsert(
-    base: DataFrame,
-    changes: DataFrame,
-    keys: Sequence[str],
-    broadcast_changes: bool = True,
-) -> DataFrame:
-    """Latest-wins MERGE: change rows replace base rows with the same
-    key; unmatched base rows pass through; new keys insert. Columns of
-    ``changes`` must match ``base`` by name.
-
-    Plan: one left_anti join of base against the change keys + union —
-    the anti join's build side is the broadcast change batch, so base
-    streams through map-side with no shuffle anywhere (anti joins are
-    insensitive to build-side duplicates, so the keys need no distinct
-    aggregation either: the whole merge is shuffle-free)."""
-    key_df = changes.select(*keys)
-    keep = base.join(
-        F.broadcast(key_df) if broadcast_changes else key_df,
-        list(keys),
-        "left_anti",
+def _marker(changes: DataFrame, keys: Sequence[str]) -> DataFrame:
+    return F.broadcast(
+        changes.select(*keys).distinct().withColumn("__matched", F.lit(1))
     )
-    return keep.unionByName(changes)
 
 
 def snapshot_diff(
@@ -120,7 +96,6 @@ def scd2_merge(
     current_col: str = "is_current",
     base_version: int = 0,
     batch_version: int = 1,
-    broadcast_changes: bool = True,
 ) -> DataFrame:
     """History-keeping (SCD type-2) MERGE: every base row is retained —
     rows superseded by the change batch are closed out
@@ -134,7 +109,7 @@ def scd2_merge(
     Plan: one broadcast left join (marker) + union; the 100 TB base is
     read once and never shuffled."""
     tagged = (
-        base.join(_marker(changes, keys, broadcast_changes), list(keys), "left")
+        base.join(_marker(changes, keys), list(keys), "left")
         .withColumn(version_col, F.lit(base_version).cast("int"))
         .withColumn(current_col, F.col("__matched").isNull())
         .drop("__matched")
@@ -151,7 +126,6 @@ def apply_cdc_log(
     keys: Sequence[str],
     op_col: str = "op",
     version_cols: Sequence[str] = ("version",),
-    broadcast_log: bool = True,
 ) -> DataFrame:
     """Apply an ordered change-data-capture log (op ∈ {I,U,D}) onto a
     base snapshot: per key, the HIGHEST-version log row wins — I/U
@@ -174,8 +148,7 @@ def apply_cdc_log(
     max_by aggregation (map-side combinable); the collapsed set —
     small relative to base in any realistic CDC batch — broadcasts
     into one anti join (evict touched keys from base) + one union of
-    the surviving upserts. Base itself never shuffles, the merge_upsert
-    contract."""
+    the surviving upserts. Base itself never shuffles."""
     payload = [c for c in base.columns]
     # Column-API max_by (never SQL-text interpolation of names: a
     # payload column like `order value` or `from` would break or
@@ -192,84 +165,5 @@ def apply_cdc_log(
     )
     finals = collapsed.filter(F.col(op_col) != "D").select(*payload)
     touched = collapsed.select(*keys)
-    keep = base.join(
-        F.broadcast(touched) if broadcast_log else touched,
-        list(keys),
-        "left_anti",
-    )
+    keep = base.join(F.broadcast(touched), list(keys), "left_anti")
     return keep.unionByName(finals)
-
-
-def incremental_agg_refresh(
-    old_agg: DataFrame,
-    delta_rows: DataFrame,
-    keys: Sequence[str],
-    sum_cols: Sequence[str],
-    count_col: str | None = None,
-    drop_empty: bool = True,
-    broadcast_delta: bool = True,
-    new_keys: bool = True,
-) -> DataFrame:
-    """Materialized-aggregate maintenance: fold a (small) batch of new
-    fact rows into an existing grouped-SUM aggregate WITHOUT
-    recomputing it — the incremental-view-maintenance move that turns
-    "rebuild the 100 TB mart nightly" into "merge tonight's partition".
-    Works for any commutative-monoid measures (SUM/COUNT here);
-    RETRACTIONS are just negative delta rows (a correction batch
-    subtracts), which plain re-aggregation cannot express without a
-    full rebuild.
-
-    Plan (the apply_cdc_log discipline): the delta collapses to one
-    row per touched key (map-side combinable), then the OLD
-    AGGREGATE'S ROWS NEVER SHUFFLE — touched groups update via a
-    broadcast LEFT join (measure = old + delta), untouched groups
-    stream through unchanged, and delta-only keys append via an anti
-    join of the tiny delta against the old KEY PROJECTION (the old
-    side is NOT broadcast there — collecting a 10⁸-group mart's keys
-    to the driver is exactly the inversion the small-side contract
-    forbids; the anti join shuffles pruned keys only, and AQE picks
-    the strategy. Pass ``new_keys=False`` when the delta is known to
-    touch only existing groups — e.g. a late-data correction batch —
-    and that probe disappears entirely).
-
-    ``count_col``: if the column EXISTS in ``delta_rows`` it is SUMMED
-    (so retraction batches carry explicit ±counts, e.g. −1 per
-    retracted row); otherwise each delta row counts +1. With
-    ``drop_empty`` a group whose count reaches 0 disappears — the
-    retraction-to-deletion rule. Exactness: decimal/integer measures
-    stay exact under + (the engine's money convention); do NOT use
-    this for non-monoid measures (avg must be carried as sum+count)."""
-    if not sum_cols and count_col is None:
-        raise ValueError("nothing to maintain: no sum_cols, no count_col")
-    aggs = [F.sum(c).alias(c) for c in sum_cols]
-    if count_col is not None:
-        if count_col in delta_rows.columns:
-            aggs.append(F.sum(count_col).cast("bigint").alias(count_col))
-        else:
-            aggs.append(F.count(F.lit(1)).cast("bigint").alias(count_col))
-    d = delta_rows.groupBy(*keys).agg(*aggs)
-    d_b = F.broadcast(d) if broadcast_delta else d
-    measures = list(sum_cols) + ([count_col] if count_col else [])
-    d_renamed = d_b.select(
-        *keys, *[F.col(c).alias(f"__d_{c}") for c in measures]
-    )
-    updated = old_agg.join(d_renamed, list(keys), "left").select(
-        *keys,
-        *[
-            (
-                F.coalesce(F.col(c), F.lit(0))
-                + F.coalesce(F.col(f"__d_{c}"), F.lit(0))
-            ).alias(c)
-            for c in measures
-        ],
-    )
-    if new_keys:
-        fresh = d.join(
-            old_agg.select(*keys), list(keys), "left_anti"
-        ).select(*keys, *measures)
-        out = updated.unionByName(fresh)
-    else:
-        out = updated
-    if count_col is not None and drop_empty:
-        out = out.filter(F.col(count_col) != 0)
-    return out

@@ -33,8 +33,6 @@ DECODED_SCHEMA = (
     "media_id long, byte_len long, checksum string, fake_width int, fake_height int"
 )
 FRAME_SCHEMA = "media_id long, frame_no int, frame_bytes binary"
-FEATURE_DIM = 16
-FEATURE_SCHEMA = f"media_id long, features array<double>"
 
 
 def attach_binary_payload(
@@ -207,61 +205,6 @@ def decode_media(df: DataFrame, codec: str = "fake") -> DataFrame:
             )
 
     return df.select("media_id", "payload").mapInPandas(_decode_batch, DECODED_SCHEMA)
-
-
-def extract_features(df: DataFrame) -> DataFrame:
-    """Feature extraction stub: 16-bin byte histogram, L1-normalized —
-    a stand-in for an embedding model, with the real Arrow batch shape."""
-
-    def _featurize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            feats = []
-            for b in pdf["payload"]:
-                arr = np.frombuffer(bytes(b), dtype=np.uint8)
-                hist = np.bincount(arr >> 4, minlength=FEATURE_DIM).astype("float64")
-                total = hist.sum()
-                feats.append((hist / total if total else hist).tolist())
-            yield pd.DataFrame({"media_id": pdf["media_id"], "features": feats})
-
-    return df.select("media_id", "payload").mapInPandas(_featurize, FEATURE_SCHEMA)
-
-
-RESIZED_SCHEMA = "media_id long, width int, height int, pixels binary"
-
-
-def resize_media(df: DataFrame, width: int = 32, height: int = 32) -> DataFrame:
-    """Resize stub with the real Arrow batch shape: interpret the payload
-    as a 1-byte-per-pixel row-major 'image' (fake_width from
-    decode_media's convention) and nearest-neighbor sample it to
-    (width, height). A real implementation swaps the numpy sampling for
-    PIL/cv2 on the decoded raster; schema, batching and output size
-    contract (exactly width·height bytes per row) stay identical."""
-
-    def _resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            out = []
-            for b in pdf["payload"]:
-                raw = np.frombuffer(bytes(b), dtype=np.uint8)
-                src_w = 64 + len(raw) % 577  # decode_media's fake width
-                src_h = max(len(raw) // src_w, 1)
-                grid = np.resize(raw, (src_h, src_w))  # pad by repetition
-                ys = (np.arange(height) * src_h // height).clip(0, src_h - 1)
-                xs = (np.arange(width) * src_w // width).clip(0, src_w - 1)
-                out.append(grid[np.ix_(ys, xs)].tobytes())
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "width": pd.array([width] * len(out), dtype="int32"),
-                    "height": pd.array([height] * len(out), dtype="int32"),
-                    "pixels": out,
-                }
-            )
-
-    return df.select("media_id", "payload").mapInPandas(_resize, RESIZED_SCHEMA)
 
 
 def sample_frames(df: DataFrame, frame_size: int = 256, stride: int = 2) -> DataFrame:

@@ -8,15 +8,12 @@ lake pipeline profiles every load and alerts on drift. This is the
 Deequ/`ANALYZE TABLE`-shaped primitive, expressed as ONE aggregation
 job over the table.
 
-Scale notes: with ``exact_distinct=True`` Spark plans the multiple
-COUNT(DISTINCT) via a single Expand — each input row is replicated
-(#distinct-aggs + 1)× map-side with a grouping id, still one pass over
-the data and one shuffle round, but the expansion factor is the column
-count. That is the honest price of exact cardinalities and it is fine
-for scheduled profiling; at 100 TB interactive use flip
-``exact_distinct=False`` and every column's cardinality comes from an
-HLL±5% partial in one non-expanded pass (the catalog query keeps exact
-so DuckDB can hash-match it).
+Scale notes: Spark plans the multiple COUNT(DISTINCT) via a single
+Expand — each input row is replicated (#distinct-aggs + 1)× map-side
+with a grouping id, still one pass over the data and one shuffle round,
+but the expansion factor is the column count. That is the honest price
+of exact cardinalities, which the catalog query needs so DuckDB can
+hash-match it, and it is fine for scheduled profiling.
 """
 
 from __future__ import annotations
@@ -30,7 +27,6 @@ from pyspark.sql import functions as F
 def profile_table(
     df: DataFrame,
     cols: Sequence[str] | None = None,
-    exact_distinct: bool = True,
 ) -> DataFrame:
     """Per-column profile in long form: (col_name, n_rows, n_null,
     n_distinct, min_val, max_val), one output row per profiled column.
@@ -52,12 +48,11 @@ def profile_table(
     aggs = [F.count(F.lit(1)).cast("bigint").alias("__n")]
     for c in cols:
         col = F.col(c)
-        nd = F.count_distinct(col) if exact_distinct else F.approx_count_distinct(col)
         aggs += [
             F.coalesce(F.sum(col.isNull().cast("bigint")), F.lit(0))
             .cast("bigint")
             .alias(f"__null_{c}"),
-            nd.cast("bigint").alias(f"__nd_{c}"),
+            F.count_distinct(col).cast("bigint").alias(f"__nd_{c}"),
             F.min(col).cast("string").alias(f"__min_{c}"),
             F.max(col).cast("string").alias(f"__max_{c}"),
         ]

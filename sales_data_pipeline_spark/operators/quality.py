@@ -181,17 +181,12 @@ def remove_boilerplate(
     text_col: str = "text",
     chunk_size: int = 4,
     min_docs: int = 2,
-    segmenter: str = "tokens",
-    paragraph_delim: str = "\n\n",
 ) -> DataFrame:
     """Corpus-level boilerplate removal (the CCNet/RefinedWeb paragraph-
     dedup shape): drop every segment whose text occurs in ≥ ``min_docs``
     DISTINCT documents — headers, footers, license blocks, template spam
     — then reassemble each document from its surviving segments in order.
-
-    ``segmenter='paragraphs'`` splits on ``paragraph_delim`` (what real
-    web corpora dedup on); the default ``'tokens'`` uses deterministic
-    ``chunk_size``-token windows for structure-less documents.
+    Segments are deterministic ``chunk_size``-token windows.
 
     Output per input doc (docs whose every chunk was boilerplate are
     kept with empty clean text — the caller decides whether to drop
@@ -211,17 +206,11 @@ def remove_boilerplate(
          count(*) still sees all of them; array_sort for deterministic
          order, concat_ws. No second per-doc aggregation, no window, no
          per-doc Python."""
-    from sales_data_pipeline_spark.operators.text import paragraph_chunks, token_chunks
+    from sales_data_pipeline_spark.operators.text import token_chunks
 
-    if segmenter == "tokens":
-        segs = token_chunks(text_col, size=chunk_size)
-    elif segmenter == "paragraphs":
-        segs = paragraph_chunks(text_col, delim=paragraph_delim)
-    else:
-        raise ValueError(f"segmenter must be 'tokens' or 'paragraphs', got {segmenter!r}")
     chunks = df.select(
         F.col(id_col).alias("doc"),
-        F.inline(segs),
+        F.inline(token_chunks(text_col, size=chunk_size)),
     ).select("doc", "chunk_id", "chunk", F.md5("chunk").alias("k"))
     freq = chunks.groupBy("k").agg(F.count_distinct("doc").alias("n_docs"))
     tagged = chunks.join(freq, "k")
@@ -240,7 +229,7 @@ def remove_boilerplate(
             F.size("__kept").cast("bigint").alias("n_kept"),
             (F.col("n_chunks") - F.size("__kept")).cast("bigint").alias("n_dropped"),
             F.concat_ws(
-                " " if segmenter == "tokens" else paragraph_delim,
+                " ",
                 F.transform(F.array_sort("__kept"), lambda x: x["chunk"]),
             ).alias("clean_text"),
         )

@@ -1,7 +1,7 @@
 """Skew & co-location tools for the 100 TB regime.
 
 The reference runs everything through default hash shuffles (its dims
-are ≤30 rows — nothing can skew, SURVEY §6). At real scale three
+are ≤30 rows — nothing can skew, SURVEY §6). At real scale two
 failure modes appear that these helpers address:
 
 - ``salted_agg``: a hot group key (one customer with 10⁹ rows) turns a
@@ -16,11 +16,6 @@ failure modes appear that these helpers address:
   fits memory×n_salt but not the broadcast budget. (When it DOES fit
   the broadcast budget, broadcast; when AQE's skew-join split is
   enough, do nothing — this is the manual tool for the worst cases.)
-- ``write_bucketed`` / ``read_bucketed``: pre-shuffle once at write
-  time, join shuffle-free forever after. Both sides bucketed by the
-  join key into the same bucket count ⇒ SortMergeJoin with NO Exchange
-  (asserted in tests). At 100 TB this converts every recurring
-  fact⋈fact join from a full network shuffle into a local merge.
 
 Salts are deterministic (xxhash64 of the whole row's key columns — no
 rand()), so retried tasks produce identical output: a requirement for
@@ -29,7 +24,7 @@ exactly-once sinks and AQE replans.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 _ALGEBRAIC = {"sum", "count", "min", "max"}
@@ -246,29 +241,6 @@ def banded_interval_join(
     )
 
 
-def write_bucketed(
-    df: DataFrame,
-    table_name: str,
-    bucket_col: str,
-    n_buckets: int = 32,
-    sort: bool = True,
-) -> None:
-    """Persist as a bucketed (and bucket-sorted) managed table: the
-    one-time shuffle that makes every later join/agg on ``bucket_col``
-    shuffle-free (Exchange-less SortMergeJoin / partial-only agg)."""
-    writer = df.write.mode("overwrite").bucketBy(n_buckets, bucket_col)
-    if sort:
-        writer = writer.sortBy(bucket_col)
-    writer.saveAsTable(table_name)
-
-
-def read_bucketed(spark: SparkSession, table_name: str) -> DataFrame:
-    """Read back a bucketed table (bucket metadata comes from the
-    catalog; the scan reports outputPartitioning = HashPartitioning on
-    the bucket column, which is what removes the join Exchange)."""
-    return spark.table(table_name)
-
-
 def zorder_key(col_a: str, col_b: str, bits: int = 16) -> Column:
     """Morton/Z-order key: bit-interleave the low ``bits`` bits of two
     non-negative int columns (a pure codegen expression — 2·bits
@@ -435,93 +407,6 @@ def skew_report(
     )
 
 
-def _bloom_positions(col: Column, n_hashes: int, num_bits: int) -> list[Column]:
-    """k independent bit positions per value: xxhash64 seeded by the
-    hash index (the standard k-hash construction), modulo the bit width.
-    JVM built-ins only — evaluated inside codegen on both build and
-    probe sides."""
-    return [
-        F.pmod(F.xxhash64(col, F.lit(i)), F.lit(num_bits)) for i in range(n_hashes)
-    ]
-
-
-def bloom_semi_filter(
-    fact: DataFrame,
-    fact_col: str,
-    keys: DataFrame,
-    key_col: str,
-    num_bits: int = 1 << 20,
-    n_hashes: int = 5,
-) -> DataFrame:
-    """Bloom-filter pre-join pruning: drop fact rows whose key cannot
-    possibly appear in ``keys`` BEFORE the real join's shuffle — the
-    classic 100 TB move when the key side is too big to broadcast as an
-    exact set but its membership fits a few hundred KB of bits (Bloom
-    1970, public construction; the same idea behind Spark's internal
-    runtime row-group filtering, which only fires under narrow
-    conditions — this operator makes it explicit and composable).
-
-    Semantics: returns a SUPERSET of the exact left-semi join (bloom
-    filters have false positives, never false negatives — property-
-    tested), so it composes with the real join afterwards: correctness
-    unchanged, the shuffle just moves ~fp-rate extra rows instead of
-    the whole fact. NULL keys are dropped (a semi join drops them too).
-
-    Build: ONE pass over ``keys`` — k hash positions per key (codegen),
-    positions grouped into 64-bit words by a bit_or aggregation
-    (mergeable partials, so the build itself never funnels raw keys
-    anywhere), and the ≤ num_bits/64 words collected once into a plain
-    long array shipped to the probe side as a literal (num_bits=2²⁰ →
-    16 K longs ≈ 128 KB, broadcast-var cost profile). Probe: k
-    element_at + bit tests per row, fully inside codegen — no UDF, no
-    join. False-positive rate ≈ (1 − e^(−k·n/m))^k; at the defaults
-    (m=2²⁰, k=5) that is < 1% up to n ≈ 100k distinct keys — size m at
-    ~10–15 bits per expected key. Probe values are cast to the key
-    column's type first: xxhash64 of the same value at different
-    widths hashes differently, which would turn false positives into
-    false NEGATIVES."""
-    ktype = keys.schema[key_col].dataType
-    n_words = (num_bits + 63) // 64
-    pos = F.explode(
-        F.array(*_bloom_positions(F.col(key_col), n_hashes, num_bits))
-    ).alias("p")
-    words = (
-        keys.filter(F.col(key_col).isNotNull())
-        .select(pos)
-        .selectExpr(
-            "cast(p / 64 as int) as w",
-            "shiftleft(1L, cast(p % 64 as int)) as b",
-        )
-        .groupBy("w")
-        .agg(F.expr("bit_or(b)").alias("bits"))
-        .collect()
-    )
-    arr = [0] * n_words
-    for r in words:
-        arr[r.w] = r.bits
-    # pin the literal's element type: PySpark infers array<int> when
-    # every word VALUE happens to fit 32 bits (tiny key sets), and
-    # bit_get's valid position range follows the ARGUMENT TYPE — an
-    # int-typed word makes any probe position >= 32 raise
-    # BIT_POSITION_RANGE (found by the hypothesis no-false-negative
-    # property on a 1-key filter). Words are 64-bit by construction.
-    blob = F.lit(arr).cast("array<bigint>")
-    probed = fact.filter(F.col(fact_col).isNotNull())
-    probe_val = F.col(fact_col).cast(ktype)
-    tests = []
-    for i, p in enumerate(_bloom_positions(probe_val, n_hashes, num_bits)):
-        probed = probed.withColumn(
-            f"__bw{i}", F.element_at(blob, (p / 64).cast("int") + 1)
-        ).withColumn(f"__bp{i}", (p % 64).cast("int"))
-        tests.append(F.expr(f"bit_get(__bw{i}, __bp{i}) = 1"))
-    cond = tests[0]
-    for t in tests[1:]:
-        cond = cond & t
-    return probed.filter(cond).drop(
-        *[f"__bw{i}" for i in range(n_hashes)], *[f"__bp{i}" for i in range(n_hashes)]
-    )
-
-
 def grouped_running_sum(
     df: DataFrame,
     group_cols: list[str],
@@ -608,7 +493,6 @@ def distributed_rank(
     descending: bool = True,
     n_buckets: int = 32,
     with_total_col: str | None = None,
-    persist: bool = False,
 ) -> DataFrame:
     """``row_number() OVER (ORDER BY signal [DESC], id)`` with NO
     single-partition stage anywhere in the plan — the two-phase
@@ -658,21 +542,6 @@ def distributed_rank(
     signal is compared as DOUBLE, so two inputs that differ only beyond
     2^53 precision tie here but not in a decimal-ordered window —
     integral signals stay exact to 2^53."""
-    # persist is OPT-IN (r13, reverting r12's unconditional persist):
-    # three consumers do walk this subtree (bounds aggregate, bucketed
-    # window input, per-bucket counts), but when the input pipeline
-    # ends in an aggregation — every bench caller: q287's BM25 groupBy,
-    # q285's signal ranks — Spark's ReusedExchange already dedups the
-    # expensive pre-shuffle work across consumers, and the persist's
-    # materialization barrier + MEMORY_AND_DISK round-trip measured
-    # SLOWER (q287: 1.47× over baseline warm, PERF_r12). Callers whose
-    # input is a heavy exchange-free map pipeline (a raw corpus scan
-    # scored in place, re-scanned 3× otherwise) opt in; the cache
-    # registers in the dedup registry (release_caches() frees it).
-    if persist:
-        from sales_data_pipeline_spark.operators.dedup import _persist
-
-        df = _persist(df)
     ordv = F.col(signal_col).cast("double")
     if descending:
         ordv = -ordv

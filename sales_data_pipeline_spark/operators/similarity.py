@@ -8,9 +8,10 @@ Three tiers, same output shape:
   (zip_with/aggregate — no Python). Right answer for |Q| ≤ thousands.
 - ``embedding_neardup_pairs``: exact all-pairs ≥ threshold. Quadratic;
   the verification oracle for the approximate path at test scale.
-- ``lsh_ann`` / ``srp_signatures``: signed-random-projection LSH for the
-  HIGH-similarity regime (near-duplicate detection, cos ≥ ~0.85, where
-  bucket-collision probability (1-θ/π)^bits stays useful). Deterministic
+- ``embedding_neardup_lsh`` / ``knn_graph`` over ``srp_signatures``:
+  signed-random-projection LSH for the HIGH-similarity regime
+  (near-duplicate detection, cos ≥ ~0.85, where bucket-collision
+  probability (1-θ/π)^bits stays useful). Deterministic
   pseudo-random hyperplanes are derived from xxhash64(table, plane, dim)
   so signatures are reproducible across runs and engines with no RNG
   state. Candidates = bucket collisions in any table; exact re-rank of
@@ -155,8 +156,8 @@ def embedding_neardup_pairs(
 ) -> DataFrame:
     """Exact all-pairs cosine ≥ threshold (embedding-space near-dup).
 
-    Quadratic — at scale run lsh_ann buckets first and verify only
-    collisions (same pattern as MinHash→Jaccard in operators.dedup)."""
+    Quadratic — at scale run embedding_neardup_lsh's buckets first and
+    verify only collisions (same pattern as MinHash→Jaccard in operators.dedup)."""
     a = corpus.select(F.col(id_col).alias("id_a"), as_double_array(vec_col).alias("va"))
     b = corpus.select(F.col(id_col).alias("id_b"), as_double_array(vec_col).alias("vb"))
     sim: Column = cosine_similarity(F.col("va"), F.col("vb"))
@@ -213,51 +214,6 @@ def srp_signatures(
             bucket = bucket + expr
         buckets.append(bucket.cast("long").alias(f"t{t}"))
     return df.select(F.col(id_col).alias("vid"), *buckets)
-
-
-def lsh_ann(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_tables: int = 8,
-    n_bits: int = 12,
-) -> DataFrame:
-    """Approximate top-k: SRP bucket collisions (any table) → exact
-    cosine re-rank of candidates only. Same output schema as cosine_topk;
-    recall measured against it in tests."""
-    from pyspark.sql import Window
-
-    c_buckets = _bucket_stack(
-        srp_signatures(corpus, id_col, vec_col, n_tables, n_bits),
-        "neighbor_id", n_tables,
-    )
-    q_buckets = _bucket_stack(
-        srp_signatures(queries, id_col, vec_col, n_tables, n_bits),
-        "query_id", n_tables,
-    )
-    candidates = (
-        q_buckets.join(c_buckets, ["tbl", "bucket"], "inner")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id")
-        .distinct()
-    )
-    q = queries.select(F.col(id_col).alias("query_id"), as_double_array(vec_col).alias("qv"))
-    c = corpus.select(F.col(id_col).alias("neighbor_id"), as_double_array(vec_col).alias("cv"))
-    scored = (
-        candidates.join(F.broadcast(q), "query_id")
-        .join(c, "neighbor_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(cosine_similarity(F.col("qv"), F.col("cv")), 9).alias("sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id"))
-    return scored.withColumn("rank", F.row_number().over(w).cast("bigint")).filter(
-        F.col("rank") <= k
-    )
 
 
 def _bucket_stack(sig: DataFrame, out_id: str, n_tables: int) -> DataFrame:
@@ -702,9 +658,8 @@ def knn_graph(
     from the (tbl, bucket) self-join (both directions, src ≠ dst),
     vectors are re-fetched via two id-keyed joins, and the per-node
     top-k is a window over src — all shuffles linear in candidate
-    volume, never N². (lsh_ann broadcasts its bounded query set; for
-    the self-kNN case the 'query set' IS the corpus, so this operator
-    exists to avoid that broadcast.) Recall is the LSH physics — same
+    volume, never N² (the self-kNN 'query set' IS the corpus, so a
+    broadcast query side would not fit). Recall is the LSH physics — same
     regimes as embedding_neardup_lsh's docstring; measured against
     brute force in tests/test_similarity.py."""
     from pyspark.sql import Window

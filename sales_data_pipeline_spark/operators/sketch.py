@@ -128,13 +128,9 @@ def bloom_build(
     false positives only cost recall of genuinely-new items, bounded
     as above (tests/test_dedup.py::test_bloom_*).
 
-    Relation to operators/scale.py bloom_semi_filter: that one builds
-    the same bit words but collapses them into a LITERAL array for a
-    single-query join-pruning probe (cheapest per probe, but the
-    filter dies with the plan). This one keeps the bitmap AS A TABLE
-    because the incremental-dedup use case needs it persisted between
-    runs and merged batch-over-batch (write the words to parquet,
-    bit_or with the next batch's) — same math, different lifetime."""
+    The bitmap is a TABLE, not a plan literal, because incremental
+    dedup persists it between runs and merges it batch-over-batch
+    (write the words to parquet, bit_or with the next batch's)."""
     pos = F.explode(
         F.array(*_bloom_positions(F.col(key_col), m_bits, k_hashes))
     ).alias("h")

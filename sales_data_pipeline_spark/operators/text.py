@@ -86,25 +86,6 @@ def token_chunks(col: Column | str, size: int, stride: int | None = None) -> Col
     )
 
 
-def paragraph_chunks(col: Column | str, delim: str = "\n\n") -> Column:
-    """Delimiter-based segmentation in the same
-    ``array<struct<chunk_id, chunk, n_tokens>>`` shape as token_chunks,
-    so corpus-level operators (remove_boilerplate) swap segmenters
-    freely: real web corpora dedup PARAGRAPHS (CCNet splits on blank
-    lines); fixed token windows are the fallback when documents carry no
-    structure. Whitespace-trimmed, empty segments dropped, chunk_id is
-    the original paragraph position. Pure codegen map."""
-    c = F.col(col) if isinstance(col, str) else col
-    segs = F.transform(
-        F.split(c, delim, -1), lambda s, i: F.struct(
-            i.cast("bigint").alias("chunk_id"),
-            F.trim(s).alias("chunk"),
-            F.size(F.split(F.trim(s), " ")).cast("bigint").alias("n_tokens"),
-        )
-    )
-    return F.filter(segs, lambda x: x["chunk"] != "")
-
-
 # 2^50-scale prime: acc < M keeps acc*31+c < 2^63 (no Java overflow,
 # no DuckDB BIGINT overflow error) so both engines roll identically.
 ROLLING_HASH_MOD = 1_125_899_906_842_589
@@ -271,26 +252,9 @@ def shingle_hashes_from_tokens(tokens_col: Column | str, n: int = 3) -> Column:
     )
 
 
-def shingles(col: Column | str, n: int = 3) -> Column:
-    """Distinct n-gram word shingles as an array<string> — the unit for
-    Jaccard similarity and MinHash. Pure expressions: transform over a
-    sequence of start offsets, slice, concat."""
-    t = tokens(col)
-    # guard: sequence(1, 0) would generate a DESCENDING sequence for docs
-    # shorter than n tokens — emit an empty shingle set instead
-    return F.when(F.size(t) < n, F.array().cast("array<string>")).otherwise(
-        F.array_distinct(
-            F.transform(
-                F.sequence(F.lit(1), F.size(t) - (n - 1)),
-                lambda i: F.concat_ws(" ", F.slice(t, i, n)),
-            )
-        )
-    )
-
-
 def ngrams_from_tokens(tokens_col: Column | str, n: int = 5) -> Column:
     """ALL word n-gram occurrences in order — NOT deduplicated (unlike
-    ``shingles``): the unit for occurrence counting (repeated-span
+    ``shingle_hashes_from_tokens``): the unit for occurrence counting (repeated-span
     census, memorization-risk audits) where a gram appearing twice in
     one doc must count twice. ``tokens_col`` must be an
     ALREADY-PROJECTED array column (same contract and reason as
@@ -318,10 +282,8 @@ def phrase_hits_scan(
     — 'a a a' holds 'a a' twice). ZERO shuffles before the final
     per-doc projection: at 100 TB this is one corpus scan with the
     match evaluated in whole-stage codegen, the right plan when no
-    persistent index exists. The posting-list sibling
-    (phrase_hits_index) is the plan you run against an indexed corpus;
-    tests pin their bitwise equality. Returns (id_col, n_hits) for
-    docs with >= 1 hit."""
+    persistent index exists. Returns (id_col, n_hits) for docs with
+    >= 1 hit."""
     words = phrase.split()
     if not words:
         raise ValueError("phrase must contain at least one token")
@@ -350,39 +312,4 @@ def phrase_hits_scan(
             F.size(F.filter(ok, lambda b: b)).cast("bigint").alias("n_hits"),
         )
         .filter(F.col("n_hits") > 0)
-    )
-
-
-def phrase_hits_index(
-    docs: DataFrame,
-    phrase: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Same contract as phrase_hits_scan via a positional inverted
-    index: postings (doc, pos, word) filtered to the phrase's terms
-    BEFORE any shuffle (posting lists stay query-sized, not
-    corpus-sized), then one equi-join per subsequent term on
-    (doc, pos - offset) — the standard positional-index phrase plan.
-    Worth it only when the index is built once and queried many times;
-    for one-shot queries phrase_hits_scan's single pass wins."""
-    words = phrase.split()
-    if not words:
-        raise ValueError("phrase must contain at least one token")
-    toks = F.split(F.regexp_replace(F.col(text_col), r"\s+", " "), " ")
-    postings = (
-        docs.select(
-            F.col(id_col), F.posexplode_outer(toks).alias("pos", "word")
-        )
-        .filter(F.col("word").isin(list(set(words))))
-    )
-    cur = postings.filter(F.col("word") == words[0]).select(id_col, "pos")
-    for k, w in enumerate(words[1:], start=1):
-        nxt = postings.filter(F.col("word") == w).select(
-            id_col, (F.col("pos") - k).alias("pos")
-        )
-        cur = cur.join(nxt, [id_col, "pos"])
-    return (
-        cur.groupBy(id_col)
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n_hits"))
     )

@@ -1,7 +1,6 @@
 """Table maintenance: small-file compaction for partitioned parquet.
 
-Streaming/incremental writers (streaming/incremental.py) and repeated
-batch appends accumulate many small files per partition; at 100 TB the
+Repeated batch appends accumulate many small files per partition; at 100 TB the
 resulting footer reads and task-per-file scheduling dominate scan cost
 long before data volume does. This compactor rewrites ONLY fragmented
 partitions, in place, using dynamic partition overwrite — untouched
@@ -14,15 +13,11 @@ Heuristic: a partition needs compaction when it holds more than
 ``min_mean_bytes``. The rewrite coalesces to ⌈bytes/target⌉ files.
 
 Scope note: compaction is per LEAF partition — it never merges rows
-across partition values. For the incremental fact store
-(``ingest_batch=N/sales_month=M``) that means a fragmented micro-batch
-leaf consolidates, but many one-file batch dirs for the same month do
-NOT merge: collapsing ``ingest_batch`` values would break the
-batch-keyed retry-overwrite idempotency contract
-(streaming/incremental.py) unless the consolidator coordinates with
-the stream's checkpoint (safe only for batch ids the offset log has
-committed) — that coordination is a table-format (Delta/Iceberg
-rewrite + snapshot) job, deliberately out of scope here.
+across partition values. In a nested ``ingest_batch=N/sales_month=M``
+layout a fragmented leaf consolidates, but many one-file batch dirs for
+the same month do NOT merge: collapsing partition values is a
+table-format (Delta/Iceberg rewrite + snapshot) job, deliberately out
+of scope here.
 """
 
 from __future__ import annotations

@@ -29,7 +29,6 @@ error naming the missing wheel.
 from __future__ import annotations
 
 import base64
-import json
 import os
 
 _PBKDF2_ITERATIONS = 600_000
@@ -86,19 +85,3 @@ def decrypt_secret(token: str, passphrase: str) -> str:
             "tampered token)"
         ) from e
     return pt.decode("utf-8")
-
-
-def encrypt_credentials(creds: dict[str, str], passphrase: str) -> str:
-    """Encrypt a whole credential mapping (e.g. {'user': ..,
-    'password': ..}) as ONE token — the reference encrypts each AWS
-    key separately, which leaks which fields exist and lets an
-    attacker mix-and-match fields from different config generations."""
-    return encrypt_secret(json.dumps(creds, sort_keys=True), passphrase)
-
-
-def decrypt_credentials(token: str, passphrase: str) -> dict[str, str]:
-    """Inverse of :func:`encrypt_credentials`."""
-    out = json.loads(decrypt_secret(token, passphrase))
-    if not isinstance(out, dict):
-        raise ValueError("credential token did not contain a mapping")
-    return out

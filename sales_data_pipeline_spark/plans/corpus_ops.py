@@ -1142,9 +1142,7 @@ def q204_temperature_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines land the identical BIGINT); totals are exact BIGINT sums
     and every share is one double division of exact integers, so the
     outputs compare bitwise with no rounding step (the q229
-    integer-exact discipline). The arbitrary-α libm-pow variant stays
-    available as operators/assemble.temperature_mixture with its
-    python-ref property tests."""
+    integer-exact discipline)."""
     from sales_data_pipeline_spark.operators.assemble import (
         temperature_mixture_sqrt,
     )
@@ -1544,11 +1542,8 @@ def q269_phrase_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     overlapping occurrence counts, docs with >= 1 hit. Registered plan
     is the MAP-ONLY array scan (phrase_hits_scan: one corpus pass,
     match in codegen, zero pre-agg shuffles) — the right shape for a
-    one-shot query at 100 TB; the positional-inverted-index plan
-    (phrase_hits_index: postings filtered to phrase terms before any
-    shuffle, one equi-join per term offset) is the repeated-query
-    sibling and is pinned bitwise-equal in tests/test_r6_operators.py.
-    Oracle replays the same position semantics in SQL."""
+    one-shot query at 100 TB. Oracle replays the same position
+    semantics in SQL."""
     from sales_data_pipeline_spark.operators.text import phrase_hits_scan
 
     docs = table(spark, sf_dir, "documents")

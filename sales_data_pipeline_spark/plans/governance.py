@@ -504,9 +504,7 @@ def q77_table_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One-pass data-quality profile of the orders table: per column
     (n_rows, n_null, n_distinct, min, max) — the load-time drift check
     a lake pipeline runs on every batch (operators/profile.py). Exact
-    cardinalities here (single Expand pass, hash-matchable); the
-    100 TB interactive path is exact_distinct=False (HLL, no Expand).
-    Money is profiled as decimal and timestamps second-truncated so
+    cardinalities (single Expand pass, hash-matchable). Money is profiled as decimal and timestamps second-truncated so
     min/max strings are engine-portable (float/sub-second formatting
     is not)."""
     from sales_data_pipeline_spark.operators.profile import profile_table

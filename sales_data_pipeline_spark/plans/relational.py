@@ -10436,16 +10436,14 @@ def q282_cohort_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q286_debounce_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user alert-debounce census: run the greedy cooldown-spaced
-    selection (streaming/ratelimit.py's debounce_codegen — the
-    whole-stage-codegen twin of the 11th streaming operator: one
+    selection (streaming/ratelimit.py's debounce_codegen — one
     array_sort + JVM aggregate fold per user, zero Python; r8 rewrite
     of the Arrow applyInPandas form whose per-key Python-worker
     dispatch was the catalog's largest sf0.1 constant at 8.6s, the
     q190 capped-balance pattern) over each user's clicks with a 1-day
     cooldown, and report clicks vs emitted notifications plus the last
-    emission time. debounce_batch (the Arrow fold) stays as the
-    streaming-parity reference, pinned bitwise-equal by
-    test_streaming.py. The greedy selection is inherently sequential
+    emission time. debounce_batch (the Arrow fold) stays as its
+    reference, pinned bitwise-equal by test_streaming.py. The greedy selection is inherently sequential
     per key (each emission depends on the previous), which SQL
     expresses only as bounded recursion — the oracle replays it as a
     recursive CTE whose step picks MIN(t) ≥ last + cooldown per user

@@ -41,7 +41,7 @@ from sales_data_pipeline_spark.plans.registry import query
 
 _STOP_SQL = "(" + ", ".join(f"'{w}'" for w in EN_STOPWORDS) + ")"
 
-# DuckDB equivalent of operators.text.shingles (distinct word 3-grams)
+# DuckDB distinct word 3-grams (the shingle sets operators.text hashes)
 _SHINGLES_CTE = """
     toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
     sh AS (

@@ -46,7 +46,9 @@ def csv_header(spark: SparkSession, path: str) -> list[str]:
                 break
     finally:
         stream.close()
-    line = prefix.split(b"\n", 1)[0].decode("utf-8", errors="replace").rstrip("\r")
+    # utf-8-sig drops a leading byte-order mark, which would otherwise
+    # glue itself to the first column name and fail the contract check
+    line = prefix.split(b"\n", 1)[0].decode("utf-8-sig", errors="replace").rstrip("\r")
     # an empty file has no header: [] routes it to quarantine with every
     # mandatory column missing instead of aborting the run
     return next(_csv.reader(io.StringIO(line)), [])

@@ -1,17 +1,14 @@
-"""Partitioned JDBC source/sink.
+"""JDBC source/sink.
 
-The reference pulls every MySQL table through a single-partition
-``spark.read.jdbc`` (reference: src/main/read/database_read.py:6-10) —
-fine for 10-row dims, a bottleneck for anything real. This reader
-parameterizes range-partitioned pulls so a large dimension/fact table
-fans out across executors; the writer defaults to idempotent modes
-instead of the reference's blind append (database_write.py:13,
+The reader pulls a table through one ``spark.read.jdbc`` partition, as
+the reference does (reference: src/main/read/database_read.py:6-10) —
+the dims it reads are tens of rows. The writer defaults to idempotent
+modes instead of the reference's blind append (database_write.py:13,
 SURVEY §2j.7).
 
 Exercised live against embedded Derby (ships in Spark's jars) in
-tests/test_jdbc.py: write→read round-trip, range-partitioned parallel
-pull, and idempotent-overwrite re-run — the full S3/S7 surface without
-needing a network database.
+tests/test_jdbc.py: write→read round-trip and idempotent-overwrite
+re-run — the full S3/S7 surface without needing a network database.
 """
 
 from __future__ import annotations
@@ -63,29 +60,13 @@ def read_jdbc(
     url: str,
     table: str,
     properties: dict[str, str] | None = None,
-    partition_column: str | None = None,
-    lower_bound: int | None = None,
-    upper_bound: int | None = None,
-    num_partitions: int | None = None,
-    predicate_pushdown: bool = True,
 ) -> DataFrame:
-    """Range-partitioned JDBC scan (parallel across executors when
-    partition_column bounds are given)."""
+    """Single-partition JDBC scan of ``table``."""
     reader: DataFrameReader = (
         spark.read.format("jdbc").option("url", url).option("dbtable", table)
     )
     for k, v in (properties or {}).items():
         reader = reader.option(k, v)
-    if partition_column is not None:
-        if lower_bound is None or upper_bound is None or num_partitions is None:
-            raise ValueError("partitioned JDBC read needs lower/upper bounds and numPartitions")
-        reader = (
-            reader.option("partitionColumn", partition_column)
-            .option("lowerBound", str(lower_bound))
-            .option("upperBound", str(upper_bound))
-            .option("numPartitions", str(num_partitions))
-        )
-    reader = reader.option("pushDownPredicate", "true" if predicate_pushdown else "false")
     return reader.load()
 
 

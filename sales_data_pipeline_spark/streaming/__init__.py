@@ -1,10 +1,5 @@
-"""Structured Streaming surface.
+"""Per-key debounce (``ratelimit``), the operator behind q286.
 
-The reference has no streaming operators (SURVEY §2i) — its
-"streaming-ness" is batch re-runs + a MySQL staging-table A/I state
-machine (reference: main.py:51-75, 196-225, 429-448) and an S3 folder
-lifecycle. This package is the idiomatic-Spark replacement (SURVEY §7
-M7): a checkpointed file-source stream gives exactly-once file pickup
-(subsuming the staging table), and applyInPandasWithState hosts the
-per-key debounce.
+The reference has no streaming operators (SURVEY §2i); its batch
+re-runs and staging-table state machine map onto ``run_pipeline``.
 """

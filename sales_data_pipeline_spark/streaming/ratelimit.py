@@ -1,5 +1,5 @@
-"""Streaming per-key debounce / rate limit — the alert-suppression
-primitive (emit at most one event per key per cooldown window).
+"""Per-key debounce / rate limit — the alert-suppression primitive
+(emit at most one event per key per cooldown window).
 
 Semantics (the classic monitoring debounce): events for a key are
 processed in (ts, event_id) order; an event is EMITTED iff its event
@@ -7,37 +7,22 @@ time is at least ``cooldown_seconds`` after the last *emitted* event's
 time for that key, and every emitted event resets the clock. Suppressed
 events are counted, not forwarded — the operator turns an event storm
 into a bounded notification stream (pager dedup, abuse throttling,
-change-notification coalescing).
+change-notification coalescing). The fold is greedy earliest-first
+selection — the unique maximal cooldown-spaced subsequence.
 
-State per key is EXACTLY two bigints (last emitted ts as epoch micros
-+ arrivals suppressed since it) — bounded by the key space, independent
-of stream length or rate; grouped by key → applyInPandasWithState
-scales horizontally. (Spark 4's
-``transformWithStateInPandas`` expresses the identical fold with a
-named ValueState; it is not used here because its driver worker
-requires the ``protobuf`` package, absent from this environment — the
-shared ``_fold`` drops into either API unchanged.) Late events follow
-an at-arrival contract: an event arriving
-after a later one was already emitted is judged against the state as
-it stands (retro-suppression would need unbounded replay). For
-in-order delivery the fold is EXACTLY equal to the batch reference
-``debounce_batch`` (greedy earliest-first selection — the unique
-maximal cooldown-spaced subsequence), pinned by the cross-batch parity
-test, and the pending-suppressed counter survives micro-batch
-boundaries so tail-of-batch suppressions are credited to the next
-emission, never lost.
+``debounce_codegen`` (q286) runs the fold as one JVM ``aggregate``;
+``debounce_batch`` runs the same fold in pandas through ``_fold`` and
+is the reference the codegen form is tested against.
 
-Reference scope: the reference repo has no streaming (SURVEY §2i);
-this extends the package's incremental family (11th operator).
+Reference scope: the reference repo has no streaming (SURVEY §2i).
 """
 
 from __future__ import annotations
 
-from typing import Any, Iterable, Iterator, Sequence, Tuple
+from typing import Sequence
 
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     ArrayType,
     LongType,
@@ -46,21 +31,7 @@ from pyspark.sql.types import (
     TimestampNTZType,
 )
 
-__all__ = ["debounce_stateful", "debounce_batch", "debounce_codegen"]
-
-_OUT_SCHEMA = (
-    "user_id bigint, event_id bigint, ts timestamp, event_type string, "
-    "value double, n_suppressed_since_last bigint"
-)
-_STATE_SCHEMA = "last_us bigint, pending bigint"
-_OUT_COLS = [
-    "user_id",
-    "event_id",
-    "ts",
-    "event_type",
-    "value",
-    "n_suppressed_since_last",
-]
+__all__ = ["debounce_batch", "debounce_codegen"]
 
 
 def _fold(
@@ -76,8 +47,8 @@ def _fold(
     surviving row's values IN THE INPUT COLUMN ORDER plus the
     suppressed-since-last count — column names come from the caller's
     frame, nothing hardcoded (ADVICE r8). Returns (emitted rows, new
-    last_us, pending suppressed count). Shared by the streaming
-    processor and the batch reference — one semantics."""
+    last_us, pending suppressed count); passing the returned state
+    into the next call folds a history in pieces."""
     out = []
     pdf = pdf.sort_values(list(order_cols), kind="mergesort")
     ts_idx = list(pdf.columns).index(ts_col)
@@ -90,49 +61,6 @@ def _fold(
         else:
             suppressed += 1
     return out, last_us, suppressed
-
-
-def _debounce_fn(cooldown_us: int):
-    def fn(
-        key: Tuple[Any, ...],
-        pdfs: Iterable[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            last_us, pending = state.get
-            last_us = None if last_us is None else int(last_us)
-            pending = int(pending)
-        else:
-            last_us, pending = None, 0
-        pdf = pd.concat(list(pdfs), ignore_index=True)
-        # pin the fixed events contract (_OUT_SCHEMA) regardless of the
-        # incoming frame's column order — the generic fold emits in
-        # input-column order
-        pdf = pdf[_OUT_COLS[:-1]]
-        out, last_us, pending = _fold(pdf, last_us, pending, cooldown_us)
-        if last_us is not None:
-            state.update((int(last_us), int(pending)))
-        if out:
-            yield pd.DataFrame(out, columns=_OUT_COLS)
-
-    return fn
-
-
-def debounce_stateful(
-    events: DataFrame, cooldown_seconds: int = 300
-) -> DataFrame:
-    """Append-mode stream of the events that survive the per-user
-    debounce, each carrying how many arrivals it suppressed since the
-    previous emission. See module docstring for the contract."""
-    if cooldown_seconds <= 0:
-        raise ValueError(f"cooldown_seconds must be > 0, got {cooldown_seconds}")
-    return events.groupBy("user_id").applyInPandasWithState(
-        _debounce_fn(int(cooldown_seconds) * 1_000_000),
-        outputStructType=_OUT_SCHEMA,
-        stateStructType=_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
 
 
 def _resolve_debounce_cols(
@@ -179,16 +107,13 @@ def debounce_batch(
     ts_col: str = "ts",
     order_cols: Sequence[str] | None = None,
 ) -> DataFrame:
-    """Batch reference with the identical greedy fold (one
-    applyInPandas over the key, Arrow-batched): the parity oracle for
-    debounce_stateful and the backfill path — re-running history
-    through the batch form reproduces exactly what the stream emitted
-    for in-order delivery. Generic over the input schema (ADVICE r8):
+    """Pandas reference for the greedy fold (one applyInPandas over
+    the key, Arrow-batched). Generic over the input schema (ADVICE r8):
     works for ANY key_cols/ts_col, and the output is every input
     column plus ``n_suppressed_since_last``. ``order_cols`` must be a
     total order (default (ts, event_id)) or ties fall to the engine's
-    partition order. The hot batch path is ``debounce_codegen`` —
-    this Arrow form is kept as the streaming-parity reference."""
+    partition order. The hot path is ``debounce_codegen`` — this
+    Arrow form is kept as its reference."""
     cols, order_cols = _resolve_debounce_cols(
         df, cooldown_seconds, key_cols, ts_col, order_cols
     )
@@ -224,8 +149,7 @@ def debounce_codegen(
     Python-worker dispatch (which is where debounce_batch's ~8.6s
     sf0.1 constant went). Bitwise-equal to debounce_batch (pinned by
     tests). Bounded-group contract: per-key histories must fit in an
-    array — the same contract q111/q190 document; the streaming form
-    (2 bigints of state) is the unbounded-history path."""
+    array — the same contract q111/q190 document."""
     cols, order_cols = _resolve_debounce_cols(
         df, cooldown_seconds, key_cols, ts_col, order_cols
     )

@@ -51,46 +51,8 @@ def test_asof_preserves_left_rowcount(spark):
     assert asof_join(left, right, "k", "t", "t", ["v"]).count() == left.count()
 
 
-def _rows(df):
-    return sorted(tuple(r) for r in df.collect())
-
-
-def test_asof_salted_equals_unsalted_hand_cases(spark):
-    """The coarse_bucket path must be result-identical to the plain path
-    on the edge-case frames, for both strictness variants and bucket
-    sizes that do / don't split the timeline."""
-    left, right = _frames(spark)
-    for strict in (False, True):
-        plain = asof_join(left, right, "k", "t", "t", ["v"], strict=strict)
-        for bucket_s in (1, 7, 3600):
-            salted = asof_join(
-                left, right, "k", "t", "t", ["v"],
-                strict=strict, coarse_bucket=bucket_s,
-            )
-            assert _rows(salted) == _rows(plain), (strict, bucket_s)
-
-
-def test_asof_salted_hot_key_property(spark):
-    """One hot key owning 95% of rows — the scenario salting exists for.
-    Carry-over must cross empty buckets (right rows cluster early, left
-    rows spread late)."""
-    import random
-
-    rng = random.Random(7)
-    left_rows = [(i, 1, _ts(rng.randrange(0, 10_000))) for i in range(300)]
-    left_rows += [(1000 + i, 2, _ts(rng.randrange(0, 10_000))) for i in range(15)]
-    right_rows = [(1, _ts(rng.randrange(0, 2_000)), float(i)) for i in range(40)]
-    right_rows += [(2, _ts(rng.randrange(0, 10_000)), float(100 + i)) for i in range(5)]
-    left = spark.createDataFrame(left_rows, "id long, k long, t timestamp")
-    right = spark.createDataFrame(right_rows, "k long, t timestamp, v double")
-    plain = asof_join(left, right, "k", "t", "t", ["v"])
-    salted = asof_join(left, right, "k", "t", "t", ["v"], coarse_bucket=500)
-    assert _rows(salted) == _rows(plain)
-
-
 def test_asof_composite_key(spark):
-    """Composite (k1, k2) keys: matches only within the exact pair, for
-    both the plain and salted paths."""
+    """Composite (k1, k2) keys: matches only within the exact pair."""
     left = spark.createDataFrame(
         [(1, 100, "x", _ts(10)), (2, 100, "y", _ts(10)), (3, 200, "x", _ts(10))],
         "id long, k1 long, k2 string, t timestamp",
@@ -100,26 +62,11 @@ def test_asof_composite_key(spark):
          (100, "x", _ts(50), 9.0)],
         "k1 long, k2 string, t timestamp, v double",
     )
-    for bucket in (None, 7):
-        out = {
-            r.id: r.v_asof
-            for r in asof_join(
-                left, right, ["k1", "k2"], "t", "t", ["v"], coarse_bucket=bucket
-            ).collect()
-        }
-        assert out == {1: 1.0, 2: 2.0, 3: 3.0}, (bucket, out)
-
-
-def test_asof_salted_plan_has_bucketed_window_key(spark):
-    """The in-bucket window must actually partition by (key, bucket) —
-    the salt has to reach the exchange, not just the expression tree."""
-    left, right = _frames(spark)
-    plan = asof_join(
-        left, right, "k", "t", "t", ["v"], coarse_bucket=60
-    )._jdf.queryExecution().executedPlan().toString()
-    window_lines = [ln for ln in plan.split("\n") if "Window" in ln and "__last_in" in ln]
-    assert window_lines, plan
-    assert all("__b" in ln for ln in window_lines), window_lines[0]
+    out = {
+        r.id: r.v_asof
+        for r in asof_join(left, right, ["k1", "k2"], "t", "t", ["v"]).collect()
+    }
+    assert out == {1: 1.0, 2: 2.0, 3: 3.0}, out
 
 
 def test_asof_nearest_matches_pandas_merge_asof(spark):

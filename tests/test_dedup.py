@@ -375,22 +375,6 @@ def test_cdc_resynchronizes_after_insertion(spark):
     assert shared >= 0.8, f"only {shared:.0%} of chunks re-aligned"
 
 
-def test_cdc_xxhash_fast_path_same_shape(spark, docs):
-    """The production hash (xxhash64) must produce a valid chunking too
-    (reassembly property holds; boundary positions differ by design)."""
-    from sales_data_pipeline_spark.operators.dedup import cdc_chunks
-
-    sample = docs.limit(20)
-    ch = cdc_chunks(sample, hash_fn="xxhash64")
-    rebuilt = (
-        ch.orderBy("doc_id", "chunk_seq")
-        .groupBy("doc_id")
-        .agg(F.concat_ws("", F.collect_list("chunk")).alias("rebuilt"))
-    )
-    joined = sample.select("doc_id", "text").join(rebuilt, "doc_id", "left")
-    assert joined.filter(F.col("rebuilt") != F.col("text")).count() == 0
-
-
 def test_lsh_bucket_cap_bounds_adversarial_mega_cluster(spark, docs):
     """A storm of near-identical docs lands whole in single (band,
     bucket) keys; the cap must drop those buckets (bounding the
@@ -610,7 +594,6 @@ def test_fuzzy_contamination_catches_paraphrase_and_verbatim(spark, docs):
     flagged above the threshold; an unrelated doc must not be."""
     from sales_data_pipeline_spark.operators.dedup import (
         fuzzy_contamination_pairs,
-        fuzzy_decontaminate,
         release_caches,
     )
 
@@ -638,11 +621,6 @@ def test_fuzzy_contamination_catches_paraphrase_and_verbatim(spark, docs):
         assert pairs[(1, 100)] == 1.0  # verbatim
         assert (2, 101) in pairs and pairs[(2, 101)] >= 0.5  # paraphrase
         assert not any(d == 3 for d, _ in pairs)  # clean untouched
-
-        kept = {
-            r.doc_id for r in fuzzy_decontaminate(corpus, bench, threshold=0.5).collect()
-        }
-        assert kept == {3}
     finally:
         release_caches()
 
@@ -1139,17 +1117,13 @@ def test_ngram_jaccard_candidate_guard_fails_fast(spark):
 
 def test_incremental_dedup_bucketed_history_no_history_exchange(spark, sf_dir):
     """The docstring's exchange-free claim, pinned: with the fingerprint
-    index written bucketed by fp (operators/scale.write_bucketed),
+    index written bucketed by fp (DataFrameWriter.bucketBy),
     incremental_dedup's anti join must show NO Exchange on the history
     side — ingesting a batch shuffles ONLY the batch. Also checks the
     dedup result itself against the unbucketed path."""
     from sales_data_pipeline_spark.operators.dedup import (
         fingerprint,
         incremental_dedup,
-    )
-    from sales_data_pipeline_spark.operators.scale import (
-        read_bucketed,
-        write_bucketed,
     )
 
     spark.catalog.clearCache()
@@ -1159,9 +1133,11 @@ def test_incremental_dedup_bucketed_history_no_history_exchange(spark, sf_dir):
         history = docs.filter(F.col("doc_id") % 3 == 0).select(
             fingerprint("text").alias("fp")
         )
-        write_bucketed(history, "t_fp_history_b", "fp", n_buckets=32)
+        history.write.mode("overwrite").bucketBy(32, "fp").sortBy("fp").saveAsTable(
+            "t_fp_history_b"
+        )
         batch = docs.filter(F.col("doc_id") % 3 != 0).select("doc_id", "text")
-        surv_bucketed = incremental_dedup(batch, read_bucketed(spark, "t_fp_history_b"))
+        surv_bucketed = incremental_dedup(batch, spark.table("t_fp_history_b"))
         plan = surv_bucketed._jdf.queryExecution().executedPlan().toString()
         assert "LeftAnti" in plan and "t_fp_history_b" in plan, plan
         # structural proof: vs the identical query over UNBUCKETED

@@ -424,22 +424,6 @@ def test_profile_table_single_job(spark):
     assert "Union" not in plan and "Join" not in plan
 
 
-def test_profile_table_approx_mode_runs(spark):
-    from sales_data_pipeline_spark.operators.profile import profile_table
-
-    df = spark.range(1000).select(F.col("id"), (F.col("id") % 10).alias("m"))
-    got = {r.col_name: r for r in profile_table(df, exact_distinct=False).collect()}
-    # HLL default rsd 5%: 10 distinct must be within a wide band
-    assert 8 <= got["m"].n_distinct <= 12
-    plan = (
-        profile_table(df, exact_distinct=False)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "Expand" not in plan  # approx path never expands rows
-
-
 def test_profile_table_rejects_empty_cols(spark):
     from sales_data_pipeline_spark.operators.profile import profile_table
 

@@ -62,44 +62,29 @@ def test_compact_rewrites_only_fragmented_and_preserves_data(spark, tmp_path):
 
 
 def test_compact_streaming_fact_store(spark, tmp_path):
-    """End-to-end with the incremental pipeline: micro-batches fragment
-    the fact store (one writer task per file per batch dir); compaction
-    over the nested (ingest_batch, sales_month) layout consolidates
-    without changing a row."""
-    import datetime as dt
+    """The nested (ingest_batch, sales_month) layout a micro-batch
+    writer leaves: one leaf holds three files, the others one each.
+    Compaction rewrites only the multi-file leaf and changes no row."""
+    root = str(tmp_path / "fact")
+    fact = spark.range(0, 600).select(
+        F.col("id").alias("sales_id"),
+        (F.col("id") % 3 == 0).cast("int").alias("ingest_batch"),
+        F.when(F.col("id") % 2 == 0, "2023-05").otherwise("2023-06").alias("sales_month"),
+        (F.col("id") * 7 % 101).cast("decimal(10,2)").alias("total_cost"),
+    )
+    frag = (F.col("ingest_batch") == 0) & (F.col("sales_month") == "2023-05")
+    parts = ["ingest_batch", "sales_month"]
+    fact.filter(frag).repartition(3).write.partitionBy(*parts).parquet(root)
+    fact.filter(~frag).coalesce(1).write.partitionBy(*parts).mode("append").parquet(root)
+    leaf = "ingest_batch=0/sales_month=2023-05"
+    assert len(_files(root, leaf)) == 3
 
-    from sales_data_pipeline_spark.streaming.incremental import (
-        IncrementalConfig,
-        run_incremental,
-    )
-    from tests.fixtures import dim_frames, write_sales_csv
-
-    cfg = IncrementalConfig(
-        input_dir=str(tmp_path / "in"),
-        fact_dir=str(tmp_path / "fact"),
-        output_dir=str(tmp_path / "out"),
-        checkpoint_dir=str(tmp_path / "ckpt"),
-        max_files_per_trigger=3,  # one micro-batch ingests all three files
-    )
-    (tmp_path / "in").mkdir()
-    customer, store, sales_team = dim_frames(spark)
-    for i in range(3):  # same month -> 3 writer tasks -> 3 files in one leaf
-        write_sales_csv(
-            tmp_path / "in" / f"part{i}.csv", n=80, seed=i, date=dt.date(2023, 5, 4)
-        )
-    run_incremental(spark, cfg, customer, store, sales_team)
-
-    before = sorted(
-        map(tuple, spark.read.option("basePath", cfg.fact_dir).parquet(cfg.fact_dir).collect())
-    )
-    rewritten = compact_partitions(
-        spark, cfg.fact_dir, ["ingest_batch", "sales_month"], max_files=1
-    )
-    assert rewritten  # the multi-file micro-batch leaf was fragmented
-    after_df = spark.read.option("basePath", cfg.fact_dir).parquet(cfg.fact_dir)
+    before = sorted(map(tuple, spark.read.option("basePath", root).parquet(root).collect()))
+    rewritten = compact_partitions(spark, root, parts, max_files=1)
+    assert rewritten == [leaf]
+    assert len(_files(root, leaf)) == 1
+    after_df = spark.read.option("basePath", root).parquet(root)
     assert sorted(map(tuple, after_df.collect())) == before
-    for part in rewritten:
-        assert len(_files(cfg.fact_dir, part)) == 1
 
 
 def test_compact_splits_large_partition_to_target(spark, tmp_path):

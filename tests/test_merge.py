@@ -1,13 +1,11 @@
-"""MERGE/upsert operators: latest-wins and SCD2 semantics, and the
+"""MERGE operators: SCD2 and CDC-log semantics, and the
 no-base-shuffle plan contract (the whole point at 100 TB)."""
 
 from __future__ import annotations
 
 import re
 
-from pyspark.sql import functions as F
-
-from sales_data_pipeline_spark.operators.merge import merge_upsert, scd2_merge
+from sales_data_pipeline_spark.operators.merge import scd2_merge
 
 
 def _base(spark):
@@ -21,14 +19,6 @@ def _changes(spark):
     return spark.createDataFrame(
         [(2, "bob", 99.0), (4, "dan", 5.0)], "id long, name string, bal double"
     )
-
-
-def test_merge_upsert_latest_wins(spark):
-    got = {r.id: r for r in merge_upsert(_base(spark), _changes(spark), ["id"]).collect()}
-    assert set(got) == {1, 2, 3, 4}
-    assert got[2].bal == 99.0  # updated
-    assert got[1].bal == 10.0 and got[3].bal == 30.0  # untouched
-    assert got[4].name == "dan"  # inserted
 
 
 def test_scd2_merge_keeps_history(spark):
@@ -53,14 +43,9 @@ def _plan(df):
 
 
 def test_merge_never_shuffles_base(spark):
-    """Both merges must resolve to broadcast joins of the change keys.
-    merge_upsert is fully shuffle-free (anti joins ignore build-side
-    duplicates — no distinct needed); scd2_merge's single exchange is
-    the distinct over the SMALL change batch, never the base."""
-    upsert = _plan(merge_upsert(_base(spark), _changes(spark), ["id"]))
-    assert "Arguments: hashpartitioning" not in upsert, upsert
-    assert "BroadcastHashJoin" in upsert, upsert
-
+    """scd2_merge must resolve to a broadcast join of the change keys;
+    its single exchange is the distinct over the SMALL change batch,
+    never the base."""
     scd2 = _plan(scd2_merge(_base(spark), _changes(spark), ["id"]))
     shuffles = re.findall(r"Arguments: hashpartitioning\((\w+)", scd2)
     assert shuffles == ["id"], scd2  # only the change-key distinct
@@ -148,114 +133,3 @@ def test_apply_cdc_log_base_never_shuffles(spark):
     anti = plan.split("LeftAnti")[1]
     base_branch = anti.splitlines()[1]
     assert "Scan" in base_branch and "Exchange" not in base_branch
-
-
-# ---------------------------------------------------------------------------
-# incremental aggregate refresh
-# ---------------------------------------------------------------------------
-
-
-def test_incremental_agg_refresh_equals_full_recompute(spark):
-    from pyspark.sql import functions as F
-
-    from sales_data_pipeline_spark.operators.merge import (
-        incremental_agg_refresh,
-    )
-
-    base_rows = [("2024-01", 10.0), ("2024-01", 5.0), ("2024-02", 7.0)]
-    delta_rows = [("2024-02", 3.0), ("2024-03", 9.0), ("2024-03", 1.0)]
-    schema = "month string, amount double"
-    base = spark.createDataFrame(base_rows, schema)
-    delta = spark.createDataFrame(delta_rows, schema)
-    old = base.groupBy("month").agg(
-        F.sum("amount").alias("amount"),
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-    )
-    got = {
-        r.month: (r.amount, r.n)
-        for r in incremental_agg_refresh(
-            old, delta, keys=["month"], sum_cols=["amount"], count_col="n"
-        ).collect()
-    }
-    want = {
-        r.month: (r.amount, r.n)
-        for r in base.unionByName(delta)
-        .groupBy("month")
-        .agg(
-            F.sum("amount").alias("amount"),
-            F.count(F.lit(1)).cast("bigint").alias("n"),
-        )
-        .collect()
-    }
-    assert got == want
-    assert set(got) == {"2024-01", "2024-02", "2024-03"}
-
-
-def test_incremental_agg_refresh_retraction_deletes_empty_group(spark):
-    from pyspark.sql import functions as F
-
-    from sales_data_pipeline_spark.operators.merge import (
-        incremental_agg_refresh,
-    )
-
-    old = spark.createDataFrame(
-        [("2024-01", 15.0, 2), ("2024-02", 7.0, 1)],
-        "month string, amount double, n long",
-    )
-    # correction batch retracts 2024-02 entirely: negative amount AND
-    # an explicit count delta of -1 (count_col present in the delta →
-    # summed, the documented retraction contract)
-    retraction = spark.createDataFrame(
-        [("2024-02", -7.0, -1)], "month string, amount double, n long"
-    )
-    out = incremental_agg_refresh(
-        old,
-        retraction,
-        keys=["month"],
-        sum_cols=["amount"],
-        count_col="n",
-    )
-    got = {r.month: (r.amount, r.n) for r in out.collect()}
-    # the emptied group disappears (drop_empty); the untouched survives
-    assert got == {"2024-01": (15.0, 2)}
-
-
-def test_incremental_agg_refresh_old_side_never_shuffles(spark):
-    import re
-
-    from pyspark.sql import functions as F
-
-    from sales_data_pipeline_spark.operators.merge import (
-        incremental_agg_refresh,
-    )
-
-    old = spark.createDataFrame(
-        [(str(i), float(i), 1) for i in range(100)],
-        "k string, amount double, n long",
-    )
-    delta = spark.createDataFrame([("1", 2.0)], "k string, amount double")
-    plan = (
-        incremental_agg_refresh(
-            old, delta, keys=["k"], sum_cols=["amount"], count_col="n",
-            new_keys=False,
-        )
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    # update path: ONLY the tiny delta aggregation may shuffle; the
-    # old side streams into a broadcast join
-    assert len(re.findall(r"Exchange hashpartitioning", plan)) <= 1
-    assert "BroadcastHashJoin" in plan
-    # with new-key discovery on, the anti probe must NOT broadcast the
-    # old aggregate (that would collect the whole mart's keys)
-    full = (
-        incremental_agg_refresh(
-            old, delta, keys=["k"], sum_cols=["amount"], count_col="n"
-        )
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    anti = full.split("LeftAnti")[1].splitlines()
-    assert not any("BroadcastExchange" in ln for ln in anti[1:3]) or         "BuildLeft" in full.split("LeftAnti")[0].splitlines()[-1]

@@ -120,33 +120,6 @@ def test_asof_join_picks_latest_quote_at_or_before(spark, events, quotes):
 
 @settings(**_SETTINGS)
 @given(
-    events=st.lists(st.integers(0, 1000), min_size=1, max_size=25),
-    quotes=st.lists(st.integers(0, 1000), min_size=1, max_size=25, unique=True),
-    bucket_s=st.sampled_from([1, 13, 100, 5000]),
-)
-def test_asof_salted_matches_plain(spark, events, quotes, bucket_s):
-    """coarse_bucket salting is a pure execution-strategy change: for any
-    timeline and any bucket size the result set must be identical to the
-    unsalted window."""
-    from sales_data_pipeline_spark.operators.asof import asof_join
-
-    ev = spark.createDataFrame(
-        [(i, 1, float(t)) for i, t in enumerate(events)], "eid long, k long, t double"
-    ).select("eid", "k", F.timestamp_seconds("t").alias("ts"))
-    qt = spark.createDataFrame(
-        [(i, 1, float(t)) for i, t in enumerate(quotes)], "qid long, k long, qt double"
-    ).select("qid", "k", F.timestamp_seconds("qt").alias("qts"))
-    kwargs = dict(key="k", left_ts="ts", right_ts="qts", right_payload=["qid"])
-    plain = {(r.eid, r.qid_asof) for r in asof_join(ev, qt, **kwargs).collect()}
-    salted = {
-        (r.eid, r.qid_asof)
-        for r in asof_join(ev, qt, coarse_bucket=bucket_s, **kwargs).collect()
-    }
-    assert salted == plain
-
-
-@settings(**_SETTINGS)
-@given(
     rows=st.lists(
         st.tuples(st.integers(0, 10_000), st.integers(0, 500)),
         min_size=1,
@@ -278,27 +251,6 @@ def test_interval_overlap_join_equals_naive(spark, rows, width):
 
 @settings(**_SETTINGS)
 @given(
-    keys=st.lists(st.integers(0, 500), min_size=1, max_size=40, unique=True),
-    fact=st.lists(st.integers(0, 500), min_size=1, max_size=60),
-)
-def test_bloom_semi_filter_never_false_negative(spark, keys, fact):
-    """Every fact row whose key IS in the key set must survive the
-    bloom filter, for arbitrary key/fact sets."""
-    from sales_data_pipeline_spark.operators.scale import bloom_semi_filter
-
-    kdf = spark.createDataFrame([(k,) for k in keys], "k bigint")
-    fdf = spark.createDataFrame([(v,) for v in fact], "k bigint")
-    out = [r.k for r in bloom_semi_filter(fdf, "k", kdf, "k", num_bits=1 << 12).collect()]
-    member = set(keys)
-    from collections import Counter
-
-    got, want = Counter(out), Counter(v for v in fact if v in member)
-    for v, n in want.items():
-        assert got[v] == n, (v, got[v], n)
-
-
-@settings(**_SETTINGS)
-@given(
     rows=st.lists(
         st.tuples(st.integers(0, 1), st.integers(1, 500), st.integers(1, 20)),
         min_size=1,
@@ -348,43 +300,6 @@ def test_weighted_median_matches_python_reference(spark, rows):
             if 2 * cum >= tot:
                 assert got[g] == p, (g, got[g], p)
                 break
-
-
-# ---------------------------------------------------------------------------
-# temperature mixture
-# ---------------------------------------------------------------------------
-
-
-def test_temperature_mixture_matches_python_and_limits(spark):
-    from sales_data_pipeline_spark.operators.assemble import (
-        temperature_mixture,
-    )
-
-    rows = [("a",)] * 80 + [("b",)] * 15 + [("c",)] * 5
-    df = spark.createDataFrame(rows, "source string")
-    counts = {"a": 80, "b": 15, "c": 5}
-
-    for alpha in (0.0, 0.5, 1.0):
-        got = {
-            r.domain: (r.unit_share, r.temp_share, r.mix_weight)
-            for r in temperature_mixture(df, alpha=alpha).collect()
-        }
-        tot = sum(counts.values())
-        p = {d: float(n) ** alpha for d, n in counts.items()}
-        ps = sum(p.values())
-        for d, n in counts.items():
-            ushare = round(n / tot, 6)
-            tshare = round(p[d] / ps, 6)
-            assert got[d][0] == ushare, (alpha, d)
-            assert abs(got[d][1] - tshare) < 2e-6, (alpha, d)
-    # α=0 → uniform shares; α=1 → natural shares
-    g0 = {r.domain: r.temp_share for r in temperature_mixture(df, alpha=0.0).collect()}
-    assert all(abs(v - 1 / 3) < 1e-6 for v in g0.values())
-    g1 = {r.domain: r.temp_share for r in temperature_mixture(df, alpha=1.0).collect()}
-    assert abs(g1["a"] - 0.8) < 1e-6
-    # 0<α<1 strictly up-weights the smallest domain vs natural
-    g5 = {r.domain: r.mix_weight for r in temperature_mixture(df, alpha=0.5).collect()}
-    assert g5["c"] > 1.0 > g5["a"]
 
 
 # ---------------------------------------------------------------------------
@@ -666,7 +581,6 @@ def test_temperature_mixture_zero_size_domain_yields_null_not_error(spark):
     the contract is NULL shares for empty domains, untouched values
     for the rest."""
     from sales_data_pipeline_spark.operators.assemble import (
-        temperature_mixture,
         temperature_mixture_sqrt,
     )
 
@@ -674,26 +588,15 @@ def test_temperature_mixture_zero_size_domain_yields_null_not_error(spark):
         [("a", 10), ("a", 30), ("b", 0), ("b", 0)],
         "source string, sz int",
     )
-    for fn in (
-        lambda d: temperature_mixture(d, size_col="sz", alpha=0.5),
-        lambda d: temperature_mixture_sqrt(d, size_col="sz"),
-    ):
-        got = {r.domain: r for r in fn(df).collect()}
-        assert got["b"].n_units == 0
-        assert got["b"].mix_weight is None
-        assert got["a"].mix_weight is not None and got["a"].mix_weight > 0
-    # all-empty corpus: totals are 0 → every share NULL, still no
-    # error — for BOTH variants (the pow variant's raw ratios used to
-    # be bare ANSI divisions that raised before try_divide could see
-    # them)
+    got = {r.domain: r for r in temperature_mixture_sqrt(df, size_col="sz").collect()}
+    assert got["b"].n_units == 0
+    assert got["b"].mix_weight is None
+    assert got["a"].mix_weight is not None and got["a"].mix_weight > 0
+    # all-empty corpus: totals are 0 → every share NULL, still no error
     all0 = spark.createDataFrame([("a", 0)], "source string, sz int")
-    for fn in (
-        lambda d: temperature_mixture(d, size_col="sz", alpha=0.5),
-        lambda d: temperature_mixture_sqrt(d, size_col="sz"),
-    ):
-        r = fn(all0).collect()[0]
-        assert r.unit_share is None and r.temp_share is None
-        assert r.mix_weight is None
+    r = temperature_mixture_sqrt(all0, size_col="sz").collect()[0]
+    assert r.unit_share is None and r.temp_share is None
+    assert r.mix_weight is None
 
 
 def test_temperature_mixture_sqrt_matches_python_isqrt(spark):

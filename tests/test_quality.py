@@ -305,33 +305,6 @@ def test_weighted_sample_exact_semantics(spark):
     assert 850 <= len(a) <= 1150  # ~Binomial(2000, .5), ±>6σ slack
 
 
-def test_remove_boilerplate_paragraph_mode(spark):
-    """Paragraph segmentation: a license paragraph shared by two docs is
-    dropped everywhere; unique paragraphs reassemble with the original
-    delimiter; empty segments (leading/trailing/double delimiters)
-    never become chunks."""
-    from sales_data_pipeline_spark.operators.quality import remove_boilerplate
-
-    lic = "licensed under apache two"
-    rows = [
-        (1, f"{lic}\n\nunique body one\n\nclosing remarks one"),
-        (2, f"{lic}\n\nunique body two"),
-        (3, "\n\nonly unique content\n\n"),  # stray delimiters
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    got = {
-        r.doc_id: r
-        for r in remove_boilerplate(df, segmenter="paragraphs", min_docs=2).collect()
-    }
-    assert got[1].clean_text == "unique body one\n\nclosing remarks one"
-    assert got[2].clean_text == "unique body two"
-    assert (got[1].n_dropped, got[2].n_dropped) == (1, 1)
-    assert got[3].clean_text == "only unique content" and got[3].n_chunks == 1
-
-    with pytest.raises(ValueError):
-        remove_boilerplate(df, segmenter="sentences")
-
-
 def test_js_divergence_bounds(spark, tmp_path):
     """Identical sources → JS 0; fully disjoint vocabularies → ln 2
     (the JS maximum); the exclusive-mass decomposition must recover the

@@ -83,6 +83,12 @@ def test_end_to_end(spark, cfg):
 
 def test_extra_column_folding(spark, cfg):
     write_sales_csv(_in(cfg) / "extra.csv", n=50, seed=4, extra_payment_mode=True)
+    # extras whose names hold a dot or a backtick are columns, not paths
+    promo = write_sales_csv(_in(cfg) / "promo.csv", n=20, seed=6)
+    head, *rows = promo.read_text().splitlines()
+    promo.write_text(
+        "\n".join([head + ",promo.code,odd`name"] + [r + ",SPRING,x" for r in rows]) + "\n"
+    )
     from sales_data_pipeline_spark.operators.normalize import (
         read_validated_union,
         validate_headers,
@@ -101,7 +107,29 @@ def test_extra_column_folding(spark, cfg):
             F.get_json_object("additional_column", "$.payment_mode")
         ).distinct().collect()
     }
-    assert modes == {"cash", "UPI"}
+    assert modes == {"cash", "UPI", None}
+    promo_rows = df.filter(F.col("additional_column").contains("promo")).select(
+        F.get_json_object("additional_column", "$['promo.code']").alias("code"),
+        F.get_json_object("additional_column", "$['odd`name']").alias("odd"),
+    )
+    assert [tuple(r) for r in promo_rows.distinct().collect()] == [("SPRING", "x")]
+    assert promo_rows.count() == 20
+
+
+def test_bom_prefixed_file_is_accepted(spark, cfg):
+    """A UTF-8 byte-order mark before the header must not glue itself
+    to the first column name and quarantine a valid file."""
+    bom = write_sales_csv(_in(cfg) / "bom.csv", n=60, seed=8)
+    bom.write_bytes(b"\xef\xbb\xbf" + bom.read_bytes())
+    write_sales_csv(_in(cfg) / "plain.csv", n=40, seed=9)
+    customer, store, team = dim_frames(spark)
+
+    res = run_pipeline(spark, cfg, customer, store, team)
+
+    assert res.quarantined_files == {}
+    assert sorted(f.rsplit("/", 1)[-1] for f in res.accepted_files) == [
+        "bom.csv", "plain.csv"]
+    assert res.n_fact_rows == 100
 
 
 def test_rerun_is_idempotent(spark, cfg):

@@ -8,12 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from sales_data_pipeline_spark.catalog import table
-from sales_data_pipeline_spark.operators.scale import (
-    read_bucketed,
-    salted_agg,
-    salted_join,
-    write_bucketed,
-)
+from sales_data_pipeline_spark.operators.scale import salted_agg, salted_join
 
 
 @pytest.fixture(scope="module")
@@ -104,36 +99,6 @@ def test_salted_join_rejects_replication_unsafe_how(spark, skewed_df):
     for how in ("right", "full", "full_outer", "right_outer"):
         with pytest.raises(ValueError, match="salted_join"):
             salted_join(skewed_df, dim, "k", n_salt=8, how=how)
-
-
-def test_bucketed_join_has_no_exchange(spark, sf_dir, tmp_path):
-    """Both sides bucketed by the join key ⇒ SortMergeJoin with zero
-    Exchange operators — the shuffle was paid once at write time."""
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        orders = table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-        li = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_quantity")
-        write_bucketed(orders, "t_orders_b", "o_orderkey", n_buckets=8)
-        write_bucketed(
-            li.withColumnRenamed("l_orderkey", "o_orderkey"),
-            "t_lineitem_b",
-            "o_orderkey",
-            n_buckets=8,
-        )
-        j = read_bucketed(spark, "t_orders_b").join(
-            read_bucketed(spark, "t_lineitem_b"), "o_orderkey", "inner"
-        )
-        plan = j._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan, plan
-        # and it still computes the right thing
-        expect = orders.join(
-            li.withColumnRenamed("l_orderkey", "o_orderkey"), "o_orderkey"
-        ).count()
-        assert j.count() == expect
-    finally:
-        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-        spark.sql("DROP TABLE IF EXISTS t_orders_b")
-        spark.sql("DROP TABLE IF EXISTS t_lineitem_b")
 
 
 def test_zorder_key_interleaves_bits(spark):
@@ -291,50 +256,6 @@ def test_rfm_approx_plan_has_no_window_sort(spark, sf_dir):
     p = plan(rfm_segments(orders, approx=True))
     assert "Window" not in p, p
     assert "BroadcastNestedLoopJoin" in p or "BroadcastExchange" in p, p
-
-
-def test_bloom_semi_filter_superset_and_fp_bounded(spark):
-    """Bloom pre-join pruning: never a false negative (supersets the
-    exact left-semi join), false positives bounded well under 1% at
-    ~10+ bits/key, and the probe stays in codegen (no Python eval)."""
-    from sales_data_pipeline_spark.operators.scale import bloom_semi_filter
-
-    fact = spark.range(0, 50_000).withColumnRenamed("id", "k")
-    keys = spark.range(0, 50_000, 7).withColumnRenamed("id", "k")
-    exact = fact.join(keys, "k", "left_semi")
-    filt = bloom_semi_filter(fact, "k", keys, "k", num_bits=1 << 17)
-    assert exact.join(filt, "k", "left_anti").count() == 0  # no false negatives
-    n_exact, n_filt = exact.count(), filt.count()
-    n_non_members = 50_000 - n_exact
-    assert (n_filt - n_exact) <= 0.01 * n_non_members, (n_exact, n_filt)
-    plan = spark.sparkContext._jvm.PythonSQLUtils.explainString(
-        filt._jdf.queryExecution(), "formatted"
-    )
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan, plan
-
-
-def test_bloom_semi_filter_casts_probe_to_key_type(spark):
-    """An int fact column probed against a long key column must hash at
-    the key side's width — a width mismatch would produce false
-    NEGATIVES, silently dropping matching rows."""
-    from sales_data_pipeline_spark.operators.scale import bloom_semi_filter
-
-    fact = spark.range(0, 10_000).selectExpr("cast(id as int) as k")
-    keys = spark.range(0, 10_000, 3).withColumnRenamed("id", "k")
-    exact = fact.selectExpr("cast(k as long) as k").join(keys, "k", "left_semi")
-    filt = bloom_semi_filter(fact, "k", keys, "k", num_bits=1 << 16)
-    got = filt.selectExpr("cast(k as long) as k")
-    assert exact.join(got, "k", "left_anti").count() == 0
-
-
-def test_bloom_semi_filter_drops_null_keys(spark):
-    """NULL fact keys are dropped, matching left-semi-join semantics."""
-    from sales_data_pipeline_spark.operators.scale import bloom_semi_filter
-
-    fact = spark.createDataFrame([(1,), (None,), (2,)], "k bigint")
-    keys = spark.createDataFrame([(1,), (2,)], "k bigint")
-    out = bloom_semi_filter(fact, "k", keys, "k", num_bits=1 << 12)
-    assert sorted(r.k for r in out.collect()) == [1, 2]
 
 
 def test_pareto_approx_mass_and_monotone(spark, sf_dir):
@@ -606,23 +527,6 @@ def test_hll_pairwise_overlap_degenerate_inputs(spark):
     row = hll_pairwise_overlap(two, "source", "g").collect()[0]
     # disjoint sets: overlap estimate within the noise floor
     assert row.est_overlap <= 3 * (1.04 / (1 << 6)) * (row.est_a + row.est_b)
-
-
-def test_bloom_semi_filter_single_key_small_words(spark):
-    """Regression (hypothesis find, r6): with a tiny key set every
-    64-bit word VALUE can fit in 32 bits, PySpark then inferred the
-    word-array literal as array<int>, and bit_get's position range
-    follows the argument type — any probe position >= 32 raised
-    BIT_POSITION_RANGE. The literal is now pinned to array<bigint>;
-    the falsifying example (keys=[216], fact=[1]) plus a sweep of
-    single-key filters must probe cleanly with zero false negatives."""
-    from sales_data_pipeline_spark.operators.scale import bloom_semi_filter
-
-    for key in (216, 0, 1, 499):
-        kdf = spark.createDataFrame([(key,)], "k bigint")
-        fdf = spark.createDataFrame([(1,), (key,)], "k bigint")
-        out = {r.k for r in bloom_semi_filter(fdf, "k", kdf, "k", num_bits=1 << 12).collect()}
-        assert key in out  # never a false negative
 
 
 # ---------------------------------------------------------------------------

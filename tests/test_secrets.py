@@ -9,12 +9,7 @@ import base64
 
 import pytest
 
-from sales_data_pipeline_spark.pipeline.secrets import (
-    decrypt_credentials,
-    decrypt_secret,
-    encrypt_credentials,
-    encrypt_secret,
-)
+from sales_data_pipeline_spark.pipeline.secrets import decrypt_secret, encrypt_secret
 
 
 def test_roundtrip_including_unicode():
@@ -46,9 +41,3 @@ def test_wrong_passphrase_and_tamper_are_loud():
         decrypt_secret(base64.urlsafe_b64encode(b"\x09short").decode(), "right")
 
 
-def test_credentials_mapping_roundtrip():
-    creds = {"user": "etl", "password": "s3cr3t", "host": "db.example.com"}
-    tok = encrypt_credentials(creds, "master")
-    assert decrypt_credentials(tok, "master") == creds
-    with pytest.raises(ValueError):
-        decrypt_credentials(encrypt_secret('["not a dict"]', "m"), "m")
