@@ -125,7 +125,7 @@ def write_training_shards(
         ],
     }
     # seal the manifest inside staging, then one rename publishes all
-    _, fs, man_p = _fs(spark, staging + "/" + MANIFEST)
+    fs, man_p = _fs(spark, staging + "/" + MANIFEST)
     out = fs.create(man_p, True)
     out.write(bytearray(json.dumps(manifest, indent=1).encode("utf-8")))
     out.close()
@@ -136,7 +136,8 @@ def write_training_shards(
 
 
 def read_manifest(spark: SparkSession, out_dir: str) -> dict:
-    jvm, fs, p = _fs(spark, out_dir.rstrip("/") + "/" + MANIFEST)
+    fs, p = _fs(spark, out_dir.rstrip("/") + "/" + MANIFEST)
+    jvm = spark.sparkContext._jvm
     stream = fs.open(p)
     try:
         # read JVM-side: py4j copies a Python bytearray INTO the JVM, so

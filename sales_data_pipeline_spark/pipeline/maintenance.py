@@ -28,6 +28,8 @@ from dataclasses import dataclass
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+from sales_data_pipeline_spark.pipeline.fs import _fs
+
 
 @dataclass(frozen=True)
 class PartitionStats:
@@ -43,10 +45,7 @@ class PartitionStats:
 def partition_file_stats(spark: SparkSession, root: str) -> list[PartitionStats]:
     """Per-leaf-partition file counts/sizes via the Hadoop FS API (works
     for local/hdfs/s3a alike; one listing pass, no data read)."""
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    root_p = jvm.org.apache.hadoop.fs.Path(root)
-    fs = root_p.getFileSystem(conf)
+    fs, root_p = _fs(spark, root)
     stats: dict[str, list[int]] = {}
     it = fs.listFiles(root_p, True)  # recursive
     root_uri = fs.makeQualified(root_p).toString().rstrip("/")
@@ -160,22 +159,19 @@ def expire_partitions(
     taken from directory names, so the operation is metadata-only.
     Returns the deleted (or, with ``dry_run``, would-be-deleted)
     partition directory names, sorted."""
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    root_p = jvm.org.apache.hadoop.fs.Path(root)
-    fs = root_p.getFileSystem(conf)
+    fs, root_p = _fs(spark, root)
     if not fs.exists(root_p):
         return []
     prefix = f"{partition_col}="
-    doomed: list[str] = []
+    doomed = {}
     for status in fs.listStatus(root_p):
         name = status.getPath().getName()
         if status.isDirectory() and name.startswith(prefix):
             if name[len(prefix):] < cutoff:
-                doomed.append(name)
+                doomed[name] = status.getPath()
     for name in sorted(doomed):
         if not dry_run:
-            fs.delete(jvm.org.apache.hadoop.fs.Path(root_p, name), True)
+            fs.delete(doomed[name], True)
     return sorted(doomed)
 
 

@@ -29,10 +29,10 @@ def csv_header(spark: SparkSession, path: str) -> list[str]:
     local paths and distributed stores (s3a/hdfs) — no boto3 download
     hop like the reference's S3FileDownloader (aws_file_download.py:12-25).
     """
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(conf)
+    # imported here: pipeline's package init imports this module
+    from sales_data_pipeline_spark.pipeline.fs import _fs
+
+    fs, p = _fs(spark, path)
     stream = fs.open(p)
     try:
         # read a bounded prefix (64 KiB) in 256-byte Py4J round trips:

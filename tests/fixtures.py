@@ -116,7 +116,7 @@ def patch_fs_rename(monkeypatch, hook):
     real = fsmod._fs
 
     def fake(spark_, path):
-        jvm, fs, p = real(spark_, path)
-        return jvm, _RenameIntercept(fs, hook), p
+        fs, p = real(spark_, path)
+        return _RenameIntercept(fs, hook), p
 
     monkeypatch.setattr(fsmod, "_fs", fake)

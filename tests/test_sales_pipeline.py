@@ -177,6 +177,59 @@ def test_state_missing_dir_is_empty_but_corrupt_dir_raises(spark, tmp_path):
         broken.stale_active_files()
 
 
+def test_audit_log_starts_no_spark_job(spark, cfg):
+    """Appends and the probe are metadata I/O through the FS API: no
+    Spark job runs for them."""
+    sc = spark.sparkContext
+    state = AuditState(spark, cfg.state_dir)
+    files = [f"{cfg.input_dir}/a.csv", f"{cfg.input_dir}/b.csv"]
+    sc.setJobGroup("audit-log", "audit log I/O")
+    try:
+        state.mark_active(files)
+        assert state.stale_active_files() == files
+        state.mark_inactive(files[:1])
+        assert state.stale_active_files() == files[1:]
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup("audit-log")) == []
+
+
+def test_audit_log_mixes_spark_written_appends_latest_wins(spark, cfg):
+    """A state dir holding an append Spark wrote (the log's earlier
+    writer) and appends from AuditState resolves latest-wins on
+    (updated_date, seq) across both, and Spark reads the whole dir."""
+    from sales_data_pipeline_spark.pipeline.state import _SCHEMA
+
+    now = dt.datetime.now()
+    hour = dt.timedelta(hours=1)
+    loc = {n: f"{cfg.input_dir}/{n}.csv" for n in "abcd"}
+    spark.createDataFrame(
+        [
+            ("a.csv", loc["a"], "A", now - hour, 1),
+            ("b.csv", loc["b"], "A", now - hour, 1),
+            ("c.csv", loc["c"], "I", now - hour, 1),
+            ("d.csv", loc["d"], "I", now + hour, 1),  # newer than the appends below
+        ],
+        _SCHEMA,
+    ).coalesce(1).write.mode("append").parquet(cfg.state_dir)
+
+    state = AuditState(spark, cfg.state_dir)
+    state.mark_inactive([loc["a"]])
+    state.mark_active([loc["c"], loc["d"]])
+    assert state.stale_active_files() == [loc["b"], loc["c"]]
+
+    from pathlib import Path
+
+    assert len(list(Path(cfg.state_dir).glob("*.parquet"))) == 3
+    log = spark.read.schema(_SCHEMA).parquet(cfg.state_dir)
+    got = sorted((r.file_name, r.status, r.seq) for r in log.collect())
+    assert got == [
+        ("a.csv", "A", 1), ("a.csv", "I", 1), ("b.csv", "A", 1), ("c.csv", "A", 2),
+        ("c.csv", "I", 1), ("d.csv", "A", 2), ("d.csv", "I", 1),
+    ]
+    assert log.filter(F.col("updated_date") > F.lit(now)).count() == 4
+
+
 def test_datewise_multifile_union(spark, cfg):
     """Datewise arrival (FIXTURES.md F2): one file per date; month
     bucketing spans files."""
@@ -301,6 +354,46 @@ def test_delete_path_idempotent(spark, tmp_path):
     assert delete_path(spark, str(tmp_path / "landing"), recursive=True) is True
 
 
+@pytest.mark.parametrize("rename", ["local", "refusing", "raising"])
+def test_move_file_creates_directory_and_replaces_destination(
+    spark, tmp_path, monkeypatch, rename
+):
+    """A move into a missing directory creates it; a move onto an
+    existing file replaces it. ``refusing`` emulates a filesystem whose
+    rename returns False for both (as HDFS does), ``raising`` one whose
+    rename throws (FileAlreadyExistsException / IOException, as the
+    Hadoop FS spec allows), so the move's fallback runs."""
+    from py4j.protocol import Py4JJavaError
+
+    from sales_data_pipeline_spark.pipeline.fs import move_file
+    from tests.fixtures import patch_fs_rename
+
+    jvm = spark.sparkContext._jvm
+
+    def strict_rename(fs, src, dst):
+        if fs.exists(dst):
+            refusal = jvm.org.apache.hadoop.fs.FileAlreadyExistsException(dst.toString())
+        elif not fs.exists(dst.getParent()):
+            refusal = jvm.java.io.IOException(dst.getParent().toString())
+        else:
+            return fs.rename(src, dst)
+        if rename == "raising":
+            raise Py4JJavaError("rename refused", refusal)
+        return False
+
+    if rename != "local":
+        patch_fs_rename(monkeypatch, strict_rename)
+    src = tmp_path / "in" / "a.csv"
+    src.parent.mkdir()
+    dst_dir = tmp_path / "archive" / "2023"
+    for body in ("first", "second"):
+        src.write_text(body)
+        out = move_file(spark, str(src), str(dst_dir))
+        assert out.endswith("/archive/2023/a.csv")
+        assert not src.exists()
+        assert (dst_dir / "a.csv").read_text() == body
+
+
 def test_pipeline_observe_metrics_match_fact(spark, tmp_path):
     """df.observe() scorecard rides the ingest action: metrics must
     equal an independent aggregation of the landed fact, with the nulls
@@ -397,6 +490,92 @@ def test_chaos_crash_between_mart_commit_and_state_flip(spark, cfg, monkeypatch)
         "day1.csv",
         "day2.csv",
     ]
+
+
+class _Crash(RuntimeError):
+    pass
+
+
+def _count_fs_state_calls(monkeypatch, calls: list[str], crash_at: int | None) -> None:
+    """Record every fs/state call run_pipeline makes in ``calls``; the
+    call with index ``crash_at`` raises _Crash instead of running."""
+    from sales_data_pipeline_spark.pipeline import sales_pipeline as sp
+
+    for owner, name in (
+        (sp.fs, "list_files"), (sp.fs, "move_file"), (AuditState, "stale_active_files"),
+        (AuditState, "mark_active"), (AuditState, "mark_inactive"),
+    ):
+        def call(*a, _real=getattr(owner, name), _name=name, **kw):
+            if len(calls) == crash_at:
+                raise _Crash(f"crash at call {crash_at} ({_name})")
+            calls.append(_name)
+            return _real(*a, **kw)
+
+        monkeypatch.setattr(owner, name, call)
+
+
+def _lake_outcome(spark, cfg) -> dict:
+    """Both marts' rows, where each input ended up, and the stale files."""
+    from pathlib import Path
+
+    def rows(mart):
+        df = spark.read.parquet(f"{cfg.output_dir}/{mart}")
+        return sorted((tuple(r) for r in df.select(sorted(df.columns)).collect()), key=repr)
+
+    def names(d):
+        return sorted(p.name for p in Path(d).glob("*.csv")) if Path(d).exists() else []
+
+    return {
+        "customers_data_mart": rows("customers_data_mart"),
+        "sales_team_data_mart": rows("sales_team_data_mart"),
+        "input": names(cfg.input_dir),
+        "processed": names(cfg.processed_dir),
+        "quarantine": names(cfg.quarantine_dir),
+        "stale": AuditState(spark, cfg.state_dir).stale_active_files(),
+    }
+
+
+def test_crash_at_any_fs_or_state_call_then_rerun_matches_uninterrupted(
+    spark, tmp_path, monkeypatch
+):
+    """Differential recovery: for each fs/state call index k of an
+    uninterrupted run, crash at k, rerun, and compare with the
+    uninterrupted run's lake. Both marts must be equal, every input must
+    end in exactly one of processed/ and quarantine/, and no file may
+    stay 'A' — in particular when the crash lands between two archive
+    moves or before the flip to 'I', where some stale files already sit
+    in processed/."""
+    customer, store, team = dim_frames(spark)
+
+    def lake(name):
+        root = tmp_path / name
+        (root / "in").mkdir(parents=True)
+        write_sales_csv(root / "in" / "day1.csv", n=60, seed=31)
+        write_sales_csv(root / "in" / "day2.csv", n=40, seed=32)
+        write_sales_csv(root / "in" / "bad.csv", n=10, seed=33, drop_store_id=True)
+        return PipelineConfig(
+            input_dir=str(root / "in"), quarantine_dir=str(root / "err"),
+            processed_dir=str(root / "done"), output_dir=str(root / "out"),
+            state_dir=str(root / "state"),
+        )
+
+    base_cfg, calls = lake("base"), []
+    with monkeypatch.context() as m:
+        _count_fs_state_calls(m, calls, crash_at=None)
+        run_pipeline(spark, base_cfg, customer, store, team)
+    want = _lake_outcome(spark, base_cfg)
+    assert want["input"] == [] and want["stale"] == []
+    assert want["processed"] == ["day1.csv", "day2.csv"] and want["quarantine"] == ["bad.csv"]
+    assert "mark_inactive" in calls and calls.count("move_file") == 3
+
+    for k, name in enumerate(calls):
+        cfg = lake(f"crash{k}")
+        with monkeypatch.context() as m:
+            _count_fs_state_calls(m, [], crash_at=k)
+            with pytest.raises(_Crash):
+                run_pipeline(spark, cfg, customer, store, team)
+        run_pipeline(spark, cfg, customer, store, team)
+        assert _lake_outcome(spark, cfg) == want, f"crash at call {k} ({name})"
 
 
 def test_failed_archive_rename_raises_and_keeps_file_active(spark, cfg, monkeypatch):
@@ -608,6 +787,8 @@ def test_strict_lint_blocks_cartesian_mart_before_any_publish(
 
     write_sales_csv(_in(cfg) / "sales1.csv", n=60, seed=9)
     customer, store, team = dim_frames(spark)
+    spark.catalog.clearCache()
+    cache = spark._jsparkSession.sharedState().cacheManager()
 
     real_mart = sp.customer_monthly_mart
 
@@ -622,6 +803,8 @@ def test_strict_lint_blocks_cartesian_mart_before_any_publish(
     out = Path(cfg.output_dir)
     assert not (out / "customers_data_mart").exists()
     assert not (out / "sales_team_data_mart").exists()
+    # the refused publish released what it cached in the session
+    assert cache.isEmpty()
     # pre-commit failure: file not archived, audit row still active
     assert (_in(cfg) / "sales1.csv").exists()
     assert AuditState(spark, cfg.state_dir).stale_active_files()
@@ -652,3 +835,35 @@ def test_empty_csv_is_quarantined_not_fatal(spark, cfg):
     assert missing == list(MANDATORY_COLUMNS)
     assert sorted(p.name for p in Path(cfg.quarantine_dir).iterdir()) == ["empty.csv"]
     assert Path(res.customer_mart_path).exists()
+
+
+def test_n_fact_rows_counts_fact_rows_before_the_dimension_joins(spark, cfg):
+    """A fact row whose customer_id is not in the customer dimension is
+    ingested (n_fact_rows, ingest_metrics) but dropped from the marts by
+    the inner join. The counts hold also when the joins drop every row
+    and when the only file is header-only: the cached enriched frame is
+    then empty."""
+    p = write_sales_csv(_in(cfg) / "s.csv", n=30, seed=81)
+    head, *rows = p.read_text().splitlines()
+    stray = "999" + rows[0][rows[0].index(","):]
+    stray_cost = Decimal(stray.rsplit(",", 1)[1])
+    p.write_text("\n".join([head, *rows, stray]) + "\n")
+    customer, store, team = dim_frames(spark)
+
+    res = run_pipeline(spark, cfg, customer, store, team)
+    assert res.n_fact_rows == res.ingest_metrics["n_rows"] == 31
+    mart = spark.read.parquet(res.customer_mart_path)
+    assert mart.filter(F.col("customer_id") == 999).count() == 0
+    mart_total = mart.agg(F.sum("total_sales")).collect()[0][0]
+    assert mart_total == res.ingest_metrics["sum_cost"] - stray_cost
+
+    (_in(cfg) / "strays.csv").write_text("\n".join([head] + [stray] * 5) + "\n")
+    res = run_pipeline(spark, cfg, customer, store, team)
+    assert res.n_fact_rows == 5
+    assert res.ingest_metrics["sum_cost"] == 5 * stray_cost
+
+    (_in(cfg) / "header_only.csv").write_text(head + "\n")
+    res = run_pipeline(spark, cfg, customer, store, team)
+    assert [p.rsplit("/", 1)[-1] for p in res.accepted_files] == ["header_only.csv"]
+    assert res.n_fact_rows == 0
+    assert res.ingest_metrics == {"n_rows": 0, "n_null_cost": None, "sum_cost": None}
