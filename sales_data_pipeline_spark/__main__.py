@@ -5,7 +5,7 @@ main.py, top-to-bottom side effects); here the same capability is an
 explicit CLI over the library API, safe to invoke from cron/Airflow or
 spark-submit:
 
-  python -m sales_data_pipeline_spark pipeline --input-dir ... --output-dir ...
+  python -m sales_data_pipeline_spark pipeline --input-dir ... --output-dir ... --dims-dir ...
   python -m sales_data_pipeline_spark query q01_pricing_summary --sf-dir ...
   python -m sales_data_pipeline_spark list
   python -m sales_data_pipeline_spark lint q01_pricing_summary   # or --all
@@ -16,9 +16,9 @@ spark-submit:
   python -m sales_data_pipeline_spark verify-export --out-dir ...
   python -m sales_data_pipeline_spark backfill --table-dir ... --source-dir ... --partition-col day --values d1,d2
 
-Dimension tables for the sales pipeline default to the seed frames the
-tests use (tests/fixtures.py mirrors the reference's seeded MySQL dims);
-point --dims-dir at parquet dims for real runs.
+The sales pipeline reads its dimension tables either from parquet
+(--dims-dir holding customer/, store/ and sales_team/) or from the
+database named by --jdbc-url; exactly one of the two is required.
 """
 
 from __future__ import annotations
@@ -36,38 +36,38 @@ def _spark(app: str):
     return spark
 
 
-def _load_dims(spark, dims_dir: str | None):
-    if dims_dir:
-        return tuple(
-            spark.read.parquet(f"{dims_dir}/{t}")
-            for t in ("customer", "store", "sales_team")
-        )
-    try:
-        from tests.fixtures import dim_frames
-    except ImportError as ex:  # deployed without the test fixtures
-        raise SystemExit(
-            "--dims-dir is required outside the dev checkout "
-            "(seed dims live in tests/fixtures.py)"
-        ) from ex
-    return dim_frames(spark)
+def _add_path_flags(sp) -> None:
+    sp.add_argument("--input-dir", required=True)
+    sp.add_argument("--output-dir", required=True)
+    sp.add_argument("--quarantine-dir")
+    sp.add_argument("--processed-dir")
+    sp.add_argument("--state-dir")
 
 
-def _cmd_pipeline(args) -> int:
-    from sales_data_pipeline_spark.pipeline import (
-        JdbcTopology,
-        PipelineConfig,
-        run_pipeline,
-        run_pipeline_jdbc,
-    )
+def _config(args):
+    """PipelineConfig from the path flags; the quarantine, processed and
+    state dirs default to _quarantine, _processed and _state under
+    --output-dir."""
+    from sales_data_pipeline_spark.pipeline import PipelineConfig
 
-    spark = _spark("sales-pipeline")
-    cfg = PipelineConfig(
+    return PipelineConfig(
         input_dir=args.input_dir,
         quarantine_dir=args.quarantine_dir or f"{args.output_dir}/_quarantine",
         processed_dir=args.processed_dir or f"{args.output_dir}/_processed",
         output_dir=args.output_dir,
         state_dir=args.state_dir or f"{args.output_dir}/_state",
     )
+
+
+def _cmd_pipeline(args) -> int:
+    from sales_data_pipeline_spark.pipeline import (
+        JdbcTopology,
+        run_pipeline,
+        run_pipeline_jdbc,
+    )
+
+    spark = _spark("sales-pipeline")
+    cfg = _config(args)
     if args.jdbc_url:
         # the reference's deployment shape: dims from the database,
         # marts published back after the parquet commit
@@ -78,7 +78,10 @@ def _cmd_pipeline(args) -> int:
             spark, cfg, JdbcTopology(url=args.jdbc_url, properties=props)
         )
     else:
-        customer, store, team = _load_dims(spark, args.dims_dir)
+        customer, store, team = (
+            spark.read.parquet(f"{args.dims_dir}/{t}")
+            for t in ("customer", "store", "sales_team")
+        )
         res = run_pipeline(spark, cfg, customer, store, team)
     print(
         json.dumps(
@@ -122,20 +125,12 @@ def _cmd_list(args) -> int:
 def _cmd_replay(args) -> int:
     """Re-validate quarantined inputs and requeue the fixed ones
     (pipeline.sales_pipeline.replay_quarantine)."""
-    from sales_data_pipeline_spark.pipeline import PipelineConfig
     from sales_data_pipeline_spark.pipeline.sales_pipeline import (
         replay_quarantine,
     )
 
     spark = _spark("quarantine-replay")
-    cfg = PipelineConfig(
-        input_dir=args.input_dir,
-        quarantine_dir=args.quarantine_dir or f"{args.output_dir}/_quarantine",
-        processed_dir=args.processed_dir or f"{args.output_dir}/_processed",
-        output_dir=args.output_dir,
-        state_dir=args.state_dir or f"{args.output_dir}/_state",
-    )
-    print(json.dumps(replay_quarantine(spark, cfg)))
+    print(json.dumps(replay_quarantine(spark, _config(args))))
     return 0
 
 
@@ -314,13 +309,12 @@ def main(argv: list[str] | None = None) -> int:
     sub = p.add_subparsers(dest="cmd", required=True)
 
     sp = sub.add_parser("pipeline", help="run the batch sales ETL")
-    sp.add_argument("--input-dir", required=True)
-    sp.add_argument("--output-dir", required=True)
-    sp.add_argument("--quarantine-dir")
-    sp.add_argument("--processed-dir")
-    sp.add_argument("--state-dir")
-    sp.add_argument("--dims-dir")
-    sp.add_argument(
+    _add_path_flags(sp)
+    dims = sp.add_mutually_exclusive_group(required=True)
+    dims.add_argument(
+        "--dims-dir", help="parquet dims: customer/, store/ and sales_team/"
+    )
+    dims.add_argument(
         "--jdbc-url",
         help="database topology: read dims from and publish marts to this JDBC url",
     )
@@ -348,11 +342,7 @@ def main(argv: list[str] | None = None) -> int:
     sr = sub.add_parser(
         "replay", help="re-validate quarantined inputs, requeue fixed files"
     )
-    sr.add_argument("--input-dir", required=True)
-    sr.add_argument("--output-dir", required=True)
-    sr.add_argument("--quarantine-dir")
-    sr.add_argument("--processed-dir")
-    sr.add_argument("--state-dir")
+    _add_path_flags(sr)
     sr.set_defaults(fn=_cmd_replay)
 
     ss = sub.add_parser(

@@ -27,11 +27,6 @@ TABLES: tuple[str, ...] = (
     "embeddings",
 )
 
-# Tables small enough to broadcast in joins at any realistic scale factor
-# (regions/nations are bounded domains; supplier here is tiny). customer
-# and part grow with SF — never force-broadcast those.
-BROADCAST_DIMS: frozenset[str] = frozenset({"region", "nation", "supplier"})
-
 
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Lazy parquet relation for one table (types normalized)."""
@@ -71,14 +66,11 @@ def normalize_event_ts(df: DataFrame, col: str = "ts") -> DataFrame:
     return df
 
 
-def load_tables(
-    spark: SparkSession, sf_dir: str, register_views: bool = True
-) -> dict[str, DataFrame]:
-    """All tables as a dict; optionally registered as temp views."""
+def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
+    """All tables as a dict, each also registered as a temp view."""
     out: dict[str, DataFrame] = {}
     for name in TABLES:
         df = table(spark, sf_dir, name)
-        if register_views:
-            df.createOrReplaceTempView(name)
+        df.createOrReplaceTempView(name)
         out[name] = df
     return out

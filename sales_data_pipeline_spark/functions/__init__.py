@@ -1,15 +1,1 @@
 """Scalar / vector / hashing column functions (all JVM-side built-ins)."""
-
-from sales_data_pipeline_spark.functions.scalars import (  # noqa: F401
-    decimal_sum,
-    exact_avg,
-    fold_extras_json,
-    full_name,
-    money,
-    month_bucket,
-)
-from sales_data_pipeline_spark.functions.vectors import (  # noqa: F401
-    cosine_similarity,
-    dot_product,
-    l2_norm,
-)

@@ -23,20 +23,6 @@ def money(col: Column | str) -> Column:
     return F.col(col).cast(MONEY) if isinstance(col, str) else col.cast(MONEY)
 
 
-def decimal_sum(col: Column | str, alias: str) -> Column:
-    """Order-independent (exact) money sum, surfaced as double.
-
-    sum(decimal) is exact, so the result does not depend on partition
-    count or merge order — a float sum would differ run to run at scale.
-    """
-    return F.sum(money(col)).cast("double").alias(alias)
-
-
-def exact_avg(col: Column | str, alias: str) -> Column:
-    """Average via exact decimal sum / count (order-independent)."""
-    return (F.sum(money(col)).cast("double") / F.count(F.lit(1))).alias(alias)
-
-
 def month_bucket(col: Column | str, alias: str = "sales_month") -> Column:
     """DATE/TIMESTAMP → 'yyyy-MM' month bucket.
 

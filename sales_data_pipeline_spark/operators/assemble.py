@@ -17,6 +17,11 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+# Digits every share, weight and token figure is rounded to.
+_ROUND_DIGITS = 6
+# Fixed-point scale of temperature_mixture_sqrt's integer square roots.
+_SQRT_SCALE = 100_000_000
+
 
 def shard_assignment(
     df: DataFrame,
@@ -59,7 +64,6 @@ def mixture_weights(
     domain_col: str = "source",
     size_col: str | None = None,
     target_shares: dict[str, float] | None = None,
-    round_digits: int = 6,
 ) -> DataFrame:
     """Per-domain sampling weights to hit a target mixture (the static
     DoReMi/Pile-style domain reweighting table a sampler consumes):
@@ -104,10 +108,10 @@ def mixture_weights(
         "domain",
         "n_rows",
         "n_units",
-        F.round(share, round_digits).alias("unit_share"),
-        F.round(target, round_digits).alias("target_share"),
+        F.round(share, _ROUND_DIGITS).alias("unit_share"),
+        F.round(target, _ROUND_DIGITS).alias("target_share"),
         # zero-pool domain -> NULL weight, not DIVIDE_BY_ZERO
-        F.when(share > 0, F.round(target / share, round_digits)).alias(
+        F.when(share > 0, F.round(target / share, _ROUND_DIGITS)).alias(
             "mix_weight"
         ),
     )
@@ -120,7 +124,6 @@ def mixture_epochs(
     target_shares: dict[str, float] | None = None,
     token_budget: float | None = None,
     max_epochs: float = 4.0,
-    round_digits: int = 6,
 ) -> DataFrame:
     """Data-constrained mixture audit: how many EPOCHS of each domain
     does a (target mixture × total token budget) training plan imply,
@@ -202,14 +205,14 @@ def mixture_epochs(
     return agg.select(
         "domain",
         "available_tokens",
-        F.round(target, round_digits).alias("target_share"),
-        F.round(want, round_digits).alias("target_tokens"),
+        F.round(target, _ROUND_DIGITS).alias("target_share"),
+        F.round(want, _ROUND_DIGITS).alias("target_tokens"),
         # zero pool -> NULL, not DIVIDE_BY_ZERO under ANSI mode
         F.when(
-            F.col("available_tokens") > 0, F.round(want / avail, round_digits)
+            F.col("available_tokens") > 0, F.round(want / avail, _ROUND_DIGITS)
         ).alias("epochs"),
         (want > cap).alias("over_cap"),
-        F.round(F.greatest(want - cap, F.lit(0.0)), round_digits).alias(
+        F.round(F.greatest(want - cap, F.lit(0.0)), _ROUND_DIGITS).alias(
             "shortfall_tokens"
         ),
     )
@@ -279,7 +282,6 @@ def temperature_mixture_sqrt(
     df: DataFrame,
     domain_col: str = "source",
     size_col: str | None = None,
-    scale: int = 100_000_000,
 ) -> DataFrame:
     """Temperature-based domain sampling shares at α=1/2, with EXACT
     cross-engine numerics — the α-smoothing rule multilingual/multi-
@@ -289,16 +291,15 @@ def temperature_mixture_sqrt(
     across engines.
 
     For α=1/2, n^α = √n, and √ IS exactly computable in integers:
-    p_i = isqrt(n_i · scale) is a BIGINT (a fixed-point √n with
-    relative quantization error < 1/(√(n·scale))), so every total is
+    p_i = isqrt(n_i · 10⁸) is a BIGINT (a fixed-point √n with
+    relative quantization error < 1/(√(n·10⁸))), so every total is
     an exact BIGINT sum and every share is ONE double division of
     exact integers — bitwise identical in Spark and DuckDB with no
     rounding step at all (the q229 integer-exact discipline).
 
     Output (domain, n_units, unit_share, temp_share, mix_weight),
-    shares as unrounded doubles. Headroom: n_units·scale must fit
-    int64, i.e. n_units ≤ ~9.2e10 at the default scale — beyond that
-    (100 TB domains) drop scale; precision degrades gracefully.
+    shares as unrounded doubles. Headroom: n_units·10⁸ must fit
+    int64, i.e. n_units ≤ ~9.2e10.
     Plan: one map-side-combined groupBy to |domains| rows, windows
     only over that aggregate. Empty domains (n_units = 0) get NULL
     shares via try_divide: under ANSI mode a bare ratio would raise
@@ -310,7 +311,7 @@ def temperature_mixture_sqrt(
         F.sum(unit).cast("bigint").alias("n_units")
     )
     w = W.partitionBy()
-    p = _isqrt(F.col("n_units") * F.lit(scale).cast("bigint"))
+    p = _isqrt(F.col("n_units") * F.lit(_SQRT_SCALE).cast("bigint"))
     powed = agg.withColumn("p", p)
     u = F.try_divide(
         F.col("n_units").cast("double"),
@@ -333,7 +334,6 @@ def unimax_allocation(
     size_col: str | None = None,
     token_budget: float | None = None,
     max_epochs: float = 4.0,
-    round_digits: int = 6,
 ) -> DataFrame:
     """UniMax budget allocation (Chung et al., ICLR 2023: "UniMax:
     Fairer and More Effective Language Sampling for Large-Scale
@@ -418,12 +418,12 @@ def unimax_allocation(
     return staged.select(
         "domain",
         "available_tokens",
-        F.round(F.col("__cap"), round_digits).alias("capacity_tokens"),
-        F.round(alloc, round_digits).alias("alloc_tokens"),
+        F.round(F.col("__cap"), _ROUND_DIGITS).alias("capacity_tokens"),
+        F.round(alloc, _ROUND_DIGITS).alias("alloc_tokens"),
         F.when(
             F.col("available_tokens") > 0,
             F.round(
-                alloc / F.col("available_tokens").cast("double"), round_digits
+                alloc / F.col("available_tokens").cast("double"), _ROUND_DIGITS
             ),
         ).alias("epochs"),
         F.col("__at_cap").alias("at_cap"),

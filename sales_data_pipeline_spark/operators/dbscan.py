@@ -191,18 +191,17 @@ def dbscan(
     vec_col: str = "vec",
     id_col: str = "vec_id",
     dims: int | None = None,
-    max_candidate_pairs: int | None = DEFAULT_MAX_CANDIDATE_PAIRS,
 ) -> DataFrame:
     """(id_col, cluster bigint, is_core boolean) for every input row;
     noise rows carry cluster = -1. See module docstring for the
     algorithm and determinism contract.
 
-    ``max_candidate_pairs`` (default 10^8, r10) threads straight to the
-    internal ``eps_pairs`` stage: a saturated ε-space (mean cell
+    The internal ``eps_pairs`` stage runs with its default 10^8
+    ``max_candidate_pairs`` fence: a saturated ε-space (mean cell
     occupancy >> 1 — the regime where the ε-graph grows quadratically
     in density, measured ×99.2/decade at sf10) dies in the pair join's
     first task naming the density-independent tiers, instead of
-    melting the cluster. ``None`` to run unguarded.
+    melting the cluster.
 
     Dimensionality contract (raises ValueError for dims > 4, new in
     r7 when the pair stage moved to ``eps_pairs``): the 3^d grid-cell
@@ -244,7 +243,6 @@ def dbscan(
         d,
         vec_col="v",
         id_col="pid",
-        max_candidate_pairs=max_candidate_pairs,
     )
     # |N_eps(p)| is self-inclusive: the a==b pair falls out of the join
     counts = pairs.groupBy("a_id").agg(F.count(F.lit(1)).alias("n_nb"))

@@ -59,6 +59,14 @@ from sales_data_pipeline_spark.operators.text import (
     tokens,
 )
 
+# MinHash/LSH geometry of the pair, contamination and incremental paths:
+# word 3-gram shingles, 64 permutations, 16 bands of 4 rows. An index
+# minhash_index builds matches the signatures incremental_neardup_lsh
+# computes because both read these.
+_SHINGLE_N = 3
+_NUM_PERM = 64
+_BANDS = 16
+
 
 # ---------------------------------------------------------------------------
 # exact
@@ -449,9 +457,6 @@ def minhash_lsh_pairs(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    n: int = 3,
-    num_perm: int = 64,
-    bands: int = 16,
     threshold: float = 0.6,
     persist: bool = True,
     max_bucket_size: int | None = None,
@@ -475,17 +480,17 @@ def minhash_lsh_pairs(
     usually still catch them); run exact_dedup first so identical-doc
     storms never reach LSH — then real corpora essentially never
     trip the cap. None (default) = off, exact r1-compatible output."""
-    rows = num_perm // bands
+    rows = _NUM_PERM // _BANDS
     # one shingle pass feeds BOTH the signatures and the exact-verify
     # arrays below; persist so it materializes once
-    sets = _shingle_sets(df, id_col, text_col, n, spread=True)
+    sets = _shingle_sets(df, id_col, text_col, _SHINGLE_N, spread=True)
     if persist:
         sets = _persist(sets)
-    sig = _signatures_from_sets(sets, num_perm)
+    sig = _signatures_from_sets(sets, _NUM_PERM)
     band_arr = F.array(
         *[
             F.xxhash64(*[F.col(f"h{b * rows + r}") for r in range(rows)], F.lit(b))
-            for b in range(bands)
+            for b in range(_BANDS)
         ]
     )
     buckets = sig.select(
@@ -718,9 +723,6 @@ def fuzzy_contamination_pairs(
     corpus_id: str = "doc_id",
     bench_id: str = "bench_id",
     text_col: str = "text",
-    n: int = 3,
-    num_perm: int = 64,
-    bands: int = 16,
     threshold: float = 0.6,
     persist: bool = True,
 ) -> DataFrame:
@@ -744,19 +746,19 @@ def fuzzy_contamination_pairs(
     Recall is the banded-LSH curve 1-(1-t^r)^b; precision 1.0 by
     construction (every emitted pair verified). Output:
     (corpus_id, bench_id, jaccard)."""
-    c_sets = _shingle_sets(corpus, corpus_id, text_col, n)
-    b_sets = _shingle_sets(benchmark, bench_id, text_col, n)
+    c_sets = _shingle_sets(corpus, corpus_id, text_col, _SHINGLE_N)
+    b_sets = _shingle_sets(benchmark, bench_id, text_col, _SHINGLE_N)
     if persist:
         c_sets = _persist(c_sets)
         b_sets = _persist(b_sets)
-    rows = num_perm // bands
+    rows = _NUM_PERM // _BANDS
 
     def _buckets(sets: DataFrame, out: str) -> DataFrame:
-        sig = _signatures_from_sets(sets, num_perm)
+        sig = _signatures_from_sets(sets, _NUM_PERM)
         band_arr = F.array(
             *[
                 F.xxhash64(*[F.col(f"h{b * rows + r}") for r in range(rows)], F.lit(b))
-                for b in range(bands)
+                for b in range(_BANDS)
             ]
         )
         return sig.select(F.col("doc").alias(out), F.posexplode(band_arr).alias("band", "bucket"))
@@ -787,16 +789,14 @@ def minhash_index(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    n: int = 3,
-    num_perm: int = 64,
 ) -> DataFrame:
     """Persistent near-dup INDEX for incremental ingestion: one row per
-    doc, columns (doc, h0..h{num_perm-1}) — the MinHash signatures
+    doc, columns (doc, h0..h63) — the MinHash signatures
     alone, NOT the shingle sets. This is what a production pipeline
     stores between batches: 64·8 bytes per historical doc (constant,
     text-length-independent), enough to ESTIMATE Jaccard against any
     future batch without re-reading historical text. Map-only."""
-    return minhash_signatures(df, id_col, text_col, n, num_perm)
+    return minhash_signatures(df, id_col, text_col, _SHINGLE_N, _NUM_PERM)
 
 
 def incremental_neardup_lsh(
@@ -804,9 +804,6 @@ def incremental_neardup_lsh(
     index: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    n: int = 3,
-    num_perm: int = 64,
-    bands: int = 16,
     threshold: float = 0.6,
 ) -> DataFrame:
     """Incremental near-dup gate: which BATCH docs near-duplicate any
@@ -818,7 +815,7 @@ def incremental_neardup_lsh(
 
     Candidates: banded bucket join (batch signatures × index
     signatures, bipartite — no history×history pairs). Verification:
-    the MINHASH ESTIMATE Ĵ = (#matching components)/num_perm — the
+    the MINHASH ESTIMATE Ĵ = (#matching components)/64 — the
     standard unbiased estimator (E[Ĵ] = J, σ = √(J(1−J)/k) ≈ 0.06 at
     k=64) — because exact verification would require historical
     shingle sets, defeating the signature-only storage contract.
@@ -826,14 +823,14 @@ def incremental_neardup_lsh(
     missed and a slightly-below-t pair can be flagged, both within
     ~2σ of the threshold (quantified in tests against exact Jaccard).
     Output: (batch doc id, history doc id, est_jaccard)."""
-    rows = num_perm // bands
-    b_sig = minhash_signatures(batch, id_col, text_col, n, num_perm)
+    rows = _NUM_PERM // _BANDS
+    b_sig = minhash_signatures(batch, id_col, text_col, _SHINGLE_N, _NUM_PERM)
 
     def _buckets(sig: DataFrame, out: str) -> DataFrame:
         band_arr = F.array(
             *[
                 F.xxhash64(*[F.col(f"h{b * rows + r}") for r in range(rows)], F.lit(b))
-                for b in range(bands)
+                for b in range(_BANDS)
             ]
         )
         return sig.select(
@@ -847,13 +844,13 @@ def incremental_neardup_lsh(
         .distinct()
     )
     matches = sum(
-        (F.col(f"nh{i}") == F.col(f"oh{i}")).cast("int") for i in range(num_perm)
+        (F.col(f"nh{i}") == F.col(f"oh{i}")).cast("int") for i in range(_NUM_PERM)
     )
     new_sig = b_sig.select(
-        F.col("doc").alias("__new"), *[F.col(f"h{i}").alias(f"nh{i}") for i in range(num_perm)]
+        F.col("doc").alias("__new"), *[F.col(f"h{i}").alias(f"nh{i}") for i in range(_NUM_PERM)]
     )
     old_sig = index.select(
-        F.col("doc").alias("__old"), *[F.col(f"h{i}").alias(f"oh{i}") for i in range(num_perm)]
+        F.col("doc").alias("__old"), *[F.col(f"h{i}").alias(f"oh{i}") for i in range(_NUM_PERM)]
     )
     return (
         candidates.join(new_sig, "__new")
@@ -861,7 +858,7 @@ def incremental_neardup_lsh(
         .select(
             F.col("__new").alias("new_doc"),
             F.col("__old").alias("history_doc"),
-            (matches / F.lit(num_perm)).alias("est_jaccard"),
+            (matches / F.lit(_NUM_PERM)).alias("est_jaccard"),
         )
         .filter(F.col("est_jaccard") >= threshold)
     )
@@ -1020,7 +1017,6 @@ def shingle_cooccurrence_edges(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    n: int = 3,
     max_shingle_freq: int | None = 1_000,
 ) -> DataFrame:
     """Canonical (doc_a < doc_b) edge list of the shared-shingle
@@ -1065,7 +1061,7 @@ def shingle_cooccurrence_edges(
     no-op on any input whose scan already parallelizes."""
     from sales_data_pipeline_spark.operators.scale import spread_scan
 
-    occ = _shingle_index(spread_scan(df.select(id_col, text_col)), id_col, text_col, n)
+    occ = _shingle_index(spread_scan(df.select(id_col, text_col)), id_col, text_col, _SHINGLE_N)
     if max_shingle_freq is not None:
         # df cap via ONE shingle-keyed window, not groupBy+join-back
         # (r13, the q22 lesson): the join shape consumed the persisted
@@ -1099,7 +1095,6 @@ def jaccard_pair_estimate(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    n: int = 3,
     threshold: float = 0.6,
     target_cooccur: int = 10_000_000,
     salt: str = "",
@@ -1143,7 +1138,7 @@ def jaccard_pair_estimate(
     and feeds only the df census; the sampled sub-corpus feeds the
     exact tier, which persists its own ordered sets. Nothing in the
     plan exceeds target_cooccur join rows plus two linear scans."""
-    occ = _persist(_shingle_index(df, id_col, text_col, n))
+    occ = _persist(_shingle_index(df, id_col, text_col, _SHINGLE_N))
     dfreq = occ.groupBy("shingle").agg(F.count(F.lit(1)).alias("__df"))
     d19 = F.col("__df").cast("decimal(19,0)")
     census = dfreq.agg(
@@ -1198,7 +1193,7 @@ def jaccard_pair_estimate(
         .select(id_col, text_col)
     )
     pairs = ngram_jaccard_pairs(
-        sampled, id_col=id_col, text_col=text_col, n=n, threshold=threshold
+        sampled, id_col=id_col, text_col=text_col, n=_SHINGLE_N, threshold=threshold
     )
     n_pairs = pairs.agg(F.count(F.lit(1)).cast("bigint").alias("__np"))
     p = F.col("__p")

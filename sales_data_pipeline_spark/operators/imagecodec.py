@@ -53,7 +53,7 @@ def _png_chunk(ctype: bytes, body: bytes) -> bytes:
     )
 
 
-def encode_png(width: int, height: int, rgb: bytes, *, level: int = 6) -> bytes:
+def encode_png(width: int, height: int, rgb: bytes) -> bytes:
     """Minimal valid PNG: 8-bit RGB (color type 2), non-interlaced,
     filter type 0 on every scanline, one IDAT. Inverse of
     :func:`decode_png`; used by tests/queries to generate REAL
@@ -68,7 +68,7 @@ def encode_png(width: int, height: int, rgb: bytes, *, level: int = 6) -> bytes:
     return (
         _PNG_SIG
         + _png_chunk(b"IHDR", ihdr)
-        + _png_chunk(b"IDAT", zlib.compress(raw, level))
+        + _png_chunk(b"IDAT", zlib.compress(raw, 6))
         + _png_chunk(b"IEND", b"")
     )
 

@@ -94,14 +94,12 @@ def scd2_merge(
     keys: Sequence[str],
     version_col: str = "version",
     current_col: str = "is_current",
-    base_version: int = 0,
-    batch_version: int = 1,
 ) -> DataFrame:
     """History-keeping (SCD type-2) MERGE: every base row is retained —
     rows superseded by the change batch are closed out
     (``is_current=false``), untouched rows stay current, and every
-    change row (update or insert) lands as the current
-    ``batch_version``. Deterministic version numbers instead of wall-
+    change row (update or insert) lands as the current version 1 (base
+    rows carry version 0). Deterministic version numbers instead of wall-
     clock validity timestamps keep the result bit-reproducible (the
     caller maps versions to batch timestamps in its own audit table —
     same design as pipeline/state.py's append-only log).
@@ -110,12 +108,12 @@ def scd2_merge(
     read once and never shuffled."""
     tagged = (
         base.join(_marker(changes, keys), list(keys), "left")
-        .withColumn(version_col, F.lit(base_version).cast("int"))
+        .withColumn(version_col, F.lit(0).cast("int"))
         .withColumn(current_col, F.col("__matched").isNull())
         .drop("__matched")
     )
     incoming = changes.withColumn(
-        version_col, F.lit(batch_version).cast("int")
+        version_col, F.lit(1).cast("int")
     ).withColumn(current_col, F.lit(True))
     return tagged.unionByName(incoming)
 

@@ -34,6 +34,11 @@ DECODED_SCHEMA = (
 )
 FRAME_SCHEMA = "media_id long, frame_no int, frame_bytes binary"
 
+# Side in pixels of synth_image_payloads' square images.
+_SYNTH_SIDE = 16
+# image_ahash's block grid: 8×8 cells, one bit each, fill the 64-bit hash.
+_AHASH_GRID = 8
+
 
 def attach_binary_payload(
     df: DataFrame, id_col: str, text_col: str = "text"
@@ -374,10 +379,9 @@ def synth_image_payloads(
     df: DataFrame,
     id_col: str = "doc_id",
     formats: tuple[str, ...] = ("ppm",),
-    size: int = 16,
 ) -> DataFrame:
     """Deterministic synthetic images attached per row, one payload per
-    requested format: pixel byte k of row id is (id·31 + k·7) mod 256
+    requested format, 16×16 RGB: pixel byte k of row id is (id·31 + k·7) mod 256
     — arithmetic simple enough that a SQL oracle can recompute the
     DECODED raster independently (the q91 WAV pattern), which is what
     upgrades the PNG codec from round-trip-tested to oracle-checked
@@ -399,7 +403,7 @@ def synth_image_payloads(
         )
 
         n = len(formats)
-        k = np.arange(size * size * 3, dtype=np.int64)
+        k = np.arange(_SYNTH_SIDE * _SYNTH_SIDE * 3, dtype=np.int64)
         for pdf in batches:
             ids, payloads = [], []
             for mid in pdf[id_col]:
@@ -407,13 +411,13 @@ def synth_image_payloads(
                 rgb = ((mid * 31 + k * 7) % 256).astype(np.uint8).tobytes()
                 for j, fmt in enumerate(formats):
                     if fmt == "ppm":
-                        p = encode_ppm(size, size, rgb)
+                        p = encode_ppm(_SYNTH_SIDE, _SYNTH_SIDE, rgb)
                     elif fmt == "png":
-                        p = encode_png(size, size, rgb)
+                        p = encode_png(_SYNTH_SIDE, _SYNTH_SIDE, rgb)
                     else:
                         p = encode_jpeg_baseline(
                             np.frombuffer(rgb, dtype=np.uint8).reshape(
-                                size, size, 3
+                                _SYNTH_SIDE, _SYNTH_SIDE, 3
                             ),
                             quality=95,
                         )
@@ -494,10 +498,10 @@ def audio_spectral_features(df: DataFrame) -> DataFrame:
 AHASH_SCHEMA = "media_id long, ahash long, ahash_hex string"
 
 
-def image_ahash(df: DataFrame, grid: int = 8) -> DataFrame:
+def image_ahash(df: DataFrame) -> DataFrame:
     """Average-hash (aHash) perceptual fingerprint per image — the
     classic public perceptual-hash recipe: grayscale → downsample to
-    ``grid×grid`` block means → threshold each cell at the global mean
+    8×8 block means → threshold each cell at the global mean
     → pack row-major into a 64-bit signature. Two images whose hashes
     differ in few bits are visually near-identical even when their
     BYTES differ everywhere (re-encode, brightness shift), which is
@@ -532,16 +536,16 @@ def image_ahash(df: DataFrame, grid: int = 8) -> DataFrame:
                 w, h, px = decode_image_rgb(raw)
                 px = px.astype(np.int64)
                 luma = (299 * px[:, :, 0] + 587 * px[:, :, 1] + 114 * px[:, :, 2]) // 1000
-                # integer block means over a grid×grid partition of the
+                # integer block means over an 8×8 partition of the
                 # image (blocks cover the whole image, ragged at edges)
-                ys = [h * i // grid for i in range(grid + 1)]
-                xs = [w * i // grid for i in range(grid + 1)]
-                cells = np.empty((grid, grid), dtype=np.int64)
-                for i in range(grid):
-                    for j in range(grid):
+                ys = [h * i // _AHASH_GRID for i in range(_AHASH_GRID + 1)]
+                xs = [w * i // _AHASH_GRID for i in range(_AHASH_GRID + 1)]
+                cells = np.empty((_AHASH_GRID, _AHASH_GRID), dtype=np.int64)
+                for i in range(_AHASH_GRID):
+                    for j in range(_AHASH_GRID):
                         blk = luma[ys[i]:ys[i + 1], xs[j]:xs[j + 1]]
                         cells[i, j] = int(blk.sum()) // max(blk.size, 1)
-                thresh = int(cells.sum()) // (grid * grid)
+                thresh = int(cells.sum()) // (_AHASH_GRID * _AHASH_GRID)
                 bits = (cells > thresh).flatten()
                 v = 0
                 for bit in bits:

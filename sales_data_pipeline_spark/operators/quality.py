@@ -144,7 +144,6 @@ def char_entropy(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    round_digits: int = 6,
 ) -> DataFrame:
     """Shannon entropy of the character distribution per document (bits
     of surprise per char, natural log) — the classic cheap proxy for LM
@@ -156,7 +155,7 @@ def char_entropy(
     using the closed form  H = ln(t) − (Σ n·ln n)/t  (algebraically
     −Σ p·ln p, but needing no second pass for t) — the same linear
     two-shuffle shape as repetition_stats, no join. Entropy is rounded
-    (default 6 digits) because a float sum's accumulation order varies
+    to 6 digits because a float sum's accumulation order varies
     with partitioning; 1e-15 noise must not flip the oracle hash."""
     ch = df.select(
         F.col(id_col).alias("doc"), F.explode(F.split(text_col, "")).alias("c")
@@ -169,7 +168,7 @@ def char_entropy(
         .agg(
             F.sum("n").cast("bigint").alias("n_chars"),
             F.count(F.lit(1)).cast("bigint").alias("n_distinct_chars"),
-            F.round(F.log(t) - s / t, round_digits).alias("entropy"),
+            F.round(F.log(t) - s / t, 6).alias("entropy"),
         )
         .select(F.col("doc").alias(id_col), "n_chars", "n_distinct_chars", "entropy")
     )
@@ -287,12 +286,10 @@ def decontaminate(
     id_col: str = "doc_id",
     text_col: str = "text",
     n: int = 5,
-    max_overlap: int = 0,
 ) -> DataFrame:
-    """Benchmark decontamination REMOVAL: drop every corpus doc whose
-    distinct n-gram overlap with the benchmark set exceeds
-    ``max_overlap`` (default: any shared n-gram disqualifies — the
-    strict eval-hygiene setting). Complement of ``contamination``,
+    """Benchmark decontamination REMOVAL: drop every corpus doc that
+    shares any n-gram with the benchmark set (the strict eval-hygiene
+    setting). Complement of ``contamination``,
     which only reports the census; training pipelines run the census
     for monitoring and this operator for the actual cut.
 
@@ -320,7 +317,7 @@ def decontaminate(
         corpus_sh.join(bench_vocab, "shingle", "left_semi")
         .groupBy("__doc")
         .agg(F.count(F.lit(1)).alias("__n_overlap"))
-        .filter(F.col("__n_overlap") > max_overlap)
+        .filter(F.col("__n_overlap") > 0)
         .select(F.col("__doc").alias(id_col))
     )
     return corpus.join(offenders, id_col, "left_anti")
@@ -393,7 +390,7 @@ def passage_dedup_rewrite(
     )
 
 
-def compressed_size(col: Column | str, level: int = 6) -> Column:
+def compressed_size(col: Column | str) -> Column:
     """DEFLATE-compressed byte size of a text column — the
     compressibility quality signal (CCNet/Gopher-class pipelines gate
     on it: near-incompressible text is binary junk or high-entropy
@@ -404,7 +401,7 @@ def compressed_size(col: Column | str, level: int = 6) -> Column:
     one Python round-trip per column batch, NOT per row; everything
     downstream (ratios, per-source aggregation, gating) stays
     JVM-side on the exact integer it returns. Sizes are computed on
-    utf-8 bytes at a pinned level so the number is reproducible run
+    utf-8 bytes at pinned level 6 so the number is reproducible run
     to run on one zlib build; treat cross-build drift like a
     tokenizer-version change (a pipeline config constant, not a
     correctness bug)."""
@@ -415,7 +412,7 @@ def compressed_size(col: Column | str, level: int = 6) -> Column:
         import zlib
 
         return s.map(
-            lambda t: len(zlib.compress(t.encode("utf-8"), level))
+            lambda t: len(zlib.compress(t.encode("utf-8"), 6))
             if t is not None
             else None
         ).astype("Int64")
@@ -430,13 +427,10 @@ def compressibility_stats(
     df: DataFrame,
     text_col: str = "text",
     group_col: str = "source",
-    level: int = 6,
-    flag_below: float = 0.4,
-    flag_above: float = 1.0,
 ) -> DataFrame:
     """Per-group compressibility census: doc counts, exact byte totals
     (raw utf-8 vs DEFLATE), the group's overall compression ratio, and
-    how many documents fall outside the [flag_below, flag_above)
+    how many documents fall outside the [0.4, 1.0)
     per-doc ratio band (too compressible = templated/repetitive; ratio
     ≥ 1 = already-compressed/random payloads masquerading as text).
     Shape: one scan, the pandas UDF runs inside the map stage, then a
@@ -446,13 +440,13 @@ def compressibility_stats(
     sized = df.select(
         F.col(group_col).alias("group"),
         F.octet_length(F.col(text_col)).cast("bigint").alias("raw_b"),
-        compressed_size(text_col, level=level).alias("z_b"),
+        compressed_size(text_col).alias("z_b"),
     ).filter(F.col("raw_b") > 0)
     per_doc_ratio = F.col("z_b") / F.col("raw_b")
     return (
         sized.withColumn(
             "flagged",
-            ((per_doc_ratio < F.lit(flag_below)) | (per_doc_ratio >= F.lit(flag_above)))
+            ((per_doc_ratio < F.lit(0.4)) | (per_doc_ratio >= F.lit(1.0)))
             .cast("int"),
         )
         .groupBy("group")

@@ -34,7 +34,6 @@ def range_join(
     start_ts: str,
     end_ts: str,
     bin_width_seconds: int = 600,
-    how: str = "inner",
 ) -> DataFrame:
     """Join each point row to every interval row (same ``key``) with
     start_ts ≤ point_ts < end_ts. Output = point columns + the
@@ -61,7 +60,7 @@ def range_join(
         & (p_bins[point_ts] < i_bins[end_ts])
     )
     return (
-        p_bins.join(i_bins, cond, how)
+        p_bins.join(i_bins, cond, "inner")
         .drop(i_bins[key])
         .drop(i_bins["__bin"])
         .drop(p_bins["__bin"])

@@ -21,6 +21,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+# Newton steps logistic_fit takes.
+_IRLS_ITERS = 8
+
 
 class LogitFit:
     """Fitted logistic model: ``beta[0]`` is the intercept, then one
@@ -45,16 +48,14 @@ def logistic_fit(
     df: DataFrame,
     label_col: str,
     feature_cols: list[str],
-    n_iter: int = 8,
-    ridge: float = 1e-8,
 ) -> LogitFit:
     """Fit P(label=1 | x) = sigmoid(β₀ + β·x) by IRLS.
 
-    Each of the ``n_iter`` passes is ONE aggregation over the input:
+    Each of the 8 passes is ONE aggregation over the input:
     sums of xᵢxⱼ·w (upper triangle of XᵀWX, intercept included as
     x₀=1) and xᵢ·(y−s) — p(p+1)/2 + (p+1) doubles total, mergeable
     map-side, so the driver receives a fixed-size vector per pass and
-    solves a (p+1)×(p+1) system. ``ridge`` adds εI to the Hessian so
+    solves a (p+1)×(p+1) system. A ridge of 1e-8·I on the Hessian lets
     separable/constant features degrade gracefully instead of raising
     LinAlgError. Input is persisted across the passes and released
     before returning. Labels must be 0/1 (cast to double); rows with
@@ -76,7 +77,7 @@ def logistic_fit(
             raise ValueError(f"logistic_fit: {n} rows < {p + 1} parameters")
         names = ["__b0"] + [f"__x{i}" for i in range(p)]
         beta = [0.0] * (p + 1)
-        for _ in range(n_iter):
+        for _ in range(_IRLS_ITERS):
             z = F.lit(beta[0])
             for i in range(p):
                 z = z + F.lit(beta[i + 1]) * F.col(f"__x{i}")
@@ -95,11 +96,11 @@ def logistic_fit(
                 for j in range(i, p + 1):
                     h[i, j] = h[j, i] = row[f"h_{i}_{j}"]
             g = np.asarray([row[f"g_{i}"] for i in range(p + 1)])
-            h += ridge * np.eye(p + 1)
+            h += 1e-8 * np.eye(p + 1)
             beta = (np.asarray(beta) + np.linalg.solve(h, g)).tolist()
     finally:
         data.unpersist()
-    return LogitFit(beta, list(feature_cols), int(n), n_iter)
+    return LogitFit(beta, list(feature_cols), int(n), _IRLS_ITERS)
 
 
 def logistic_score(

@@ -48,13 +48,12 @@ def cosine_topk(
     k: int = 10,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    round_digits: int | None = 9,
 ) -> DataFrame:
     """Exact top-k neighbors per query vector (brute force).
 
     Output: query_id, neighbor_id, sim, rank (row_number over
     (sim desc, neighbor_id) — fully deterministic under ties).
-    ``round_digits`` rounds sim before ranking so rankings are stable
+    sim is rounded to 9 digits before ranking so rankings are stable
     across engines whose float accumulation order differs (the oracle)."""
     from pyspark.sql import Window
 
@@ -64,9 +63,7 @@ def cosine_topk(
     c = corpus.select(
         F.col(id_col).alias("neighbor_id"), as_double_array(vec_col).alias("cv")
     )
-    sim: Column = cosine_similarity(F.col("qv"), F.col("cv"))
-    if round_digits is not None:
-        sim = F.round(sim, round_digits)
+    sim = F.round(cosine_similarity(F.col("qv"), F.col("cv")), 9)
     scored = (
         c.crossJoin(F.broadcast(q))
         .filter(F.col("query_id") != F.col("neighbor_id"))
@@ -88,7 +85,6 @@ def hard_negative_topk(
     label_col: str = "label",
     max_sim: float | None = None,
     n_salt: int = 32,
-    round_digits: int | None = 9,
 ) -> DataFrame:
     """Contrastive hard-negative mining: for each anchor, the ``k``
     most similar vectors carrying a DIFFERENT label. ``max_sim`` is the
@@ -99,7 +95,7 @@ def hard_negative_topk(
 
     Output: anchor_id, neg_id, sim, rank (row_number over
     (sim desc, neg_id) — deterministic under ties; sims rounded to
-    ``round_digits`` before ranking so engines with different float
+    9 digits before ranking so engines with different float
     accumulation order agree, same contract as cosine_topk).
 
     Scale shape: the anchor batch is bounded and broadcast; the corpus
@@ -123,9 +119,7 @@ def hard_negative_topk(
         as_double_array(vec_col).alias("cv"),
         F.col(label_col).alias("neg_label"),
     )
-    sim: Column = cosine_similarity(F.col("qv"), F.col("cv"))
-    if round_digits is not None:
-        sim = F.round(sim, round_digits)
+    sim = F.round(cosine_similarity(F.col("qv"), F.col("cv")), 9)
     scored = (
         c.crossJoin(F.broadcast(a))
         .filter(F.col("anchor_label") != F.col("neg_label"))
@@ -152,7 +146,6 @@ def embedding_neardup_pairs(
     threshold: float = 0.95,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    round_digits: int | None = 6,
 ) -> DataFrame:
     """Exact all-pairs cosine ≥ threshold (embedding-space near-dup).
 
@@ -160,9 +153,7 @@ def embedding_neardup_pairs(
     verify only collisions (same pattern as MinHash→Jaccard in operators.dedup)."""
     a = corpus.select(F.col(id_col).alias("id_a"), as_double_array(vec_col).alias("va"))
     b = corpus.select(F.col(id_col).alias("id_b"), as_double_array(vec_col).alias("vb"))
-    sim: Column = cosine_similarity(F.col("va"), F.col("vb"))
-    if round_digits is not None:
-        sim = F.round(sim, round_digits)
+    sim = F.round(cosine_similarity(F.col("va"), F.col("vb")), 6)
     return (
         a.crossJoin(b)
         .filter(F.col("id_a") < F.col("id_b"))
@@ -233,7 +224,6 @@ def embedding_neardup_lsh(
     vec_col: str = "embedding",
     n_tables: int = 16,
     n_bits: int = 8,
-    round_digits: int | None = 6,
 ) -> DataFrame:
     """Embedding near-dup pairs via SRP-LSH bucketing — the scale path
     that replaces ``embedding_neardup_pairs``'s quadratic crossJoin.
@@ -272,9 +262,7 @@ def embedding_neardup_lsh(
     )
     va = corpus.select(F.col(id_col).alias("id_a"), as_double_array(vec_col).alias("va"))
     vb = corpus.select(F.col(id_col).alias("id_b"), as_double_array(vec_col).alias("vb"))
-    sim: Column = cosine_similarity(F.col("va"), F.col("vb"))
-    if round_digits is not None:
-        sim = F.round(sim, round_digits)
+    sim = F.round(cosine_similarity(F.col("va"), F.col("vb")), 6)
     return (
         candidates.join(va, "id_a")
         .join(vb, "id_b")
@@ -292,13 +280,11 @@ def train_centroids(
     corpus: DataFrame,
     vec_col: str = "embedding",
     n_cells: int = 16,
-    sample_size: int = 10_000,
-    iters: int = 10,
     id_col: str = "vec_id",
 ) -> list[list[float]]:
     """Coarse quantizer: Lloyd's k-means on a driver-side sample.
 
-    Deterministic: the sample is the first ``sample_size`` rows in
+    Deterministic: 10 iterations on the first 10,000 rows in
     ``id_col`` order (a real orderBy — a bare limit() is
     partition-order dependent and would make centroids vary across
     runs) and init is the first k of those — no RNG. At 100 TB the
@@ -306,12 +292,12 @@ def train_centroids(
     expensive part, assignment, stays distributed in ivf_topk."""
     import numpy as np
 
-    rows = corpus.select(id_col, vec_col).orderBy(id_col).limit(sample_size).collect()
+    rows = corpus.select(id_col, vec_col).orderBy(id_col).limit(10_000).collect()
     x = np.asarray([r[1] for r in rows], dtype=np.float64)
     # cosine k-means: operate on unit vectors
     x = x / np.maximum(np.linalg.norm(x, axis=1, keepdims=True), 1e-12)
     cents = x[:n_cells].copy()
-    for _ in range(iters):
+    for _ in range(10):
         assign = np.argmax(x @ cents.T, axis=1)
         for c in range(n_cells):
             members = x[assign == c]
@@ -347,16 +333,13 @@ def ivf_topk(
     vec_col: str = "embedding",
     n_cells: int = 16,
     n_probe: int = 4,
-    centroids: list[list[float]] | None = None,
 ) -> DataFrame:
     """IVF ANN: assign corpus rows to their nearest centroid cell, probe
     the query's n_probe nearest cells, exact cosine re-rank of the
     candidates. Output schema matches cosine_topk."""
     from pyspark.sql import Window
 
-    cents = centroids if centroids is not None else train_centroids(
-        corpus, vec_col, n_cells, id_col=id_col
-    )
+    cents = train_centroids(corpus, vec_col, n_cells, id_col=id_col)
     sims = _centroid_sims(vec_col, cents)
     # corpus: top-1 cell (array_max on (sim, cell) structs orders by sim)
     c_assigned = corpus.select(
@@ -391,7 +374,6 @@ def group_centroids(
     df: DataFrame,
     group_col: str,
     vec_col: str = "embedding",
-    round_digits: int = 6,
 ) -> DataFrame:
     """Mean-pooled centroid per group — the embedding aggregation
     behind cluster labeling, per-source drift monitoring, and IVF-style
@@ -403,7 +385,7 @@ def group_centroids(
     sorting by position. At 100 TB the corpus is touched once, map-only,
     and everything after the first shuffle is negligible.
 
-    Averages are float64 and rounded (default 6 digits): a float sum's
+    Averages are float64 and rounded to 6 digits: a float sum's
     accumulation order varies with partitioning, and 1e-15 noise must
     not break reproducibility (same contract as char_entropy)."""
     exploded = df.select(
@@ -411,7 +393,7 @@ def group_centroids(
         F.posexplode(as_double_array(vec_col)).alias("pos", "val"),
     )
     per_pos = exploded.groupBy("grp", "pos").agg(
-        F.round(F.avg("val"), round_digits).alias("c"),
+        F.round(F.avg("val"), 6).alias("c"),
         F.count(F.lit(1)).cast("bigint").alias("n"),
     )
     return (
@@ -692,12 +674,11 @@ def knn_graph(
 def standardize_embeddings(
     df: DataFrame,
     vec_col: str = "embedding",
-    eps: float = 1e-12,
 ) -> DataFrame:
     """Per-DIMENSION z-score standardization of an embedding column —
     the feature-scaling pass run before distance-based ops (k-means,
     quantized dedup, IVF) when dimensions carry different scales:
-    output[i] = (x[i] − μᵢ) / max(σᵢ, eps), population σ.
+    output[i] = (x[i] − μᵢ) / max(σᵢ, 1e-12), population σ.
 
     Plan (100 TB shape): ONE aggregation pass computes all per-dim
     moment sums — ``posexplode`` of the vector feeds a groupBy(dim)
@@ -708,7 +689,7 @@ def standardize_embeddings(
     no join back, no second shuffle, no per-row Python. Driver state
     is bounded by dimension count exactly like kmeans' k×dim
     centroids. Constant-dimension input is standardized to 0 (the
-    eps floor), never NaN/Inf. Degenerate/ragged vectors are the
+    1e-12 floor), never NaN/Inf. Degenerate/ragged vectors are the
     caller's contract (embeddings tables are fixed-width by
     construction; wrong-width rows would silently misalign any
     per-dim math, here as elsewhere)."""
@@ -733,7 +714,7 @@ def standardize_embeddings(
         mu = r.s / r.n
         var = max(0.0, r.ss / r.n - mu * mu)
         means.append(mu)
-        stds.append(max(var**0.5, eps))
+        stds.append(max(var**0.5, 1e-12))
     mean_arr = F.array(*[F.lit(m) for m in means])
     std_arr = F.array(*[F.lit(s) for s in stds])
     out = F.expr(

@@ -90,14 +90,19 @@ def countmin_estimate(
 # ---------------------------------------------------------------------------
 
 
-def _bloom_positions(key: Column, m_bits: int, k_hashes: int) -> list[Column]:
-    """The k bit positions of a key: pmod(xxhash64(key, seed=i), m).
+# Hash functions per key; bloom_build and bloom_gate agree on it because
+# both address bits through _bloom_positions.
+_BLOOM_K = 5
+
+
+def _bloom_positions(key: Column, m_bits: int) -> list[Column]:
+    """The k = 5 bit positions of a key: pmod(xxhash64(key, seed=i), m).
     xxhash64 is a JVM codegen built-in; seeding by a literal second
     argument gives k independent members of the family (same trick as
     MinHash permutations, operators/dedup.py)."""
     return [
         F.pmod(F.xxhash64(key.cast("string"), F.lit(i)), F.lit(m_bits))
-        for i in range(k_hashes)
+        for i in range(_BLOOM_K)
     ]
 
 
@@ -105,7 +110,6 @@ def bloom_build(
     df: DataFrame,
     key_col: str,
     m_bits: int = 1 << 20,
-    k_hashes: int = 5,
 ) -> DataFrame:
     """Build a Bloom filter over ``key_col`` as a BITMAP TABLE of at
     most m/64 rows ``(word bigint, bits bigint)`` — the distributed
@@ -116,8 +120,8 @@ def bloom_build(
     property that makes the sketch a one-pass, bounded-state gate at
     100 TB. Absent words mean all-zero bits.
 
-    Sizing: false-positive rate ≈ (1 − e^{−kn/m})^k; with the
-    defaults (m=2^20, k=5) a 100k-key history sits under 1%. Scale m
+    Sizing: false-positive rate ≈ (1 − e^{−kn/m})^k; with k=5 and
+    the default m=2^20 a 100k-key history sits under 1%. Scale m
     with history size (m ≈ 10n bits keeps FP < 1% at k=5); the bitmap
     stays broadcast-able far beyond billion-key histories (2^33 bits
     = 1 GiB worst case, 128 MiB at n=10^9).
@@ -132,7 +136,7 @@ def bloom_build(
     dedup persists it between runs and merges it batch-over-batch
     (write the words to parquet, bit_or with the next batch's)."""
     pos = F.explode(
-        F.array(*_bloom_positions(F.col(key_col), m_bits, k_hashes))
+        F.array(*_bloom_positions(F.col(key_col), m_bits))
     ).alias("h")
     return (
         df.select(pos)
@@ -156,7 +160,6 @@ def bloom_gate(
     df: DataFrame,
     key_col: str,
     m_bits: int = 1 << 20,
-    k_hashes: int = 5,
 ) -> DataFrame:
     """Probe the Bloom bitmap for every distinct key of ``df``:
     returns ``(key_col, maybe_seen boolean)``. A key is maybe_seen
@@ -165,12 +168,12 @@ def bloom_gate(
     bitmap (never a shuffle of the history itself — that is the whole
     point of gating through the sketch instead of anti-joining the
     full fingerprint index), then a groupBy(key) bool_and. Must use
-    the same (m_bits, k_hashes) as bloom_build or membership answers
-    are garbage."""
+    the same m_bits as bloom_build or membership answers are
+    garbage."""
     key = F.col(key_col)
     probes = df.select(
         key,
-        F.explode(F.array(*_bloom_positions(key, m_bits, k_hashes))).alias("h"),
+        F.explode(F.array(*_bloom_positions(key, m_bits))).alias("h"),
     ).select(
         key_col,
         F.floor(F.col("h") / 64).cast("bigint").alias("word"),

@@ -19,20 +19,23 @@ from pyspark.sql import functions as F
 # stopword-hit-ratio over tokens, no UDF — is identical.
 EN_STOPWORDS: tuple[str, ...] = ("the", "a", "of", "and", "to", "in", "is")
 
+# Minimum stopword-hit ratio for lang_id and lang_id_multi to name a language.
+_LANG_THRESHOLD = 0.03
 
-def tokens(col: Column | str, sep: str = " ") -> Column:
+
+def tokens(col: Column | str) -> Column:
     """Whitespace tokenization (documents are single-space separated)."""
     c = F.col(col) if isinstance(col, str) else col
-    return F.split(c, sep)
+    return F.split(c, " ")
 
 
 def token_count(col: Column | str) -> Column:
     return F.size(tokens(col)).cast("bigint")
 
 
-def stopword_count(col: Column | str, stopwords: tuple[str, ...] = EN_STOPWORDS) -> Column:
-    """# tokens that are function words — a filter() higher-order fn, no UDF."""
-    return F.size(F.filter(tokens(col), lambda t: t.isin(*stopwords))).cast("bigint")
+def stopword_count(col: Column | str) -> Column:
+    """# tokens that are English function words — a filter() higher-order fn, no UDF."""
+    return F.size(F.filter(tokens(col), lambda t: t.isin(*EN_STOPWORDS))).cast("bigint")
 
 
 def unique_token_count(col: Column | str) -> Column:
@@ -157,13 +160,13 @@ def winnow_fingerprints(df: DataFrame, id_col: str = "doc_id",
     )
 
 
-def lang_id(col: Column | str, threshold: float = 0.03) -> Column:
-    """N-gram-free language heuristic: stopword-hit ratio ≥ threshold → 'en'.
+def lang_id(col: Column | str) -> Column:
+    """N-gram-free language heuristic: stopword-hit ratio ≥ 0.03 → 'en'.
 
     A real multi-language classifier is the same plan shape with a
     per-language stopword map (explode + broadcast join + argmax)."""
     ratio = stopword_count(col) / token_count(col)
-    return F.when(ratio >= threshold, F.lit("en")).otherwise(F.lit("other"))
+    return F.when(ratio >= _LANG_THRESHOLD, F.lit("en")).otherwise(F.lit("other"))
 
 
 # Tiny per-language function-word sets for the multi-language variant.
@@ -176,22 +179,17 @@ LANG_STOPWORDS: dict[str, tuple[str, ...]] = {
 }
 
 
-def lang_id_multi(
-    col: Column | str,
-    lang_stopwords: dict[str, tuple[str, ...]] | None = None,
-    threshold: float = 0.03,
-) -> Column:
+def lang_id_multi(col: Column | str) -> Column:
     """Multi-language ID: per-language stopword-hit ratio, argmax with a
     deterministic tie-break (higher ratio wins; equal ratios pick the
     lexicographically FIRST language code), 'other' when the best ratio
-    is under ``threshold``.
+    is under 0.03.
 
     For a handful of languages the ratios are pure codegen expressions
     over one tokenization (literal IN-lists — each filter() pass is
     JVM-side); at dozens of languages the same logic becomes explode +
     broadcast-join against a (lang, word) table + groupBy argmax, the
     shape the single-language docstring describes."""
-    langs = lang_stopwords or LANG_STOPWORDS
     toks = tokens(col)
     n = F.size(toks).cast("bigint")
     scored = [
@@ -202,10 +200,10 @@ def lang_id_multi(
             F.lit(-i).alias("key"),
             F.lit(code).alias("lang"),
         )
-        for i, (code, words) in enumerate(sorted(langs.items()))
+        for i, (code, words) in enumerate(sorted(LANG_STOPWORDS.items()))
     ]
     best = F.array_max(F.array(*scored))
-    return F.when(best.getField("ratio") >= threshold, best.getField("lang")).otherwise(
+    return F.when(best.getField("ratio") >= _LANG_THRESHOLD, best.getField("lang")).otherwise(
         F.lit("other")
     )
 

@@ -9,8 +9,8 @@ nightly compaction touches exactly the partitions the day's ingestion
 fragmented.
 
 Heuristic: a partition needs compaction when it holds more than
-``max_files`` data files or its mean file size is below
-``min_mean_bytes``. The rewrite coalesces to ⌈bytes/target⌉ files.
+``max_files`` data files or its mean file size is below 8 MiB. The
+rewrite coalesces to ⌈bytes/target⌉ files.
 
 Scope note: compaction is per LEAF partition — it never merges rows
 across partition values. In a nested ``ingest_batch=N/sales_month=M``
@@ -67,12 +67,11 @@ def partition_file_stats(spark: SparkSession, root: str) -> list[PartitionStats]
 def fragmented_partitions(
     stats: list[PartitionStats],
     max_files: int = 8,
-    min_mean_bytes: int = 8 * 1024 * 1024,
 ) -> list[PartitionStats]:
     return [
         s
         for s in stats
-        if s.n_files > max_files or (s.n_files > 1 and s.mean_bytes < min_mean_bytes)
+        if s.n_files > max_files or (s.n_files > 1 and s.mean_bytes < 8 * 1024 * 1024)
     ]
 
 
@@ -81,7 +80,6 @@ def compact_partitions(
     root: str,
     partition_cols: list[str],
     max_files: int = 8,
-    min_mean_bytes: int = 8 * 1024 * 1024,
     target_file_bytes: int = 128 * 1024 * 1024,
 ) -> list[str]:
     """Rewrite fragmented partitions of a partitioned parquet table to
@@ -97,9 +95,7 @@ def compact_partitions(
     partitions, a straggler for big ones), so rows get a deterministic
     content-hash salt in [0, k) with per-partition k = ⌈bytes/target⌉,
     and the shuffle keys on (partition cols, salt)."""
-    frag = fragmented_partitions(
-        partition_file_stats(spark, root), max_files, min_mean_bytes
-    )
+    frag = fragmented_partitions(partition_file_stats(spark, root), max_files)
     if not frag:
         return []
     # partition dir "a=1/b=2" -> tuple of values aligned with partition_cols

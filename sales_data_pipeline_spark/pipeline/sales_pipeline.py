@@ -202,9 +202,11 @@ def run_pipeline(
         result.n_fact_rows = result.ingest_metrics["n_rows"]
         log.info("ingested %d fact rows; metrics=%s", result.n_fact_rows, result.ingest_metrics)
         result.sales_team_mart_path = f"{cfg.output_dir}/sales_team_data_mart"
-        team_mart.write.mode("overwrite").partitionBy(
-            "sales_month", "store_id"
-        ).format("parquet").save(result.sales_team_mart_path)
+        team_mart.write.mode("overwrite").option(
+            "partitionOverwriteMode", "dynamic"
+        ).partitionBy("sales_month", "store_id").format("parquet").save(
+            result.sales_team_mart_path
+        )
     finally:
         enriched.unpersist()
     log.info(

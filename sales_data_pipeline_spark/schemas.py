@@ -79,13 +79,3 @@ SALES_TEAM_DIM = StructType(
         StructField("joining_date", DateType(), True),
     ]
 )
-
-PRODUCT_DIM = StructType(
-    [
-        StructField("id", IntegerType(), False),
-        StructField("name", StringType(), True),
-        StructField("current_price", DecimalType(10, 2), True),
-        StructField("old_price", DecimalType(10, 2), True),
-        StructField("expiry_date", DateType(), True),
-    ]
-)

@@ -43,9 +43,6 @@ _BASE_CONF: dict[str, str] = {
     # Dims in this workload are small; keep broadcast generous. AQE will
     # demote if a runtime size estimate disagrees.
     "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
-    # Partitioned-overwrite only replaces touched partitions (idempotent
-    # re-runs of the mart writer don't clobber unrelated months).
-    "spark.sql.sources.partitionOverwriteMode": "dynamic",
     # Scan parallelism: 128 MiB splits is the right default for parquet
     # at scale; harmless locally.
     "spark.sql.files.maxPartitionBytes": str(128 * 1024 * 1024),

@@ -1,8 +1,1 @@
-"""Source connectors: contract CSV, parquet, partitioned JDBC."""
-
-from sales_data_pipeline_spark.sources.csv import (  # noqa: F401
-    csv_header,
-    group_files_by_header,
-    read_csv_with_contract,
-)
-from sales_data_pipeline_spark.sources.jdbc import read_jdbc  # noqa: F401
+"""Source connectors: contract CSV and partitioned JDBC."""

@@ -76,14 +76,14 @@ def write_jdbc(
     table: str,
     mode: str = "overwrite",
     properties: dict[str, str] | None = None,
-    batch_size: int = 10_000,
 ) -> None:
-    """JDBC sink; default overwrite (idempotent re-runs), batched inserts."""
+    """JDBC sink; default overwrite (idempotent re-runs), inserts batched
+    10,000 rows at a time."""
     writer = (
         df.write.format("jdbc")
         .option("url", url)
         .option("dbtable", table)
-        .option("batchsize", str(batch_size))
+        .option("batchsize", "10000")
         .mode(mode)
     )
     for k, v in (properties or {}).items():
@@ -124,7 +124,6 @@ def write_jdbc_atomic(
     url: str,
     table: str,
     properties: dict[str, str] | None = None,
-    batch_size: int = 10_000,
 ) -> None:
     """Publish ``df`` to ``table`` WITHOUT a reader-visible gap.
 
@@ -169,8 +168,7 @@ def write_jdbc_atomic(
         stmt.close()
     finally:
         conn.close()
-    write_jdbc(df, url, staging, mode="overwrite",
-               properties=properties, batch_size=batch_size)
+    write_jdbc(df, url, staging, mode="overwrite", properties=properties)
     conn = _jdbc_connection(spark, url, properties)
     try:
         stmt = conn.createStatement()

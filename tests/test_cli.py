@@ -9,7 +9,14 @@ import json
 import pytest
 
 from sales_data_pipeline_spark.__main__ import main
-from tests.fixtures import write_sales_csv
+from tests.fixtures import dim_frames, write_sales_csv
+
+
+def _dims_dir(spark, tmp_path) -> str:
+    """The seed dimension frames as the parquet dims dir the CLI reads."""
+    for df, t in zip(dim_frames(spark), ("customer", "store", "sales_team")):
+        df.write.parquet(str(tmp_path / "dims" / t))
+    return str(tmp_path / "dims")
 
 
 def test_cli_pipeline_end_to_end(spark, tmp_path, capsys):
@@ -19,12 +26,20 @@ def test_cli_pipeline_end_to_end(spark, tmp_path, capsys):
         "pipeline",
         "--input-dir", str(tmp_path / "in"),
         "--output-dir", str(tmp_path / "out"),
+        "--dims-dir", _dims_dir(spark, tmp_path),
     ])
     assert rc == 0
     out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert out["accepted"] == ["sales1.csv"]
     assert out["n_fact_rows"] == 100
     assert spark.read.parquet(out["customer_mart"]).count() > 0
+
+
+def test_cli_pipeline_without_a_dims_source_is_a_usage_error(tmp_path):
+    with pytest.raises(SystemExit) as ex:
+        main(["pipeline", "--input-dir", str(tmp_path / "in"),
+              "--output-dir", str(tmp_path / "out")])
+    assert ex.value.code == 2
 
 
 def test_cli_list_and_query(capsys):
@@ -63,7 +78,6 @@ def test_cli_pipeline_jdbc_topology(spark, tmp_path, capsys):
     """--jdbc-url routes dims from and marts back to the database (live
     embedded Derby)."""
     from sales_data_pipeline_spark.sources.jdbc import read_jdbc, write_jdbc
-    from tests.fixtures import dim_frames
 
     url = f"jdbc:derby:{tmp_path / 'clidb'};create=true"
     props = {"driver": "org.apache.derby.jdbc.EmbeddedDriver"}
@@ -164,6 +178,7 @@ def test_cli_replay_requeues_fixed_file(spark, tmp_path, capsys):
         "pipeline",
         "--input-dir", str(tmp_path / "in"),
         "--output-dir", str(tmp_path / "out"),
+        "--dims-dir", _dims_dir(spark, tmp_path),
     ])
     assert rc == 0
     capsys.readouterr()

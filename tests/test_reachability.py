@@ -1,10 +1,12 @@
 """Every package module is reached by static imports from a product surface:
 the catalog entry, the CLI, the pipeline API, perfbench, bench.py or tools.
-Every top-level function and class is referenced by name from reachable code."""
+Every top-level function, class and UPPER_CASE constant is referenced by name
+from reachable code, and every defaulted parameter is set by some caller."""
 
 from __future__ import annotations
 
 import ast
+import re
 from pathlib import Path
 
 ROOT = Path(__file__).resolve().parent.parent
@@ -60,6 +62,9 @@ KEPT = {
     "release_caches": "documented API that frees the dedup persists",
     "load_tables": "documented API that registers the catalog's tables",
     "configure_pipeline_logging": "documented API for the pipeline's log format",
+    "CUSTOMER_DIM": "dimension contract the seed dims and perfbench's generated dims follow",
+    "STORE_DIM": "dimension contract the seed dims and perfbench's generated dims follow",
+    "SALES_TEAM_DIM": "dimension contract the seed dims and perfbench's generated dims follow",
 }
 
 
@@ -73,16 +78,32 @@ def _names(node: ast.AST):
             yield n.name
 
 
+def _is_query(node: ast.AST) -> bool:
+    return any(isinstance(d, ast.Call) and getattr(d.func, "id", "") == "query"
+               for d in getattr(node, "decorator_list", []))
+
+
+def _defined(node: ast.stmt) -> str | None:
+    """The name a top-level def, class or UPPER_CASE constant binds."""
+    if isinstance(node, (ast.FunctionDef, ast.ClassDef)):
+        return node.name
+    targets = node.targets if isinstance(node, ast.Assign) else (
+        [node.target] if isinstance(node, ast.AnnAssign) else [])
+    if len(targets) == 1 and re.fullmatch(r"_?[A-Z][A-Z0-9_]*", getattr(targets[0], "id", "")):
+        return targets[0].id
+    return None
+
+
 def test_every_package_function_is_reached_from_a_product_surface():
     defs, roots = {}, [ast.parse((ROOT / s).read_text()) for s in SURFACES]
     for path in (ROOT / PKG).rglob("*.py"):
+        reexports = path.name == "__init__.py" and path.relative_to(ROOT).as_posix() not in SURFACES
         for node in ast.parse(path.read_text()).body:
-            if not isinstance(node, (ast.FunctionDef, ast.ClassDef)) or any(
-                    isinstance(d, ast.Call) and getattr(d.func, "id", "") == "query"
-                    for d in node.decorator_list):
+            name = _defined(node)
+            if name and not _is_query(node):
+                defs.setdefault(name, []).append((path, node))
+            elif not (reexports and isinstance(node, ast.ImportFrom)):
                 roots.append(node)
-            else:
-                defs.setdefault(node.name, []).append((path, node))
     seen, todo = set(), roots + [n for k in KEPT for _, n in defs.get(k, [])]
     while todo:
         for name in set(_names(todo.pop())) - seen:
@@ -91,3 +112,66 @@ def test_every_package_function_is_reached_from_a_product_surface():
     unreached = sorted(f"{p.relative_to(ROOT)}::{k}" for k, v in defs.items()
                        if k not in seen | set(KEPT) for p, _ in v)
     assert not unreached, "unreached:\n" + "\n".join(unreached)
+
+
+COLUMN_PARAMS = {"col", "src", "dst", "corpus_id", "bench_id"}
+
+# Defaulted parameters that no product caller sets, kept on purpose; some are
+# set only by tests.
+KEPT_PARAMS = {
+    "ngram_jaccard_pairs(persist)": "opt-out of the dedup persist for callers that reuse the pairs once",
+    "ngram_jaccard_pairs(max_candidates)": "the candidate budget guard; None lifts it",
+    "minhash_lsh_pairs(persist)": "opt-out of the dedup persist for callers that reuse the pairs once",
+    "fuzzy_contamination_pairs(persist)": "opt-out of the dedup persist for callers that reuse the pairs once",
+    "pagerank(checkpoint_dir)": "reliable checkpoints for long lineage on a cluster",
+    "bfs_hops(checkpoint_dir)": "reliable checkpoints for long lineage on a cluster",
+    "label_propagation(checkpoint_dir)": "reliable checkpoints for long lineage on a cluster",
+    "k_core(checkpoint_dir)": "reliable checkpoints for long lineage on a cluster",
+    "pagerank(damping)": "SKEW.json's pagerank6 row stamps a hash of this body; edit it when re-measuring",
+    "k_core(max_iter)": "SKEW.json's kcore2 row stamps a hash of this body; edit it when re-measuring",
+    "configure_pipeline_logging(level)": "documented API for the pipeline's log level",
+    "configure_pipeline_logging(fmt)": "documented API for the pipeline's log format",
+    "full_name(alias)": "the output column's name, which the marts and perfbench's checks read",
+}
+
+
+def _calls(paths) -> dict[str, list[ast.Call]]:
+    out: dict[str, list[ast.Call]] = {}
+    for path in paths:
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.Call):
+                name = getattr(node.func, "id", getattr(node.func, "attr", None))
+                out.setdefault(name, []).append(node)
+    return out
+
+
+def _sets(call: ast.Call, index: int | None, param: str) -> bool:
+    return (any(k.arg in (param, None) for k in call.keywords)
+            or any(isinstance(a, ast.Starred) for a in call.args)
+            or (index is not None and len(call.args) > index))
+
+
+def _defaulted(fn: ast.FunctionDef):
+    """(positional index or None, name) of each parameter with a default."""
+    a = fn.args
+    pos = a.posonlyargs + a.args
+    yield from ((i, p.arg) for i, p in enumerate(pos) if i >= len(pos) - len(a.defaults))
+    yield from ((None, p.arg) for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None)
+
+
+def test_every_defaulted_parameter_is_set_by_some_caller():
+    """A default no call overrides is a value nobody chose: make it a constant."""
+    pkg = list((ROOT / PKG).rglob("*.py"))
+    calls = _calls({*pkg, *(ROOT / s for s in SURFACES), *(ROOT / "tests").glob("*.py")})
+    unset = []
+    for path in pkg:
+        for fn in ast.parse(path.read_text()).body:
+            if not isinstance(fn, ast.FunctionDef) or _is_query(fn):
+                continue
+            for index, param in _defaulted(fn):
+                if (param.endswith(("_col", "_cols")) or param in COLUMN_PARAMS
+                        or f"{fn.name}({param})" in KEPT_PARAMS):
+                    continue
+                if not any(_sets(c, index, param) for c in calls.get(fn.name, [])):
+                    unset.append(f"{path.relative_to(ROOT)}::{fn.name}({param})")
+    assert not unset, "set by no caller:\n" + "\n".join(sorted(unset))

@@ -145,6 +145,26 @@ def test_rerun_is_idempotent(spark, cfg):
     assert total1 == total2
 
 
+def test_team_mart_keeps_earlier_months_on_a_static_overwrite_session(spark, cfg):
+    """The team-mart writer asks for dynamic partition overwrite itself,
+    so a session whose default is static (a plain SparkSession.builder)
+    does not lose the months an earlier run published."""
+    key = "spark.sql.sources.partitionOverwriteMode"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "static")
+    try:
+        customer, store, team = dim_frames(spark)
+        write_sales_csv(_in(cfg) / "march.csv", n=100, seed=21, date=dt.date(2023, 3, 10))
+        run_pipeline(spark, cfg, customer, store, team)
+        write_sales_csv(_in(cfg) / "april.csv", n=100, seed=22, date=dt.date(2023, 4, 10))
+        res = run_pipeline(spark, cfg, customer, store, team)
+    finally:
+        spark.conf.set(key, before)
+    team_mart = spark.read.parquet(res.sales_team_mart_path)
+    assert {r[0] for r in team_mart.select("sales_month").distinct().collect()} == {
+        "2023-03", "2023-04"}
+
+
 def test_failed_run_probe(spark, cfg):
     """Files marked 'A' but never flipped (crashed run) surface on the
     next run — reference main.py:56-73 semantics."""
