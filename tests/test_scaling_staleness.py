@@ -90,7 +90,9 @@ def test_artifact_fingerprints_match_current_plans(spark):
 
 def test_merge_preserves_fingerprints_of_untouched_entries():
     """Subset re-measure must not strip plan_fp from entries outside
-    the subset (pure-merge contract)."""
+    the subset (pure-merge contract), and must not relabel them: the
+    fresh entry records the core count it was timed on, the untouched
+    one keeps whatever it had."""
     from scaling import _merge_artifact
 
     prev = {
@@ -102,11 +104,14 @@ def test_merge_preserves_fingerprints_of_untouched_entries():
     queries, _errors = _merge_artifact(
         prev, ["qNew"], "sf1", "sf10",
         {"qNew": 1.0}, {"qNew": 2.0}, {"qNew": 5}, {"qNew": 50}, {}, {},
+        "4",
     )
     assert queries["qOld"]["plan_fp"] == "aaa"
     # the fresh entry gets its fp stamped by the measure() caller, not
     # the pure merge — absent here by design
     assert "plan_fp" not in queries["qNew"]
+    assert queries["qNew"]["cpus"] == "4"
+    assert "cpus" not in queries["qOld"]
 
 
 def test_skew_merge_preserves_fingerprints_of_untouched_entries():
@@ -115,6 +120,7 @@ def test_skew_merge_preserves_fingerprints_of_untouched_entries():
     from skew import _merge_subset
 
     prev = {
+        "protocol": {"cpus": "32"},
         "boilerplate": {
             "queries": {"qOld": {"ratio": 1.0, "plan_fp": "aaa"}},
             "errors_boil": {},
@@ -124,8 +130,9 @@ def test_skew_merge_preserves_fingerprints_of_untouched_entries():
         },
     }
     fresh = {
+        "protocol": {"cpus": "4"},
         "boilerplate": {
-            "queries": {"qNew": {"ratio": 1.5, "plan_fp": "ccc"}},
+            "queries": {"qNew": {"ratio": 1.5, "plan_fp": "ccc", "cpus": "4"}},
             "errors_boil": {},
         },
         "zipf": {"queries": {}},
@@ -134,6 +141,23 @@ def test_skew_merge_preserves_fingerprints_of_untouched_entries():
     assert merged["boilerplate"]["queries"]["qOld"]["plan_fp"] == "aaa"
     assert merged["boilerplate"]["queries"]["qNew"]["plan_fp"] == "ccc"
     assert merged["zipf"]["queries"]["qZ"]["plan_fp"] == "bbb"
+    # the protocol block keeps describing the untouched rows; the fresh
+    # row carries its own core count
+    assert merged["protocol"] == {"cpus": "32"}
+    assert merged["boilerplate"]["queries"]["qNew"]["cpus"] == "4"
+    assert "cpus" not in merged["boilerplate"]["queries"]["qOld"]
+
+
+def test_skew_ratio_rows_record_their_cpus():
+    """Every freshly measured SKEW row names the core count it was
+    timed on, so a subset merge under an older protocol block cannot
+    mislabel it."""
+    from skew import _ratios
+
+    rows = _ratios({"qA": 2.0}, {"qA": 3.0}, "4")
+    assert rows["qA"] == {
+        "uniform_sec": 2.0, "skewed_sec": 3.0, "ratio": 1.5, "cpus": "4",
+    }
 
 
 @pytest.mark.parametrize("fname", ARTIFACTS)
@@ -165,8 +189,9 @@ def test_skew_graph_consumer_rows_fingerprinted_or_marked():
     over campaign-temporary parquet (no registered query, no plan_fp
     recipe), and the triangles row deliberately times a body that does
     not ship (guard disabled). Every row must now carry a body_fp (a
-    source hash of the operator it timed, recomputed here — drift
-    means the curve describes deleted code) and, when it measures an
+    hash of the code of the operator it timed, docstrings and comments
+    excluded, recomputed here — drift means the curve describes
+    deleted code) and, when it measures an
     unguarded body, an explicit unguarded_probe marker so the artifact
     itself distinguishes diagnostic probes from current-plan rows."""
     from skew import CONSUMER_BODIES, UNGUARDED_PROBES, _body_fp
@@ -200,6 +225,83 @@ def test_skew_graph_consumer_rows_fingerprinted_or_marked():
     # the diagnostic unguarded probe it supersedes
     assert "triangle_estimate" in sect["ops"], sect["ops"].keys()
     assert not problems, problems
+
+
+def test_body_fp_ignores_docstrings_and_comments(tmp_path, monkeypatch):
+    """The body stamp answers 'is the measured body still the code
+    that ships?': rewording a docstring or a comment must leave it
+    alone (the cc and triangle_estimate rows were flagged for exactly
+    such edits), and any change to what runs must move it."""
+    import importlib.util
+
+    import skew
+    from sales_data_pipeline_spark.operators import graph
+
+    variants = {
+        "base": '''
+def probe(edges, k=2):
+    """Doc."""
+    out = edges.filter(edges.deg >= k)  # keep the core
+    return out
+''',
+        "prose": '''
+def probe(edges, k=2):
+    """Doc, reworded, with an input contract paragraph.
+
+    More prose."""
+    # a new comment block
+    out = edges.filter(edges.deg >= k)  # keep the k-core
+    return out
+''',
+        "code": '''
+def probe(edges, k=2):
+    """Doc."""
+    out = edges.filter(edges.deg > k)  # keep the core
+    return out
+''',
+    }
+    monkeypatch.setitem(skew.CONSUMER_BODIES, "probe_op", "fp_probe")
+    fps = {}
+    for key, src in variants.items():
+        path = tmp_path / f"fp_probe_{key}.py"
+        path.write_text(src)
+        spec = importlib.util.spec_from_file_location(f"fp_probe_{key}", path)
+        mod = importlib.util.module_from_spec(spec)
+        spec.loader.exec_module(mod)
+        monkeypatch.setattr(graph, "fp_probe", mod.probe, raising=False)
+        fps[key] = skew._body_fp("probe_op")
+    assert fps["base"] == fps["prose"]
+    assert fps["base"] != fps["code"]
+
+
+def test_plan_fingerprint_ignores_the_sessions_core_count(spark, monkeypatch):
+    """operators/scale.spread_scan round-robins a thin scan to the
+    session's defaultParallelism, so the same program analyzed under
+    local[4] and local[32] differs only in that count. The fingerprint
+    must ignore it (it is session state, not program) and still see a
+    real program change."""
+    from types import SimpleNamespace
+
+    from pyspark.sql import functions as F
+
+    from sales_data_pipeline_spark.plans import QUERIES
+    from scaling import _plan_fingerprint
+
+    def probe(n, filtered=False):
+        def fn(spark, sf_dir):
+            src = spark.read.parquet(os.path.join(sf_dir, "orders.parquet"))
+            df = src.repartition(n)
+            return df.filter(F.col("o_orderkey") > 0) if filtered else df
+        return SimpleNamespace(fn=fn)
+
+    fps = {}
+    for key, entry in {
+        "p4": probe(4), "p32": probe(32), "p32f": probe(32, filtered=True),
+    }.items():
+        monkeypatch.setitem(QUERIES, "q_fp_probe", entry)
+        fps[key] = _plan_fingerprint(spark, "q_fp_probe")
+    assert fps["p4"] == fps["p32"]
+    assert fps["p32"] != fps["p32f"]
 
 
 def test_fingerprint_is_deterministic_within_a_session(spark):

@@ -414,9 +414,10 @@ def _graph_probes(spark) -> dict:
             # staleness stamp (r11 — VERDICT r10 task 3): probe rows
             # measure OPERATOR bodies, not registered queries, and the
             # probe's parquet edges are deleted after the campaign, so
-            # the plan_fp recipe can't re-derive them. A source hash of
-            # the measured body has exactly the right semantics: it
-            # changes iff the body someone edits changes.
+            # the plan_fp recipe can't re-derive them. A hash of the
+            # measured body's code (docstrings and comments excluded)
+            # has exactly the right semantics: it changes iff the code
+            # that runs changes.
             "body_fp": _body_fp(op),
         }
         if op in UNGUARDED_PROBES:
@@ -460,20 +461,37 @@ UNGUARDED_PROBES = frozenset({"triangles"})
 
 
 def _body_fp(op: str) -> str:
-    """Source hash of the operator body a graph-consumer probe times.
+    """Code hash of the operator body a graph-consumer probe times.
     Probe rows can't carry the catalog plan_fp (they measure operators
     over campaign-temporary parquet, not registered queries), but the
     staleness question is the same — 'is the measured body still the
-    code that ships?' — and a hash of the function's source answers it
-    directly: tests/test_scaling_staleness.py recomputes these and
-    flags any SKEW graph_consumers row whose body drifted."""
+    code that ships?' — so the hash covers the CODE only: the parsed
+    ``def`` with every docstring removed, re-rendered by
+    ``ast.unparse`` (comments never reach the AST). A docstring or
+    comment edit leaves the stamp alone; any edit to what runs changes
+    it. tests/test_scaling_staleness.py recomputes these and flags any
+    SKEW graph_consumers row whose body drifted. The rendering is
+    ``ast.unparse``'s, so a stamp is comparable only under the same
+    Python minor version."""
+    import ast
     import hashlib
     import inspect
+    import textwrap
 
     from sales_data_pipeline_spark.operators import graph as _graph_mod
 
     src = inspect.getsource(getattr(_graph_mod, CONSUMER_BODIES[op]))
-    return hashlib.md5(src.encode()).hexdigest()[:12]
+    tree = ast.parse(textwrap.dedent(src))
+    for node in ast.walk(tree):
+        if (
+            isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))
+            and node.body
+            and isinstance(node.body[0], ast.Expr)
+            and isinstance(node.body[0].value, ast.Constant)
+            and isinstance(node.body[0].value.value, str)
+        ):
+            node.body = node.body[1:] or [ast.Pass()]
+    return hashlib.md5(ast.unparse(tree).encode()).hexdigest()[:12]
 
 
 def _triangle_counts(edges):
@@ -649,7 +667,7 @@ def _hot_key_report(spark) -> dict:
     }
 
 
-def _ratios(small: dict, big: dict) -> dict:
+def _ratios(small: dict, big: dict, cpus: str) -> dict:
     out = {}
     for name, t_adv in big.items():
         base = small.get(name)
@@ -657,6 +675,8 @@ def _ratios(small: dict, big: dict) -> dict:
             "uniform_sec": base,
             "skewed_sec": t_adv,
             "ratio": round(t_adv / base, 2) if base else None,
+            # per row: a subset run keeps the previous protocol block
+            "cpus": cpus,
         }
     return out
 
@@ -681,6 +701,7 @@ def measure() -> None:
     generate()
     spark = _spark()
     spark.range(1_000_000).selectExpr("sum(id)").collect()  # JVM warm
+    cpus = str(spark.sparkContext.defaultParallelism)
 
     # --- boilerplate regime ---------------------------------------
     scaling.QUERY_NAMES = BOIL_QUERIES
@@ -692,7 +713,7 @@ def measure() -> None:
         _boil_probes(spark) if not subset else ({}, {})
     )
     boil = {
-        "queries": _ratios(t_u, t_b),
+        "queries": _ratios(t_u, t_b, cpus),
         "rows_uniform": rows_u,
         "rows_boil": rows_b,
         "errors_uniform": err_u,
@@ -711,7 +732,7 @@ def measure() -> None:
     print("== zipf: timing sf1zipf ==", file=sys.stderr)
     t_z, rows_z, err_z = scaling._time_queries(spark, ZIPF_DIR)
     zipf = {
-        "queries": _ratios(t_u2, t_z),
+        "queries": _ratios(t_u2, t_z, cpus),
         "rows_uniform": rows_u2,
         "rows_zipf": rows_z,
         "errors_uniform": err_u2,
@@ -731,7 +752,7 @@ def measure() -> None:
     out = {
         "protocol": {
             "iters": ITERS,
-            "cpus": os.environ.get("SPARK_GRAFT_CPUS", "32"),
+            "cpus": cpus,
             "uniform": scaling.SF1_DIR,
             "boil": BOIL_DIR,
             "zipf": ZIPF_DIR,
@@ -770,7 +791,10 @@ def _merge_subset(
     merge violating): a name measured THIS run refreshes ALL its
     per-query records and a freshly-FAILED name drops its stale ratio
     entry while keeping the fresh error (per side); names not in the
-    subset — and the probe/experiment sections — stay untouched."""
+    subset — and the probe/experiment sections and the protocol block,
+    which describe them — stay untouched. A fresh row carries the
+    ``cpus`` it was timed on (``_ratios``), since the kept protocol
+    block may name another host."""
     for section, measured in (
         ("boilerplate", boil_names),
         ("zipf", zipf_names),
