@@ -48,10 +48,23 @@ def sales_team_mart(enriched: DataFrame) -> DataFrame:
         month_bucket("sales_date", "sales_month"),
         money("total_cost").alias("_cost"),
     )
-    totals = base.groupBy(
-        "store_id", "sales_person_id", "full_name", "sales_month"
-    ).agg(F.sum("_cost").cast(_MONEY_OUT).alias("total_sales"))
-    rank_w = Window.partitionBy("store_id", "sales_month").orderBy(
+    # One exchange on (sales_month, store_id), the team mart's partition
+    # directories, serves the rank window, its sort and the writer's
+    # partitionBy: the window clusters on the same keys in the same
+    # order, so the writer's required ordering (sales_month, store_id)
+    # is a prefix of the window's sort and needs no Sort of its own.
+    # The explicit count keeps AQE from coalescing the write into one
+    # task; each (month, store) still lands in one task, so one file.
+    totals = (
+        base.groupBy("store_id", "sales_person_id", "full_name", "sales_month")
+        .agg(F.sum("_cost").cast(_MONEY_OUT).alias("total_sales"))
+        .repartition(
+            enriched.sparkSession.sparkContext.defaultParallelism,
+            "sales_month",
+            "store_id",
+        )
+    )
+    rank_w = Window.partitionBy("sales_month", "store_id").orderBy(
         F.col("total_sales").desc()
     )
     # decimal×decimal keeps the 1% exact: total_sales(10,2) × 0.01(3,2)

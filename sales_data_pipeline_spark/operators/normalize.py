@@ -83,12 +83,29 @@ def read_validated_union(
 
     One scan relation per distinct header (not per file), normalized to
     the union shape, then unionByName — no empty-DF seed needed
-    (reference seeds an empty frame, main.py:246)."""
+    (reference seeds an empty frame, main.py:246).
+
+    Spark sizes each header group's scan to a full wave of the session's
+    cores on its own, so k groups of small files would run k waves of
+    tiny tasks in every stage that reads the fact. The union is packed
+    back to one wave: ``defaultParallelism`` partitions, or one per
+    ``spark.sql.files.maxPartitionBytes`` of input when the drop is
+    larger, the count Spark gives a single scan of that many bytes. The
+    byte count is what each scan's file index already holds from its
+    listing; no file is touched again."""
     mandatory = tuple(f.name for f in contract.fields)
-    parts = [
-        normalize(read_csv_with_contract(spark, files, header, contract), mandatory)
+    scans = [
+        read_csv_with_contract(spark, files, header, contract)
         for header, files in sorted(report.valid.items())
     ]
-    if not parts:
+    if not scans:
         raise ValueError("no valid input files to read")
-    return reduce(lambda a, b: a.unionByName(b), parts)
+    size = sum(
+        s._jdf.queryExecution().analyzed().relation().location().sizeInBytes()
+        for s in scans
+    )
+    split = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+    n = max(spark.sparkContext.defaultParallelism, -(-size // split))
+    return reduce(
+        lambda a, b: a.unionByName(b), (normalize(s, mandatory) for s in scans)
+    ).coalesce(n)

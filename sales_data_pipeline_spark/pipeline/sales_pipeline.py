@@ -17,6 +17,14 @@ Deliberate physical upgrades over the reference (SURVEY §4 anti-patterns):
   job runs;
 - accepted files are read once, grouped by header, with the explicit
   contract schema (no inferSchema double pass, main.py:145-147+249-252);
+- every stage runs in one wave of the session's cores: the union of the
+  header-group scans is packed to ``defaultParallelism`` partitions
+  (more only when the drop holds more ``maxPartitionBytes`` splits),
+  where each group's scan alone would fill a wave of tiny tasks; the
+  team mart is repartitioned once by its partition directories
+  (sales_month, store_id) and its rank window and writer share that
+  exchange, so every core writes partition files, one file per
+  directory, and the writer adds no sort;
 - no local-disk staging hop: inputs are read where they land
   (local/s3a/hdfs alike via the Hadoop FS API).
 
@@ -30,6 +38,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
+from py4j.java_gateway import JavaClass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -109,11 +118,20 @@ def sales_enrichment(
 
 def _observed(df: DataFrame, name: str) -> dict:
     """Metrics of the ``observe(name, ...)`` node in ``df``'s plan, read
-    off the cached plan once an action has filled ``df``'s cache. (An
-    Observation reads them off the action's own plan, and AQE drops the
-    cache scan from that plan when the cached frame is empty: every row
-    lost to the joins, or only header-only files.)"""
-    row = df._jdf.queryExecution().observedMetrics().get(name).get()
+    off the plan that filled ``df``'s cache, once an action has run it.
+    Asking ``df``'s own query instead would plan that query again only
+    to find the same cached plan inside it. (An Observation reads them
+    off the action's own plan, and AQE drops the cache scan from that
+    plan when the cached frame is empty: every row lost to the joins,
+    or only header-only files.)"""
+    spark = df.sparkSession
+    cached = spark._jsparkSession.sharedState().cacheManager().lookupCachedData(df._jdf)
+    plan = cached.get().cachedRepresentation().cachedPlan()
+    # the companion object, named whole: the class's own collect() is
+    # TreeNode.collect, and a package walk costs one round trip per name
+    metrics = JavaClass("org.apache.spark.sql.execution.CollectMetricsExec$",
+                        spark._jvm._gateway_client)
+    row = getattr(metrics, "MODULE$").collect(plan).get(name).get()
     return {f: row.get(i) for i, f in enumerate(row.schema().fieldNames())}
 
 

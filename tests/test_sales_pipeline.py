@@ -887,3 +887,133 @@ def test_n_fact_rows_counts_fact_rows_before_the_dimension_joins(spark, cfg):
     assert [p.rsplit("/", 1)[-1] for p in res.accepted_files] == ["header_only.csv"]
     assert res.n_fact_rows == 0
     assert res.ingest_metrics == {"n_rows": 0, "n_null_cost": None, "sum_cost": None}
+
+
+def _final_mart_plan(plan: str) -> list[str]:
+    """The node names of an AQE write plan's final plan, top down, down
+    to the cached frame it reads (the cached frame's own plan is left
+    out)."""
+    import re
+
+    nodes = []
+    for line in plan.split("+- == Final Plan ==", 1)[1].splitlines()[1:]:
+        name = re.sub(r"^[\s:+\-*]*", "", line).split(" (")[0]
+        nodes.append(name)
+        if name in ("TableCacheQueryStage", "InMemoryTableScan"):
+            return nodes
+    raise AssertionError(f"no cached-frame scan in plan:\n{plan}")
+
+
+def test_team_mart_is_written_by_every_core_from_one_exchange(spark, cfg, monkeypatch):
+    """The rank window and the writer share one exchange on
+    (sales_month, store_id): the write's plan holds the aggregate's
+    exchange and that one, no Sort between the Window and the write,
+    and the write runs in more than one task, still one file per
+    (month, store) directory."""
+    import os
+
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    for i in range(4):
+        write_sales_csv(_in(cfg) / f"s{i}.csv", n=200, seed=90 + i)
+    sc = spark.sparkContext
+    real_save = DataFrameWriter.save
+
+    def save(writer, path=None, *args, **kwargs):
+        if path.endswith("sales_team_data_mart"):
+            sc.setJobGroup("team-mart-write", "team mart write")
+        try:
+            return real_save(writer, path, *args, **kwargs)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+
+    monkeypatch.setattr(DataFrameWriter, "save", save)
+    res = run_pipeline(spark, cfg, *dim_frames(spark))
+
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    last_job = max(tracker.getJobIdsForGroup("team-mart-write"))
+    write_stage = max(tracker.getJobInfo(last_job).stageIds)
+    assert tracker.getStageInfo(write_stage).numTasks > 1
+
+    executions = spark._jsparkSession.sharedState().statusStore().executionsList()
+    (plan,) = [
+        e.physicalPlanDescription()
+        for e in (executions.apply(i) for i in range(executions.size()))
+        if e.jobs().contains(last_job)
+    ]
+    nodes = _final_mart_plan(plan)
+    assert "Execute InsertIntoHadoopFsRelationCommand" in nodes, nodes
+    assert nodes.count("Exchange") == 2, nodes
+    assert "Sort" not in nodes[nodes.index("WriteFiles"):nodes.index("Window")], nodes
+
+    partition_dirs = 0
+    for root, _, files in os.walk(res.sales_team_mart_path):
+        if "store_id=" in root:
+            partition_dirs += 1
+            assert len([f for f in files if f.startswith("part-")]) == 1, root
+    mart = spark.read.parquet(res.sales_team_mart_path)
+    assert partition_dirs == mart.select("sales_month", "store_id").distinct().count() > 1
+
+
+def _rotate_columns(path):
+    """Rewrite a CSV with its columns in another order: the same rows
+    under another header."""
+    import csv
+
+    with open(path, newline="") as f:
+        rows = list(csv.reader(f))
+    with open(path, "w", newline="") as f:
+        csv.writer(f).writerows(r[1:] + r[:1] for r in rows)
+
+
+def _fact_union(spark, cfg):
+    from sales_data_pipeline_spark.operators.normalize import (
+        read_validated_union,
+        validate_headers,
+    )
+    from sales_data_pipeline_spark.pipeline import fs
+    from sales_data_pipeline_spark.schemas import MANDATORY_COLUMNS, SALES_CONTRACT
+
+    report = validate_headers(spark, fs.list_files(spark, cfg.input_dir), MANDATORY_COLUMNS)
+    assert len(report.valid) == 3 and not report.quarantined
+    return read_validated_union(spark, report, SALES_CONTRACT)
+
+
+def _three_header_groups(cfg, files_per_group, rows):
+    """``files_per_group`` files in each of three header groups."""
+    for i in range(files_per_group):
+        write_sales_csv(_in(cfg) / f"a{i}.csv", n=rows, seed=100 + i)
+        write_sales_csv(_in(cfg) / f"b{i}.csv", n=rows, seed=200 + i, extra_payment_mode=True)
+        _rotate_columns(write_sales_csv(_in(cfg) / f"c{i}.csv", n=rows, seed=300 + i))
+    return 3 * files_per_group * rows
+
+
+def test_fact_union_of_many_small_files_runs_in_one_wave(spark, cfg):
+    """Each header group's scan alone is sized to a full wave of the
+    session's cores; the union of a small drop is packed back to one."""
+    n_rows = _three_header_groups(cfg, files_per_group=8, rows=20)
+    fact = _fact_union(spark, cfg)
+    assert fact.rdd.getNumPartitions() <= spark.sparkContext.defaultParallelism
+    assert fact.count() == n_rows
+
+
+def test_fact_union_of_a_large_drop_keeps_one_partition_per_split(spark, cfg):
+    """A drop larger than cores × spark.sql.files.maxPartitionBytes keeps
+    at least one partition per split's worth of input."""
+    import math
+    import os
+
+    bound = 4096
+    n_rows = _three_header_groups(cfg, files_per_group=2, rows=300)
+    size = sum(os.path.getsize(p) for p in _in(cfg).iterdir())
+    assert size > spark.sparkContext.defaultParallelism * bound
+    key = "spark.sql.files.maxPartitionBytes"
+    before = spark.conf.get(key)
+    spark.conf.set(key, str(bound))
+    try:
+        fact = _fact_union(spark, cfg)
+        assert fact.rdd.getNumPartitions() >= math.ceil(size / bound)
+        assert fact.count() == n_rows
+    finally:
+        spark.conf.set(key, before)
