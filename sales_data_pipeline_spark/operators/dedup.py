@@ -433,24 +433,28 @@ def _signatures_from_sets(sets: DataFrame, num_perm: int) -> DataFrame:
     """Signatures from precomputed (doc, sh) sets — lets callers that
     also need the sets elsewhere (LSH verify) share one materialization.
 
-    The per-permutation seed is injected through a CLOSURE FACTORY, not
-    a defaulted second lambda parameter: PySpark's transform() binds a
-    two-parameter lambda as (element, array_index), so the old
-    ``lambda s, i=i`` form silently seeded every permutation with the
-    element's POSITION — all num_perm components collapsed to one
-    hash function, degrading banded LSH to a single-band exact-match
-    (recall cliff on shifted-but-overlapping sets; caught by the
-    bipartite fuzzy-contamination tests in r3)."""
-    sh = F.col("__sh")
-
-    def _perm(seed: int):
-        return lambda s: F.xxhash64(s, F.lit(seed))
-
-    mins = [
-        F.array_min(F.transform(sh, _perm(i))).alias(f"h{i}")
-        for i in range(num_perm)
-    ]
-    return sets.withColumnRenamed("sh", "__sh").select("doc", *mins)
+    The whole forest is ONE ``selectExpr``: component i is the SQL text
+    ``array_min(transform(sh, x -> xxhash64(x, i)))`` with the seed i
+    written into the lambda body as a literal. Built through the Column
+    API, every node of the forest was its own Py4J round trip, about
+    half of q23's plan-build time. It also rules out the bug class of
+    r3: a Column-API
+    ``transform`` binds a two-parameter lambda as (element,
+    array_index), so the old ``lambda s, i=i`` form silently seeded
+    every permutation with the element's POSITION — all num_perm
+    components collapsed to one hash function, degrading banded LSH to
+    a single-band exact-match (caught by the bipartite
+    fuzzy-contamination tests). A one-parameter SQL lambda over a
+    literal seed has no second binding and no Python closure to get
+    wrong. Same Catalyst expressions and INT literal as the Column
+    form, so the signatures are bit-identical."""
+    return sets.selectExpr(
+        "doc",
+        *[
+            f"array_min(transform(sh, x -> xxhash64(x, {i}))) AS h{i}"
+            for i in range(num_perm)
+        ],
+    )
 
 
 def minhash_lsh_pairs(
@@ -487,12 +491,12 @@ def minhash_lsh_pairs(
     if persist:
         sets = _persist(sets)
     sig = _signatures_from_sets(sets, _NUM_PERM)
-    band_arr = F.array(
-        *[
-            F.xxhash64(*[F.col(f"h{b * rows + r}") for r in range(rows)], F.lit(b))
-            for b in range(_BANDS)
-        ]
+    # one SQL expression, not a Column forest (see _signatures_from_sets)
+    bands = (
+        ", ".join(f"h{b * rows + r}" for r in range(rows)) + f", {b}"
+        for b in range(_BANDS)
     )
+    band_arr = F.expr("array(" + ", ".join(f"xxhash64({h})" for h in bands) + ")")
     buckets = sig.select(
         F.col("doc"), F.posexplode(band_arr).alias("band", "bucket")
     )
@@ -914,13 +918,16 @@ def edit_neardup_pairs(
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
     nseg = k + 1
-    # persist the distinct-value table (r12): four consumers walk it
-    # (index side, probe side, short-string side ×2) and each would
-    # otherwise re-execute the distinct's full shuffle over the input
-    names = _persist(
-        df.select(F.col(col).alias("name")).distinct().select(
-            "name", F.length("name").alias("l")
-        )
+    # no persist of the distinct-value table: its four consumers (index
+    # side, probe side, short-string side ×2) each filter on the length,
+    # the optimizer pushes each filter below the distinct's exchange
+    # onto the scan of the one name column, and the index and probe
+    # sides share the same filter, so AQE reuses that exchange. The
+    # persist cost a materializing job of its own: without it q250 at
+    # sf0.01 runs 6 jobs and 6 tasks instead of 9 and 226, and at sf1
+    # takes 1.30 s instead of 1.93 s (SCALING.md wave 10).
+    names = df.select(F.col(col).alias("name")).distinct().select(
+        "name", F.length("name").alias("l")
     )
     long_names = names.filter(F.col("l") >= nseg)
 
@@ -952,14 +959,12 @@ def edit_neardup_pairs(
     # probe side: substrings of t that could equal segment i of an
     # indexed (shorter-or-equal) string of length l = len(t)+dl,
     # shifted by at most k
-    combos = F.array(
-        *[
-            F.struct(F.lit(dl).alias("dl"), F.lit(i).alias("i"), F.lit(sh).alias("sh"))
-            for dl in range(-k, 1)
-            for i in range(nseg)
-            for sh in range(-k, k + 1)
-        ]
-    )
+    combos = F.expr("array(" + ", ".join(
+        f"named_struct('dl', {dl}, 'i', {i}, 'sh', {sh})"
+        for dl in range(-k, 1)
+        for i in range(nseg)
+        for sh in range(-k, k + 1)
+    ) + ")")
     m = F.col("l")
 
     def _probe_hash(c):

@@ -669,6 +669,33 @@ def test_minhash_signature_components_are_independent(spark):
     assert rows[1] == rows[2]  # order-independent over the same set
 
 
+def test_signatures_equal_a_column_forest_oracle_bit_for_bit(spark, docs):
+    """The SQL-text signature forest computes exactly what the Column
+    forest (one closure per seed) computes, and every doc gets 64
+    distinct permutations: a seed bound to the element position, or one
+    seed shared by all components, would repeat values."""
+    from sales_data_pipeline_spark.operators.dedup import (
+        _NUM_PERM,
+        _SHINGLE_N,
+        _shingle_sets,
+        _signatures_from_sets,
+    )
+
+    sets = _shingle_sets(docs.limit(60), "doc_id", "text", _SHINGLE_N, spread=True)
+
+    def _perm(seed):
+        return lambda s: F.xxhash64(s, F.lit(seed))
+
+    oracle = sets.select(
+        "doc",
+        *[F.array_min(F.transform("sh", _perm(i))).alias(f"h{i}") for i in range(_NUM_PERM)],
+    )
+    got = {r.doc: tuple(r[1:]) for r in _signatures_from_sets(sets, _NUM_PERM).collect()}
+    want = {r.doc: tuple(r[1:]) for r in oracle.collect()}
+    assert got == want and len(got) == 60
+    assert all(len(set(h)) == _NUM_PERM for h in got.values() if h[0] is not None)
+
+
 # ---------------------------------------------------------------------------
 # incremental near-dup gate (q179 covering checks)
 # ---------------------------------------------------------------------------

@@ -187,6 +187,21 @@ def test_q22_shingle_sets_cached_once(spark, sf_dir):
         spark.catalog.clearCache()
 
 
+def test_q250_caches_nothing_and_reads_only_the_name_column(spark, sf_dir):
+    """q250's distinct-name table is not persisted: each consumer's
+    length filter lands below the distinct, and every scan of part
+    reads the one name column."""
+    from sales_data_pipeline_spark.operators.dedup import release_caches
+
+    try:
+        df = QUERIES["q250_name_edit_neardup"].fn(spark, sf_dir)
+        assert "InMemoryRelation" not in df._jdf.queryExecution().optimizedPlan().toString()
+        schemas = re.findall(r"part\.parquet.*?ReadSchema: (\S+)", _plan(df), re.S)
+        assert schemas and set(schemas) == {"struct<p_name:string>"}, schemas
+    finally:
+        release_caches()
+
+
 def test_q22_skew_guard_adds_no_aggregation(spark, sf_dir):
     """The max_shingle_freq skew guard must stay a FREE filter on the
     dfreq column the prefix ordering already computes — guard-on and
